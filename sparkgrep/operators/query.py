@@ -262,6 +262,51 @@ def _shift_by(i: int):
     return f
 
 
+def _near_arrow_gen(lens: list[int], n: int, keys: list[str]):
+    """``mapInArrow`` kernel of a NEAR group over its joined per-group
+    start arrays ``s0..s{k-1}`` (a group is one ``keys`` row: doc, or
+    doc and field): each Arrow batch is flattened — the row index is the
+    dense group id — and ONE positional-kernel call
+    (``positional.near_mask``, the vectorized
+    ``querylang.near_supported``) marks every supported instance. Emits
+    (member, *keys, tf, dl) for satisfied groups, tf = the member's
+    supported-instance count."""
+    import pyarrow as pa
+
+    from sparkgrep.functions.positional import near_mask
+
+    k = len(lens)
+
+    def gen(batches):
+        for b in batches:
+            rows = np.arange(b.num_rows)
+            members = []
+            for i in range(k):
+                col = b.column(f"s{i}")
+                lengths = col.value_lengths().to_numpy(zero_copy_only=False)
+                pos = col.flatten().to_numpy().astype(np.int64)
+                members.append((np.repeat(rows, lengths), pos))
+            masks = near_mask(members, lens, n)
+            tfs = [
+                np.bincount(g[m], minlength=rows.size)
+                for (g, _pos), m in zip(members, masks)
+            ]
+            sat = np.flatnonzero(tfs[0])  # every member is supported where any is
+            if not sat.size:
+                continue
+            cols = {"member": np.repeat(np.arange(k, dtype=np.int32), sat.size)}
+            for key in keys:
+                v = b.column(key).to_numpy()
+                cols[key] = np.tile(v[sat], k)
+            cols["tf"] = np.concatenate([tf[sat] for tf in tfs]).astype(np.int32)
+            cols["dl"] = np.tile(b.column("dl").to_numpy()[sat], k)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(v) for v in cols.values()], names=list(cols)
+            )
+
+    return gen
+
+
 class InvertedIndex:
     """Handle over a built index directory."""
 
@@ -1042,13 +1087,10 @@ class InvertedIndex:
         One inner join chain over the members' per-doc start arrays
         (docs missing any member can't match), then an Arrow-batched
         kernel."""
-        from sparkgrep.functions.querylang import near_supported
-
         if not self.meta.has_positions:
             raise ValueError(
                 "NEAR queries need an index built with store_positions=True"
             )
-        k = len(group.phrases)
         joined = None
         for i, u in enumerate(group.phrases):
             cols = ["doc_id"] + (["dl"] if i == 0 else [])
@@ -1056,33 +1098,10 @@ class InvertedIndex:
             joined = s if joined is None else joined.join(s, "doc_id")
         # a phrase-prefix member spans len(terms) positions (tail = 1 token)
         lens = [len(u.terms) for u in group.phrases]
-        n = group.n
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                mi, di, tfs, dls = [], [], [], []
-                for r in pdf.itertuples():
-                    sup = near_supported(
-                        [getattr(r, f"s{i}") for i in range(k)], lens, n
-                    )
-                    if sup is None:
-                        continue
-                    for i, cnt in enumerate(sup):
-                        mi.append(i)
-                        di.append(r.doc_id)
-                        tfs.append(cnt)
-                        dls.append(r.dl)
-                if di:
-                    yield pd.DataFrame(
-                        {
-                            "member": np.asarray(mi, np.int32),
-                            "doc_id": np.asarray(di, np.int64),
-                            "tf": np.asarray(tfs, np.int32),
-                            "dl": np.asarray(dls, np.int32),
-                        }
-                    )
-
-        return joined.mapInPandas(gen, "member int, doc_id long, tf int, dl int")
+        return joined.mapInArrow(
+            _near_arrow_gen(lens, group.n, ["doc_id"]),
+            "member int, doc_id long, tf int, dl int",
+        )
 
     # -- public API ---------------------------------------------------------
 
@@ -1485,13 +1504,10 @@ class InvertedIndex:
         weighted sum of its supported-instance counts over the satisfied
         colset fields. Member df (handled by the caller's override) is
         the member's colset-restricted full presence."""
-        from sparkgrep.functions.querylang import near_supported
-
         if not self.meta.has_positions:
             raise ValueError(
                 "NEAR queries need an index built with store_positions=True"
             )
-        kk = len(grp.phrases)
         joined = None
         for i, u in enumerate(grp.phrases):
             s = self._member_starts_mc(u).filter(F.col("col").isin(cols))
@@ -1499,36 +1515,9 @@ class InvertedIndex:
             s = s.select(*sel, F.col("starts").alias(f"s{i}"))
             joined = s if joined is None else joined.join(s, ["doc_id", "col"])
         lens = [len(u.terms) for u in grp.phrases]
-        n = grp.n
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                mi, di, ci, tfs, dls = [], [], [], [], []
-                for r in pdf.itertuples():
-                    sup = near_supported(
-                        [getattr(r, f"s{i}") for i in range(kk)], lens, n
-                    )
-                    if sup is None:
-                        continue
-                    for i, cnt in enumerate(sup):
-                        mi.append(i)
-                        di.append(r.doc_id)
-                        ci.append(r.col)
-                        tfs.append(cnt)
-                        dls.append(r.dl)
-                if di:
-                    yield pd.DataFrame(
-                        {
-                            "member": np.asarray(mi, np.int32),
-                            "doc_id": np.asarray(di, np.int64),
-                            "col": np.asarray(ci, np.int32),
-                            "tf": np.asarray(tfs, np.int32),
-                            "dl": np.asarray(dls, np.int32),
-                        }
-                    )
-
-        percol = joined.mapInPandas(
-            gen, "member int, doc_id long, col int, tf int, dl int"
+        percol = joined.mapInArrow(
+            _near_arrow_gen(lens, grp.n, ["doc_id", "col"]),
+            "member int, doc_id long, col int, tf int, dl int",
         )
         return self._wsum_mc(percol, w, cols, keys=("member", "doc_id"))
 

@@ -17,12 +17,27 @@ identical per-term contributions, summed in the same sorted-term
 left-associated order (``wand.seq_fold``, one strictly sequential add
 per term — NOT reduceat/np.sum, whose pairwise summation diverges from
 the Spark fold by 1 ulp), same (score desc, doc_id asc) tie-break.
+
+Resident tiers, each decoded once per term (or prefix stem):
+
+- tf tiers — per term (df, docs ascending, dls, tf matrix): one column
+  (the total-tf stream) for bag-of-words ``search``, one column per
+  field for the query language on a multi-field index;
+- the flat positional tier (phrase, NEAR and ``^``) — per term or stem,
+  :class:`Flat`: one (doc row, field, position) entry per instance,
+  sorted. Phrase starts and NEAR support come from ONE vectorized
+  kernel over these arrays (``functions/positional.py``), for every
+  document of the query at once. A single-field index is the one-field
+  case of the same code.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
+from sparkgrep.functions.positional import group_ids, near_mask, phrase_starts
 from sparkgrep.functions.querylang import (
     Conjunct,
     ParsedQuery,
@@ -50,6 +65,78 @@ _EMPTY = pd.DataFrame(
 )
 
 
+class Flat(NamedTuple):
+    """Flat positional postings — of one term, of every term matching a
+    prefix stem, or of a unit's instance starts: per-doc ``docs``
+    (ascending, distinct) and ``dls``, and one (``row``, ``field``,
+    ``pos``) entry per instance sorted by (row, field, pos), ``row``
+    indexing ``docs``. Positions are field-relative."""
+
+    docs: np.ndarray
+    dls: np.ndarray
+    row: np.ndarray
+    field: np.ndarray
+    pos: np.ndarray
+
+
+def _check_distinct(term: str, ids_sorted: np.ndarray) -> None:
+    """The folds add one value per (term, doc): a doc held by two shard
+    rows of a term (a doc_id re-appended without deleting it first)
+    would be counted twice, so it is refused loudly."""
+    dup = ids_sorted[1:][ids_sorted[1:] == ids_sorted[:-1]]
+    if dup.size:
+        raise ValueError(
+            f"term {term!r}: doc_id {int(dup[0])} is held by two postings "
+            "rows — doc_ids must be distinct across batches (delete a doc "
+            "before re-appending it)"
+        )
+
+
+def _merge_flat(parts: list[Flat], term: str | None = None) -> Flat:
+    """One :class:`Flat` over several — a term's shard rows (``term``
+    given: their docs must be distinct) or a stem's matching terms."""
+    if not parts:
+        e = np.empty(0, np.int64)
+        return Flat(e, e, e, e, e)
+    ids = np.concatenate([p.docs for p in parts])
+    docs, inv = np.unique(ids, return_inverse=True)
+    if term is not None and docs.size < ids.size:
+        _check_distinct(term, np.sort(ids))
+    dls = np.empty(docs.size, np.int64)
+    dls[inv] = np.concatenate([p.dls for p in parts])
+    off = np.cumsum([0] + [p.docs.size for p in parts[:-1]])
+    row = inv[np.concatenate([p.row + o for p, o in zip(parts, off)])]
+    field = np.concatenate([p.field for p in parts])
+    pos = np.concatenate([p.pos for p in parts])
+    order = np.lexsort((pos, field, row))
+    return Flat(docs, dls, row[order], field[order], pos[order])
+
+
+def _common_docs(recs: list[Flat]) -> np.ndarray:
+    """Docs holding an instance in every one of ``recs``."""
+    common = recs[0].docs
+    for r in recs[1:]:
+        common = np.intersect1d(common, r.docs, assume_unique=True)
+    return common
+
+
+def _wfold(docs, dls, tf_mat, w: list[float], cols: list[int]):
+    """Fixed-order weighted fold over the colset — bitwise mirror of
+    ``query._wsum_mc``: tfw = (w_c0·tf_c0) + (w_c1·tf_c1) + … in
+    ascending field order, elementwise IEEE float64; presence
+    (weight-independent) keeps a doc when ANY colset field has an
+    instance. A single-field index folds its one column with weight 1.0
+    (an exact int → float conversion)."""
+    pres = (tf_mat[:, cols] != 0).any(axis=1)
+    v = w[cols[0]] * tf_mat[:, cols[0]].astype(np.float64)
+    for c in cols[1:]:
+        v = v + w[c] * tf_mat[:, c].astype(np.float64)
+    if pres.all():
+        return docs, v, dls
+    sel = np.flatnonzero(pres)
+    return docs[sel], v[sel], dls[sel]
+
+
 class LocalServer:
     """Driver-resident serving handle over a built index.
 
@@ -68,30 +155,25 @@ class LocalServer:
         self.index = index
         self.meta = index.meta
         self.max_resident_df = max_resident_df
-        # term -> list of decoded shards [(df, doc_ids, tfs, dls)];
-        # terms with no postings cache an empty list (negative cache)
-        self._cache: dict[str, list[tuple[int, np.ndarray, np.ndarray, np.ndarray]]] = {}
-        # positional tier (phrase serving): term -> list of decoded
-        # shards [(df, doc_ids, tfs, dls, positions list-of-arrays)]
-        self._pcache: dict[str, list[tuple]] = {}
-        # prefix tier: stem -> (doc_ids, summed tfs, dls) aggregated over
-        # every index term starting with the stem
-        self._xcache: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        # prefix positional tier (NEAR): stem -> {doc: sorted union of
-        # matching terms' positions}
-        self._xpcache: dict[str, dict[int, np.ndarray]] = {}
-        # multi-field tiers: per-field tf streams (and field-relative
-        # position streams) stay separate so column filters and weights
-        # mirror the distributed _unit_tf_mc bitwise
-        # term -> [(df, ids, [tf per field], dls)]
-        self._mc_cache: dict[str, list[tuple]] = {}
-        # term -> [(ids, [tf per field], dls, [positions per field])]
-        self._mc_pcache: dict[str, list[tuple]] = {}
-        # stem -> (docs, dls, per-field tf matrix): per-doc tf sums over
-        # every term matching the stem, aggregated once per stem
-        self._mc_xarr: dict[str, tuple] = {}
-        # stem -> ({(doc, col): sorted positions}, {doc: dl})
-        self._mc_xpcache: dict[str, tuple[dict, dict]] = {}
+        # per-field layout (multi-field, detail != none): tf and position
+        # streams are stored per field; otherwise one field
+        self._mc = bool(self.meta.fields) and self.meta.effective_detail() != "none"
+        self._nf = len(self.meta.fields) if self._mc else 1
+        # tf tiers: term -> (df, docs asc, dls, tf matrix) or None (no
+        # postings — a negative cache). _cache holds the total-tf stream
+        # (one column, plain bag-of-words search); _mc_cache one column
+        # per field (the query language on a multi-field index)
+        self._cache: dict[str, tuple | None] = {}
+        self._mc_cache: dict[str, tuple | None] = {}
+        # prefix tf tier: stem -> (docs asc, dls, tf matrix) with tfs
+        # integer-summed over every index term starting with the stem
+        self._xcache: dict[str, tuple] = {}
+        # flat positional tier (phrase, NEAR, '^'): term -> Flat, built
+        # once at fetch/warm time
+        self._pcache: dict[str, Flat] = {}
+        # prefix positional tier: stem -> Flat over the union of every
+        # matching term's instances
+        self._xpcache: dict[str, Flat] = {}
 
     def _seq_col(self) -> list[str]:
         """The postings rows' layer column — present only on tombstoned
@@ -108,263 +190,191 @@ class LocalServer:
 
         return _tomb_keep(ids, int(r["layer_seq"]), spec)
 
-    def _fetch(self, terms: list[str]) -> None:
-        missing = [t for t in terms if t not in self._cache]
-        if not missing:
-            return
-        rows = (
-            self.index._matched(missing)
-            .select("term", "df", "n", "doc_ids", "tfs", "dls", *self._seq_col())
-            .collect()
-        )
-        for t in missing:
-            self._cache[t] = []
+    # -- decode ---------------------------------------------------------------
+
+    def _decode_tf_rows(self, rows, per_field: bool) -> dict[str, tuple]:
+        """term -> (df, docs asc, dls, tf matrix) of collected shard rows
+        — one tf column per field (``tfs_cols``) when ``per_field``, else
+        the total ``tfs`` stream — tombstone-masked, docs distinct."""
+        parts: dict[str, list] = {}
         for r in rows:
             ids = blocked_gap_decode(
                 r["doc_ids"], int(r["n"]), self.meta.block_size
             ).astype(np.int64)
-            tfs = varint_decode(r["tfs"]).astype(np.int64)
             dls = varint_decode(r["dls"]).astype(np.int64)
+            streams = r["tfs_cols"] if per_field else [r["tfs"]]
+            tf = np.stack(
+                [varint_decode(b).astype(np.int64) for b in streams], axis=1
+            )
             keep = self._keep(r, ids)
             if keep is not None:
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                if not ids.size:
-                    continue
-            self._cache[r["term"]].append((int(r["df"]), ids, tfs, dls))
+                ids, dls, tf = ids[keep], dls[keep], tf[keep]
+            parts.setdefault(r["term"], []).append((int(r["df"]), ids, dls, tf))
+        out = {}
+        for t, ps in parts.items():
+            ids = np.concatenate([p[1] for p in ps])
+            order = np.argsort(ids, kind="stable")
+            ids = ids[order]
+            _check_distinct(t, ids)
+            if ids.size:
+                dls = np.concatenate([p[2] for p in ps])[order]
+                tf = np.concatenate([p[3] for p in ps])[order]
+                out[t] = (ps[0][0], ids, dls, tf)
+        return out
+
+    def _decode_pos_rows(self, rows) -> dict[str, Flat]:
+        """term -> :class:`Flat` of collected shard rows (tombstone-
+        masked, docs distinct per term)."""
+        parts: dict[str, list[Flat]] = {}
+        for r in rows:
+            ids = blocked_gap_decode(
+                r["doc_ids"], int(r["n"]), self.meta.block_size
+            ).astype(np.int64)
+            dls = varint_decode(r["dls"]).astype(np.int64)
+            streams = (
+                zip(r["tfs_cols"], r["poss_cols"]) if self._mc
+                else [(r["tfs"], r["poss"])]
+            )
+            rows_c, fields_c, pos_c = [], [], []
+            for c, (tb, pb) in enumerate(streams):
+                tf = varint_decode(tb).astype(np.int64)
+                rows_c.append(np.repeat(np.arange(ids.size), tf))
+                fields_c.append(np.full(int(tf.sum()), c, np.int64))
+                pos_c.append(delta_decode_segments(pb, tf))
+            row = np.concatenate(rows_c)
+            field = np.concatenate(fields_c)
+            pos = np.concatenate(pos_c)
+            keep = self._keep(r, ids)
+            if keep is not None:
+                inst = keep[row]
+                row = (np.cumsum(keep) - 1)[row[inst]]
+                field, pos = field[inst], pos[inst]
+                ids, dls = ids[keep], dls[keep]
+            parts.setdefault(r["term"], []).append(Flat(ids, dls, row, field, pos))
+        return {t: _merge_flat(ps, term=t) for t, ps in parts.items()}
+
+    def _pos_select(self) -> list[str]:
+        """Columns the positional tiers collect (the index must store
+        positions)."""
+        if not self.meta.has_positions:
+            raise ValueError(
+                "phrase/NEAR/anchored queries need an index built with "
+                "store_positions=True"
+            )
+        streams = ["tfs_cols", "poss_cols"] if self._mc else ["tfs", "poss"]
+        return ["term", "df", "n", "doc_ids", "dls", *streams, *self._seq_col()]
+
+    # -- fetch ----------------------------------------------------------------
+
+    def _fetch_tf(self, terms: list[str], per_field: bool) -> None:
+        """tf tier for ``terms`` (one Spark job): the per-field streams
+        (``_mc_cache``, the serving analogue of
+        ``query._decode_raw_mc_gen``) or the total-tf stream
+        (``_cache``, bag-of-words ``search``)."""
+        cache = self._mc_cache if per_field else self._cache
+        missing = [t for t in terms if t not in cache]
+        if not missing:
+            return
+        streams = ["tfs_cols"] if per_field else ["tfs"]
+        rows = (
+            self.index._matched(missing)
+            .select("term", "df", "n", "doc_ids", "dls", *streams, *self._seq_col())
+            .collect()
+        )
+        got = self._decode_tf_rows(rows, per_field)
+        for t in missing:
+            cache[t] = got.get(t)
 
     def _fetch_pos(self, terms: list[str]) -> None:
-        """Fetch postings WITH positions (phrase scoring tier)."""
+        """Flat positional tier for ``terms`` (one Spark job)."""
         missing = [t for t in terms if t not in self._pcache]
         if not missing:
             return
-        if not self.meta.has_positions:
-            raise ValueError(
-                "phrase queries need an index built with store_positions=True"
-            )
-        rows = (
-            self.index._matched(missing)
-            .select(
-                "term", "df", "n", "doc_ids", "tfs", "dls", "poss",
-                *self._seq_col(),
-            )
-            .collect()
-        )
+        rows = self.index._matched(missing).select(*self._pos_select()).collect()
+        got = self._decode_pos_rows(rows)
         for t in missing:
-            self._pcache[t] = []
-        for r in rows:
-            tfs = varint_decode(r["tfs"]).astype(np.int64)
-            flat = delta_decode_segments(r["poss"], tfs)
-            positions = np.split(flat, np.cumsum(tfs)[:-1])
-            ids = blocked_gap_decode(
-                r["doc_ids"], int(r["n"]), self.meta.block_size
-            ).astype(np.int64)
-            dls = varint_decode(r["dls"]).astype(np.int64)
-            keep = self._keep(r, ids)
-            if keep is not None:
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                positions = [p for p, k in zip(positions, keep) if k]
-                if not ids.size:
-                    continue
-            self._pcache[r["term"]].append(
-                (int(r["df"]), ids, tfs, dls, positions)
-            )
+            self._pcache[t] = got.get(t) or _merge_flat([])
 
-    def _fetch_prefix(self, stem: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Aggregated (doc_ids, tf, dl) for ``stem*`` — the stem resolves
+    def _fetch_prefix(self, stem: str) -> tuple:
+        """``stem*`` tf tier: (docs ascending, dls, tf matrix — one
+        column per field on the per-field layout) with tfs integer-summed
+        over every index term starting with the stem. The stem resolves
         through the term dictionary into a bucket-pruned scan
-        (InvertedIndex._prefix_matched), decoded and tf-summed per doc
-        driver-side, cached per stem."""
+        (InvertedIndex._prefix_matched); cached per stem."""
         hit = self._xcache.get(stem)
         if hit is not None:
             return hit
+        streams = ["tfs_cols"] if self._mc else ["tfs"]
         rows = (
             self.index._prefix_matched(stem)
-            .select("term", "n", "doc_ids", "tfs", "dls", *self._seq_col())
+            .select("term", "df", "n", "doc_ids", "dls", *streams, *self._seq_col())
             .collect()
         )
-        ids_parts, tf_parts, dl_parts = [], [], []
-        for r in rows:
-            rids = blocked_gap_decode(
-                r["doc_ids"], int(r["n"]), self.meta.block_size
-            ).astype(np.int64)
-            rtfs = varint_decode(r["tfs"]).astype(np.int64)
-            rdls = varint_decode(r["dls"]).astype(np.int64)
-            keep = self._keep(r, rids)
-            if keep is not None:
-                rids, rtfs, rdls = rids[keep], rtfs[keep], rdls[keep]
-                if not rids.size:
-                    continue
-            ids_parts.append(rids)
-            tf_parts.append(rtfs)
-            dl_parts.append(rdls)
-        if not ids_parts:
-            out = (np.empty(0, np.int64),) * 3
-            self._xcache[stem] = out
-            return out
-        ids = np.concatenate(ids_parts)
-        tfs = np.concatenate(tf_parts)
-        dls = np.concatenate(dl_parts)
-        docs = np.unique(ids)
-        pos = np.searchsorted(docs, ids)
-        tf_sum = np.zeros(docs.size, dtype=np.int64)
-        np.add.at(tf_sum, pos, tfs)  # integer sum — order-free
-        dl_out = np.zeros(docs.size, dtype=np.int64)
-        dl_out[pos] = dls  # dl identical across a doc's term rows
-        out = (docs, tf_sum, dl_out)
+        recs = list(self._decode_tf_rows(rows, self._mc).values())
+        if not recs:
+            e = np.empty(0, np.int64)
+            out = (e, e, np.zeros((0, self._nf), np.int64))
+        else:
+            ids = np.concatenate([r[1] for r in recs])
+            docs = np.unique(ids)
+            pos = np.searchsorted(docs, ids)
+            tf = np.zeros((docs.size, self._nf), np.int64)
+            np.add.at(tf, pos, np.concatenate([r[3] for r in recs]))  # order-free
+            dls = np.zeros(docs.size, np.int64)
+            dls[pos] = np.concatenate([r[2] for r in recs])  # same on every term row
+            out = (docs, dls, tf)
         self._xcache[stem] = out
         return out
 
-    def _fetch_prefix_pos(self, stem: str) -> dict[int, np.ndarray]:
-        """{doc: sorted positions} over every term starting with stem
-        (NEAR with a prefix member)."""
+    def _fetch_prefix_pos(self, stem: str) -> Flat:
+        """``stem*`` positional tier: one :class:`Flat` over every term
+        starting with the stem (NEAR members, '^', starred phrases)."""
         hit = self._xpcache.get(stem)
         if hit is not None:
             return hit
-        if not self.meta.has_positions:
-            raise ValueError(
-                "NEAR queries need an index built with store_positions=True"
-            )
-        rows = (
-            self.index._prefix_matched(stem)
-            .select("term", "n", "doc_ids", "tfs", "poss", *self._seq_col())
-            .collect()
-        )
-        acc: dict[int, list[np.ndarray]] = {}
-        for r in rows:
-            tfs = varint_decode(r["tfs"]).astype(np.int64)
-            ids = blocked_gap_decode(
-                r["doc_ids"], int(r["n"]), self.meta.block_size
-            ).astype(np.int64)
-            flat = delta_decode_segments(r["poss"], tfs)
-            positions = np.split(flat, np.cumsum(tfs)[:-1])
-            keep = self._keep(r, ids)
-            for j, d in enumerate(ids):
-                if keep is not None and not keep[j]:
-                    continue
-                acc.setdefault(int(d), []).append(positions[j])
-        out = {d: np.sort(np.concatenate(ps)) for d, ps in acc.items()}
+        rows = self.index._prefix_matched(stem).select(*self._pos_select()).collect()
+        out = _merge_flat(list(self._decode_pos_rows(rows).values()))
         self._xpcache[stem] = out
-        return out
-
-    def _local_unit_starts(self, unit) -> dict[int, np.ndarray]:
-        """{doc: instance start positions, ascending} for a NEAR member."""
-        if star_slots(unit):
-            if unit.is_phrase:
-                return {d: st for d, (st, _dl) in self._pp_eval(unit).items()}
-            return self._fetch_prefix_pos(unit.terms[0])
-        maps = []
-        for t in unit.terms:
-            m: dict[int, np.ndarray] = {}
-            for _, ids, _tfs, _dls, positions in self._pcache.get(t, []):
-                for j, d in enumerate(ids):
-                    m[int(d)] = positions[j]
-            maps.append(m)
-        if len(maps) == 1:
-            return maps[0]
-        common = set(maps[0])
-        for m in maps[1:]:
-            common &= set(m)
-        out: dict[int, np.ndarray] = {}
-        for d in common:
-            starts = maps[0][d]
-            for i in range(1, len(unit.terms)):
-                starts = np.intersect1d(starts, maps[i][d] - i)
-                if starts.size == 0:
-                    break
-            if starts.size:
-                out[d] = starts
         return out
 
     def warm(self, queries: list[str]) -> "LocalServer":
         """Prefetch postings for a query workload (one Spark job per
-        tier): bag-of-words terms and, for queries using the boolean/
-        phrase language, positional postings for phrase terms. On a
-        multi-field index the expr/weighted paths read the per-field
-        tiers, so those are warmed instead (plain unweighted ``search``
-        additionally warms the total-tf tier it reads)."""
+        tier): bag-of-words terms, and for the query language the tiers
+        ``search_expr`` reads — tf streams for bare terms, prefix tiers
+        for stems, positions for phrase/anchored units and NEAR members.
+        On a multi-field index the bare terms' per-field tier is warmed
+        (plain unweighted ``search`` additionally reads the total-tf
+        tier)."""
         meta = self.meta
-        if meta.fields and meta.effective_detail() != "none":
-            return self._warm_mc(queries)
         terms: set[str] = set()
         pterms: set[str] = set()
         for q in queries:
             # plain search() is bag-of-words: tokens the query-language
             # parser would consume as operators (OR/NOT/...) still score
             # there — warm them too so neither entry point misses
-            terms.update(tokenize_py(q, self.meta.analyzer))
-            pq = parse_query(q, self.meta.analyzer)
-            for u in pq.units():
-                if star_slots(u):
-                    if u.is_phrase:  # starred phrase: plain positions + stem pos
-                        pterms.update(plain_terms(u))
-                        for s in stem_terms(u):
-                            self._fetch_prefix_pos(s)
-                        continue
-                    self._fetch_prefix(u.terms[0])
-                    if u.anchored:
-                        self._fetch_prefix_pos(u.terms[0])
-                elif u.anchored:
-                    pterms.update(u.terms)  # anchored units need positions
-                else:
-                    (pterms if u.is_phrase else terms).update(u.terms)
-            for grp in pq.near_groups():  # NEAR members need positions
-                for u in grp.phrases:
-                    if star_slots(u):
-                        pterms.update(plain_terms(u))
-                        for s in stem_terms(u):
-                            self._fetch_prefix_pos(s)
-                    else:
-                        pterms.update(u.terms)
-        self._fetch(sorted(terms))
-        if pterms:
-            self._fetch_pos(sorted(pterms))
-        return self
-
-    def _warm_mc(self, queries: list[str]) -> "LocalServer":
-        """Multi-field warm: prefetch the per-field tiers
-        ``_search_expr_mc`` reads (and, on an index with no persisted
-        rank config, the total-tf tier that plain unweighted ``search``
-        reads). Colspec syntax parses because fields are passed."""
-        meta = self.meta
-        terms: set[str] = set()
-        pterms: set[str] = set()
-        for q in queries:
-            # bag-of-words union (see warm): plain search() scores
-            # operator tokens as terms — on a rank-configured index it
-            # reads the per-field tier, else the total-tf tier below
             terms.update(tokenize_py(q, meta.analyzer))
             pq = parse_query(q, meta.analyzer, fields=meta.fields or None)
-            near_members = [u for g in pq.near_groups() for u in g.phrases]
-            for u in pq.units():
-                if star_slots(u):
-                    if u.is_phrase:
-                        pterms.update(plain_terms(u))
-                        for s in stem_terms(u):
-                            self._fetch_prefix_pos_mc(s)
-                        continue
-                    if u.anchored:
-                        # anchored prefix serves from the positional
-                        # tier alone — the tf-tier scan would be waste
-                        self._fetch_prefix_pos_mc(u.terms[0])
+            members = [u for g in pq.near_groups() for u in g.phrases]
+            for u, positional in [
+                (u, u.is_phrase or u.anchored) for u in pq.units()
+            ] + [(u, True) for u in members]:
+                if star_slots(u) and not u.is_phrase:
+                    if positional:
+                        self._fetch_prefix_pos(u.terms[0])
                     else:
-                        self._fetch_prefix_mc(u.terms[0])
-                elif u.is_phrase or u.anchored:
-                    pterms.update(u.terms)
-                else:
-                    terms.add(u.terms[0])
-            for u in near_members:
-                if star_slots(u):
+                        self._fetch_prefix(u.terms[0])
+                elif positional:
                     pterms.update(plain_terms(u))
                     for s in stem_terms(u):
-                        self._fetch_prefix_pos_mc(s)
+                        self._fetch_prefix_pos(s)
                 else:
-                    pterms.update(u.terms)
-        self._fetch_mc(sorted(terms))
+                    terms.add(u.terms[0])
+        if self._mc:
+            self._fetch_tf(sorted(terms), per_field=True)
+        if not self._mc or not meta.rank_weights:
+            self._fetch_tf(sorted(terms), per_field=False)
         if pterms:
-            self._fetch_mc(sorted(pterms), positions=True)
-        if not meta.rank_weights and terms:
-            # plain unweighted search() scores the total-tf streams
-            self._fetch(sorted(terms))
+            self._fetch_pos(sorted(pterms))
         return self
 
     def _over_residency_cap(self, terms: list[str], stems: list[str] = ()) -> bool:
@@ -395,24 +405,24 @@ class LocalServer:
             # persisted rank configuration (set_rank): mirror the
             # distributed OR mode's DNF exactly (query.py search():
             # one single-unit disjunct per term — identical match-any
-            # semantics) through the RESIDENT multi-field weighted fold,
-            # so a rank-configured index serves plain queries at the
-            # same ms latency as everything else. Bitwise-equal to
-            # ``InvertedIndex.search`` by the _search_expr_mc ≡
-            # _search_parsed equivalence pinned in tests; queries over
-            # the residency cap still delegate inside _search_expr_mc.
+            # semantics) through the RESIDENT weighted fold, so a
+            # rank-configured index serves plain queries at the same ms
+            # latency as everything else. Bitwise-equal to
+            # ``InvertedIndex.search`` by the _search_parsed ≡
+            # InvertedIndex._search_parsed equivalence pinned in tests;
+            # queries over the residency cap still delegate inside it.
             terms = sorted(set(tokenize_py(query_text, meta.analyzer)))
             if not terms:
                 return _EMPTY.copy()
             pq = ParsedQuery(tuple(Conjunct((Unit((t,)),)) for t in terms))
-            return self._search_expr_mc(pq, k, list(meta.rank_weights))
+            return self._search_parsed(pq, k, list(meta.rank_weights))
         terms = sorted(set(tokenize_py(query_text, meta.analyzer)))
         empty = _EMPTY.copy()
         if not terms:
             return empty
         if self._over_residency_cap(terms):
             return self.index.search(query_text, k).toPandas()
-        self._fetch(terms)
+        self._fetch_tf(terms, per_field=False)
         k1, b, avgdl, n_docs = meta.k1, meta.b, meta.avgdl, meta.n_docs
         # LAYERED index: a shard row's stored df is layer-local — use the
         # summed global dfs from the layered term_ubs sidecars instead
@@ -423,20 +433,21 @@ class LocalServer:
         )
         ids_parts, tix_parts, contrib_parts = [], [], []
         for ti, t in enumerate(terms):
-            shards = self._cache[t]
-            if not shards:
+            rec = self._cache[t]
+            if rec is None:
                 continue
+            df, ids, dls, tf = rec
             # single layer: df in the payload is the GLOBAL document
             # frequency (same on every shard row) — no aggregation needed
-            df_g = layered_dfs.get(t, 0) if layered_dfs is not None else shards[0][0]
+            df_g = layered_dfs.get(t, 0) if layered_dfs is not None else df
             idf = idf_fn(n_docs, df_g, meta.idf_variant)
-            for _, ids, tfs, dls in shards:
-                contrib = idf * (tfs * (k1 + 1.0)) / (
-                    tfs + (k1 * ((1.0 - b) + ((b * dls) / avgdl)))
-                )
-                ids_parts.append(ids)
-                tix_parts.append(np.full(len(ids), ti, dtype=np.int32))
-                contrib_parts.append(contrib)
+            tfs = tf[:, 0]
+            contrib = idf * (tfs * (k1 + 1.0)) / (
+                tfs + (k1 * ((1.0 - b) + ((b * dls) / avgdl)))
+            )
+            ids_parts.append(ids)
+            tix_parts.append(np.full(len(ids), ti, dtype=np.int32))
+            contrib_parts.append(contrib)
         if not ids_parts:
             return empty
         from sparkgrep.operators.wand import seq_fold
@@ -460,154 +471,89 @@ class LocalServer:
 
     # -- boolean / phrase query language ------------------------------------
 
-    def _unit_postings(self, unit) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(doc_ids, tf, dl) for one query unit from the resident caches —
-        term units straight off the postings, phrase units via
-        slot-shifted position intersection (the numpy mirror of
-        ``InvertedIndex._phrase_tf``), prefix units via the stem-scan
-        cache (tf summed over matching terms per doc), anchored units
-        (FTS5 '^') by filtering instance starts to position 0 (tf=1)."""
-        if unit.anchored:
-            return self._anchored_postings(unit)
-        if star_slots(unit):
-            if unit.is_phrase:
-                pp = self._pp_eval(unit)
-                ids = sorted(pp)
-                return (
-                    np.asarray(ids, np.int64),
-                    np.asarray([pp[d][0].size for d in ids], np.int64),
-                    np.asarray([pp[d][1] for d in ids], np.int64),
-                )
-            return self._fetch_prefix(unit.terms[0])
-        if not unit.is_phrase:
-            shards = self._cache.get(unit.terms[0], [])
-            if not shards:
-                return (np.empty(0, np.int64),) * 3
-            return (
-                np.concatenate([s[1] for s in shards]),
-                np.concatenate([s[2] for s in shards]),
-                np.concatenate([s[3] for s in shards]),
-            )
-        # per-term doc → (positions, dl) maps for the phrase's terms
-        maps = []
-        for t in unit.terms:
-            shards = self._pcache.get(t, [])
-            m: dict[int, tuple[np.ndarray, int]] = {}
-            for _, ids, _tfs, dls, positions in shards:
-                for j, d in enumerate(ids):
-                    m[int(d)] = (positions[j], int(dls[j]))
-            maps.append(m)
-        common = set(maps[0])
-        for m in maps[1:]:
-            common &= set(m)
-        out_ids, out_tf, out_dl = [], [], []
-        for d in sorted(common):
-            starts = maps[0][d][0]
-            for i in range(1, len(unit.terms)):
-                starts = np.intersect1d(starts, maps[i][d][0] - i)
-                if starts.size == 0:
-                    break
-            if starts.size:
-                out_ids.append(d)
-                out_tf.append(starts.size)
-                out_dl.append(maps[0][d][1])
-        return (
-            np.asarray(out_ids, np.int64),
-            np.asarray(out_tf, np.int64),
-            np.asarray(out_dl, np.int64),
-        )
+    def _term_pos(self, t: str) -> Flat:
+        self._fetch_pos([t])
+        return self._pcache[t]
 
-    def _pp_eval(self, unit) -> dict[int, tuple[np.ndarray, int]]:
-        """Starred-phrase unit — tail star ('"a b"*') and/or internal
-        stars ('a* + b') — from the resident caches:
-        {doc: (instance starts asc, dl)}. Slot-shifted intersection;
-        plain slots draw from the positional term cache, starred slots
-        from the stem's prefix positional tier (numpy mirror of
-        ``InvertedIndex._phrase_starts_any``)."""
-        slots = set(star_slots(unit))
-        maps: list[dict[int, np.ndarray]] = []
-        dl_of: dict[int, int] = {}
-        common: set[int] | None = None
-        for i, t in enumerate(unit.terms):
-            if i in slots:
-                m = self._fetch_prefix_pos(t)
-            else:
-                m = {}
-                for _, ids, _tfs, dls, positions in self._pcache.get(t, []):
-                    for j, d in enumerate(ids):
-                        m[int(d)] = positions[j]
-                        dl_of[int(d)] = int(dls[j])
-            maps.append(m)
-            common = set(m) if common is None else (common & set(m))
-        if not common:
-            return {}
-        if any(d not in dl_of for d in common):
-            # every slot starred: dls come from the (memoized) prefix
-            # tf tier of the first stem — its doc set covers common
-            stem0 = unit.terms[sorted(slots)[0]]
-            ids_all, _tfs, dls_all = self._fetch_prefix(stem0)
-            dl_of.update(zip(ids_all.tolist(), dls_all.tolist()))
-        out: dict[int, tuple[np.ndarray, int]] = {}
-        for d in sorted(common):
-            starts = maps[0][d]
-            for i in range(1, len(unit.terms)):
-                starts = np.intersect1d(starts, maps[i][d] - i)
-                if starts.size == 0:
-                    break
-            if starts.size:
-                out[d] = (starts, dl_of[d])
-        return out
+    def _groups(self, fl: Flat, universe: np.ndarray, cols=None):
+        """``fl``'s instances inside the ``universe`` docs (and ``cols``
+        fields) as the kernel's sorted dense (group, pos)."""
+        inst, g = group_ids(universe, fl.docs, fl.row, fl.field, self._nf)
+        if cols is None:
+            return g, fl.pos[inst]
+        in_cols = np.isin(fl.field[inst], cols)
+        return g[in_cols], fl.pos[inst][in_cols]
 
-    def _anchored_postings(self, unit) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Numpy mirror of ``InvertedIndex._anchored_tf``: docs whose
-        anchored instance set contains token position 0; tf=1 (a doc
-        starts at most once)."""
-        if star_slots(unit):
-            if unit.is_phrase:
-                pp = self._pp_eval(unit)
-                docs = sorted(d for d, (st, _dl) in pp.items() if st[0] == 0)
-                return (
-                    np.asarray(docs, np.int64),
-                    np.ones(len(docs), np.int64),
-                    np.asarray([pp[d][1] for d in docs], np.int64),
-                )
-            pos_map = self._fetch_prefix_pos(unit.terms[0])
-            ids_all, _tfs, dls_all = self._fetch_prefix(unit.terms[0])
-            dl_of = dict(zip(ids_all.tolist(), dls_all.tolist()))
-            docs = sorted(
-                d for d, p in pos_map.items() if p.size and p[0] == 0
-            )
-            return (
-                np.asarray(docs, np.int64),
-                np.ones(len(docs), np.int64),
-                np.asarray([dl_of[d] for d in docs], np.int64),
-            )
-        # term/phrase: instance starts from the positional cache
-        maps = []
-        for t in unit.terms:
-            m: dict[int, tuple[np.ndarray, int]] = {}
-            for _, ids, _tfs, dls, positions in self._pcache.get(t, []):
-                for j, d in enumerate(ids):
-                    m[int(d)] = (positions[j], int(dls[j]))
-            maps.append(m)
-        common = set(maps[0])
-        for m in maps[1:]:
-            common &= set(m)
-        out_ids, out_dl = [], []
-        for d in sorted(common):
-            starts = maps[0][d][0]
-            for i in range(1, len(unit.terms)):
-                starts = np.intersect1d(starts, maps[i][d][0] - i)
-                if starts.size == 0:
-                    break
-            if starts.size and starts.min() == 0:
-                out_ids.append(d)
-                out_dl.append(maps[0][d][1])
-        return (
-            np.asarray(out_ids, np.int64),
-            np.ones(len(out_ids), np.int64),
-            np.asarray(out_dl, np.int64),
-        )
+    def _starts(self, u) -> Flat:
+        """Instance START positions of unit ``u`` per (doc, field) —
+        term: its positions; prefix: the stem's union; phrase (plain or
+        with starred slots, tail or internal): the kernel's slot-shifted
+        intersection over every slot's flat postings — plain slots from
+        the term tier, starred slots from the stem tier (numpy mirror of
+        ``InvertedIndex._phrase_starts_any``). Phrases never span fields
+        (positions are field-relative)."""
+        slots = star_slots(u)
+        if not u.is_phrase:
+            t = u.terms[0]
+            return self._fetch_prefix_pos(t) if slots else self._term_pos(t)
+        recs = [
+            self._fetch_prefix_pos(t) if i in slots else self._term_pos(t)
+            for i, t in enumerate(u.terms)
+        ]
+        common = _common_docs(recs)
+        g, start = phrase_starts([self._groups(r, common) for r in recs])
+        ranks, row = np.unique(g // self._nf, return_inverse=True)
+        docs = common[ranks]
+        dls = recs[0].dls[np.searchsorted(recs[0].docs, docs)]
+        return Flat(docs, dls, row, g % self._nf, start)
+
+    def _unit_tf(self, u) -> tuple:
+        """(docs asc, dls, tf matrix per field) for one unit — the
+        serving mirror of ``query._unit_percol_mc`` / ``_unit_tf_sf``:
+        phrase tf = instance count; anchored units (FTS5 '^') count one
+        instance per field whose position 0 starts one; prefixes sum
+        the stem's tfs; terms come straight off the tf tier."""
+        nf = self._nf
+        if u.anchored or u.is_phrase:
+            fl = self._starts(u)
+            sel = fl.pos == 0 if u.anchored else slice(None)
+            tf = np.bincount(
+                fl.row[sel] * nf + fl.field[sel], minlength=fl.docs.size * nf
+            ).reshape(-1, nf)
+            has = tf.any(axis=1)
+            return fl.docs[has], fl.dls[has], tf[has]
+        if star_slots(u):
+            return self._fetch_prefix(u.terms[0])
+        cache = self._mc_cache if self._mc else self._cache
+        self._fetch_tf([u.terms[0]], self._mc)
+        rec = cache[u.terms[0]]
+        if rec is None:
+            e = np.empty(0, np.int64)
+            return e, e, np.zeros((0, nf), np.int64)
+        return rec[1:]
+
+    def _near_tf(self, grp, cols: list[int]) -> tuple:
+        """(docs, dls, [tf matrix per member]) for a NEAR group's
+        CONSTRAINED member atoms (numpy mirror of
+        ``InvertedIndex._near_eval``/``_near_eval_mc``): docs with a
+        satisfied (doc, field) in ``cols``, and per member per field the
+        count of its SUPPORTED instances (``querylang.near_supported``'s
+        rule) — 0 in fields where the group is unsatisfied, since a
+        selection never spans fields. One kernel call for every doc."""
+        recs = [self._starts(u) for u in grp.phrases]
+        common = _common_docs(recs)
+        sub = None if len(cols) == self._nf else cols
+        members = [self._groups(r, common, sub) for r in recs]
+        masks = near_mask(members, [len(u.terms) for u in grp.phrases], grp.n)
+        size = common.size * self._nf
+        tfs = [
+            np.bincount(g[m], minlength=size).reshape(-1, self._nf)
+            for (g, _pos), m in zip(members, masks)
+        ]
+        sat = tfs[0].any(axis=1)  # every member is supported where any is
+        docs = common[sat]
+        dls = recs[0].dls[np.searchsorted(recs[0].docs, docs)]
+        return docs, dls, [tf[sat] for tf in tfs]
 
     def search_expr(
         self, query_text: str, k: int = 10, strict: bool = False, weights=None
@@ -628,109 +574,82 @@ class LocalServer:
             if strict:
                 raise ValueError("empty query (FTS5 parity: empty MATCH is an error)")
             return _EMPTY.copy()
-        if meta.fields and meta.effective_detail() == "none":
+        return self._search_parsed(pq, k, weights)
+
+    def _search_parsed(self, pq, k: int, weights) -> pd.DataFrame:
+        """Expr serving: builds the same colset-filtered, weight-folded
+        per-unit relations as the distributed ``query._unit_tf_mc`` /
+        ``_unit_tf_sf`` (a single-field index is one field of weight
+        1.0), then the shared gated fold — rank- and score-identical to
+        ``InvertedIndex.search_expr`` (pinned in
+        tests/test_multicol_parity.py and tests/test_fts5_parity.py)."""
+        meta = self.meta
+        if meta.fields and not self._mc:
             # detail=none stores the single-field layout: colsets raise
-            # (FTS5 parity), weights raise (no per-field tfs), plain
-            # queries ride the resident single-field tier below
+            # (FTS5 parity), weights raise (no per-field tfs)
             self.index._check_detail_none(pq, weights)
-        elif meta.fields:
-            return self._search_expr_mc(pq, k, weights)
-        if weights is not None:
+        elif not meta.fields and weights is not None:
             raise ValueError(
                 "per-column weights need a multi-field index "
                 "(build_index(..., fields=[...]))"
             )
+        w = self.index._weights_list(weights) if self._mc else [1.0]
+        all_cols = list(range(self._nf))
         units = pq.units()
+        near_groups = pq.near_groups()
         if self._over_residency_cap(
             sorted({t for u in units for t in plain_terms(u)}),
             sorted({s for u in units for s in stem_terms(u)}),
         ):
-            return self.index.search_expr(query_text, k, strict=strict).toPandas()
-        self._fetch(
+            return self.index._search_parsed(pq, k, weights).toPandas()
+        # batch each tier's fetch into one job: positions for the plain
+        # slots of phrase/anchored units and NEAR members (every stem's
+        # positions come from the memoized _fetch_prefix_pos), tf streams
+        # for bare terms
+        pos_units = [u for u in units if u.is_phrase or u.anchored]
+        pos_units += [u for g in near_groups for u in g.phrases]
+        self._fetch_tf(
             sorted({
-                u.terms[0]
-                for u in units
+                u.terms[0] for u in units
                 if not u.is_phrase and not u.prefix and not u.anchored
-            })
+            }),
+            self._mc,
         )
-        near_groups = pq.near_groups()
-        # positions are needed for: phrase terms, anchored term/phrase
-        # units, non-starred NEAR members, and the PLAIN-slot terms of
-        # starred phrases ('"a b"*' / 'a* + b' — every stem's positions
-        # come from the memoized _fetch_prefix_pos inside _pp_eval)
-        pterms = sorted(
-            {t for u in units if u.is_phrase and not star_slots(u) for t in u.terms}
-            | {t for u in units if u.anchored and not star_slots(u) for t in u.terms}
-            | {
-                t
-                for u in list(units) + [u for g in near_groups for u in g.phrases]
-                if star_slots(u) and u.is_phrase
-                for t in plain_terms(u)
-            }
-            | {
-                t
-                for grp in near_groups
-                for u in grp.phrases
-                if not star_slots(u)
-                for t in u.terms
-            }
-        )
-        if pterms:
-            self._fetch_pos(pterms)
-        for u in units:
-            if u.anchored and u.prefix and not u.is_phrase:
-                self._fetch_prefix(u.terms[0])
-                self._fetch_prefix_pos(u.terms[0])
+        pos_terms = sorted({t for u in pos_units for t in plain_terms(u)})
+        if pos_terms:
+            self._fetch_pos(pos_terms)
 
         # per-unit postings; unit df = matched-doc count (== stored df
         # for terms); drop no-match units like the distributed path
-        per_unit = {}
+        per_unit: dict[str, tuple] = {}
+        df_of: dict[str, int] = {}  # uid → df used for idf (NEAR overrides)
         for u in units:
-            ids, tfs, dls = self._unit_postings(u)
+            cols = sorted(u.cols) if u.cols is not None else all_cols
+            if not cols:
+                continue  # empty colset intersection: matches nothing
+            ids, tfw, dls = _wfold(*self._unit_tf(u), w, cols)
             if ids.size:
-                per_unit[u.uid] = (ids, tfs, dls)
+                per_unit[u.uid] = (ids, tfw, dls)
 
         # NEAR groups (including those inside exclude expressions):
         # CONSTRAINED member atoms — rows only for satisfying docs, tf =
-        # supported instances, df = the member's full presence (numpy
-        # mirror of InvertedIndex._near_eval)
-        from sparkgrep.functions.querylang import near_supported
-
-        df_of = {}  # uid → df used for idf (n-atoms override below)
+        # supported instances, df = the member's full presence
         near_uids: dict[int, list[str]] = {}
         for gid, grp in enumerate(near_groups):
             uids_g = [f"n{gid}:{u.uid}" for u in grp.phrases]
             near_uids[gid] = uids_g
-            starts_maps = [self._local_unit_starts(u) for u in grp.phrases]
-            lens = [len(u.terms) for u in grp.phrases]
-            common = set(starts_maps[0])
-            for m in starts_maps[1:]:
-                common &= set(m)
-            ids0, _tf0, dls0 = self._unit_postings(grp.phrases[0])
-            dl_of = dict(zip(ids0.tolist(), dls0.tolist()))
-            per_member: list[list] = [[] for _ in grp.phrases]
-            sat_docs = []
-            for d in sorted(common):
-                sup = near_supported(
-                    [m[d] for m in starts_maps], lens, grp.n
-                )
-                if sup is None:
-                    continue
-                sat_docs.append(d)
-                for i, cnt in enumerate(sup):
-                    per_member[i].append(cnt)
-            if sat_docs:
-                ids_a = np.asarray(sat_docs, np.int64)
-                dls_a = np.asarray([dl_of[d] for d in sat_docs], np.int64)
-                for i, (u, nuid) in enumerate(zip(grp.phrases, uids_g)):
-                    per_unit[nuid] = (
-                        ids_a,
-                        np.asarray(per_member[i], np.int64),
-                        dls_a,
-                    )
-                    # df = the member's FULL presence (SQLite-pinned)
-                    df_of[nuid] = int(per_unit[u.uid][0].size)
-
+            cols_g = sorted(grp.cols) if grp.cols is not None else all_cols
+            if not cols_g:
+                continue
+            docs, dls, tfs = self._near_tf(grp, cols_g)
+            for u, nuid, tf in zip(grp.phrases, uids_g, tfs):
+                ids, tfw, dl = _wfold(docs, dls, tf, w, cols_g)
+                if ids.size:
+                    per_unit[nuid] = (ids, tfw, dl)
+                    # member df = colset-restricted full presence (the
+                    # member's standalone relation — parser set its cols)
+                    if u.uid in per_unit:
+                        df_of[nuid] = int(per_unit[u.uid][0].size)
         return self._gated_topk(pq, per_unit, df_of, near_groups, near_uids, k)
 
     def _gated_topk(
@@ -738,9 +657,7 @@ class LocalServer:
     ) -> pd.DataFrame:
         """Shared boolean-match + gated-fold + top-k tail over the
         per-unit postings (numpy mirror of query.InvertedIndex's
-        ``_rank_units``): identical for single- and multi-field
-        indexes — only how ``per_unit`` (ids, tf, dl) was built differs
-        (multi-field tfs are weighted-sum doubles)."""
+        ``_rank_units``)."""
         meta = self.meta
         if not per_unit:
             return _EMPTY.copy()
@@ -837,484 +754,3 @@ class LocalServer:
                 "score": scores[sel],
             }
         )
-
-    # -- multi-field (FTS5 multi-column) serving ----------------------------
-
-    def _fetch_mc(self, terms: list[str], positions: bool = False) -> None:
-        """Resident per-field postings for a multi-field index — the
-        serving analogue of ``query._decode_raw_mc_gen`` (tombstone
-        masking included)."""
-        cache = self._mc_pcache if positions else self._mc_cache
-        missing = [t for t in terms if t not in cache]
-        if not missing:
-            return
-        if positions and not self.meta.has_positions:
-            raise ValueError(
-                "phrase/NEAR/anchored queries need an index built with "
-                "store_positions=True"
-            )
-        nf = len(self.meta.fields)
-        sel = ["term", "df", "n", "doc_ids", "dls", "tfs_cols"]
-        if positions:
-            sel.append("poss_cols")
-        rows = (
-            self.index._matched(missing)
-            .select(*sel, *self._seq_col())
-            .collect()
-        )
-        for t in missing:
-            cache[t] = []
-        for r in rows:
-            ids = blocked_gap_decode(
-                r["doc_ids"], int(r["n"]), self.meta.block_size
-            ).astype(np.int64)
-            dls = varint_decode(r["dls"]).astype(np.int64)
-            tf_cols = [
-                varint_decode(r["tfs_cols"][c]).astype(np.int64)
-                for c in range(nf)
-            ]
-            pos_cols = None
-            if positions:
-                pos_cols = []
-                for c in range(nf):
-                    flat = delta_decode_segments(r["poss_cols"][c], tf_cols[c])
-                    pos_cols.append(
-                        np.split(flat, np.cumsum(tf_cols[c])[:-1])
-                    )
-            keep = self._keep(r, ids)
-            if keep is not None:
-                selj = np.flatnonzero(keep)
-                if not selj.size:
-                    continue
-                ids, dls = ids[selj], dls[selj]
-                tf_cols = [tc[selj] for tc in tf_cols]
-                if positions:
-                    pos_cols = [[pc[j] for j in selj] for pc in pos_cols]
-            if positions:
-                cache[r["term"]].append((ids, tf_cols, dls, pos_cols))
-            else:
-                cache[r["term"]].append((int(r["df"]), ids, tf_cols, dls))
-
-    def _fetch_prefix_mc(self, stem: str) -> tuple:
-        """``stem*`` on a multi-field index: (docs ascending, dls,
-        per-field tf matrix) with tfs integer-summed over every matching
-        term per doc — the array form is the ONLY cached representation
-        (the fold reads it directly; the dict view `_mc_unit_percol`
-        exposes derives from it), so a stem costs one copy of its
-        aggregation, not a dict plus arrays."""
-        hit = self._mc_xarr.get(stem)
-        if hit is not None:
-            return hit
-        nf = len(self.meta.fields)
-        rows = (
-            self.index._prefix_matched(stem)
-            .select("term", "n", "doc_ids", "dls", "tfs_cols", *self._seq_col())
-            .collect()
-        )
-        ids_parts, dl_parts = [], []
-        tf_parts: list[list] = [[] for _ in range(nf)]
-        for r in rows:
-            ids = blocked_gap_decode(
-                r["doc_ids"], int(r["n"]), self.meta.block_size
-            ).astype(np.int64)
-            dls = varint_decode(r["dls"]).astype(np.int64)
-            tf_cols = [
-                varint_decode(r["tfs_cols"][c]).astype(np.int64)
-                for c in range(nf)
-            ]
-            keep = self._keep(r, ids)
-            if keep is not None:
-                sel = np.flatnonzero(keep)
-                if not sel.size:
-                    continue
-                ids, dls = ids[sel], dls[sel]
-                tf_cols = [tc[sel] for tc in tf_cols]
-            ids_parts.append(ids)
-            dl_parts.append(dls)
-            for c in range(nf):
-                tf_parts[c].append(tf_cols[c])
-        if not ids_parts:
-            out = (
-                np.empty(0, np.int64),
-                np.empty(0, np.int64),
-                np.zeros((0, nf), np.int64),
-            )
-            self._mc_xarr[stem] = out
-            return out
-        ids = np.concatenate(ids_parts)
-        dls_all = np.concatenate(dl_parts)
-        docs = np.unique(ids)
-        pos = np.searchsorted(docs, ids)
-        tf_mat = np.zeros((docs.size, nf), np.int64)
-        for c in range(nf):
-            np.add.at(tf_mat[:, c], pos, np.concatenate(tf_parts[c]))
-        dl_out = np.zeros(docs.size, np.int64)
-        dl_out[pos] = dls_all  # dl identical across a doc's term rows
-        out = (docs, dl_out, tf_mat)
-        self._mc_xarr[stem] = out
-        return out
-
-    def _fetch_prefix_pos_mc(self, stem: str) -> tuple[dict, dict]:
-        """``stem*`` positional tier: ({(doc, col): sorted union of
-        matching terms' field-relative positions}, {doc: dl})."""
-        hit = self._mc_xpcache.get(stem)
-        if hit is not None:
-            return hit
-        if not self.meta.has_positions:
-            raise ValueError(
-                "NEAR/anchored queries need an index built with "
-                "store_positions=True"
-            )
-        nf = len(self.meta.fields)
-        rows = (
-            self.index._prefix_matched(stem)
-            .select(
-                "term", "n", "doc_ids", "dls", "tfs_cols", "poss_cols",
-                *self._seq_col(),
-            )
-            .collect()
-        )
-        acc: dict[tuple, list] = {}
-        dlm: dict[int, int] = {}
-        for r in rows:
-            ids = blocked_gap_decode(
-                r["doc_ids"], int(r["n"]), self.meta.block_size
-            ).astype(np.int64)
-            dls = varint_decode(r["dls"]).astype(np.int64)
-            tf_cols = [
-                varint_decode(r["tfs_cols"][c]).astype(np.int64)
-                for c in range(nf)
-            ]
-            pos_cols = []
-            for c in range(nf):
-                flat = delta_decode_segments(r["poss_cols"][c], tf_cols[c])
-                pos_cols.append(np.split(flat, np.cumsum(tf_cols[c])[:-1]))
-            keep = self._keep(r, ids)
-            for j, d in enumerate(ids):
-                if keep is not None and not keep[j]:
-                    continue
-                dlm[int(d)] = int(dls[j])
-                for c in range(nf):
-                    if tf_cols[c][j]:
-                        acc.setdefault((int(d), c), []).append(pos_cols[c][j])
-        out = {key: np.sort(np.concatenate(ps)) for key, ps in acc.items()}
-        self._mc_xpcache[stem] = (out, dlm)
-        return out, dlm
-
-    def _mc_term_percol(self, t: str) -> dict[int, tuple]:
-        """{doc: (dl, per-field tf array)} for one term."""
-        nf = len(self.meta.fields)
-        out: dict[int, tuple] = {}
-        for _df, ids, tf_cols, dls in self._mc_cache.get(t, []):
-            for j, d in enumerate(ids):
-                out[int(d)] = (
-                    int(dls[j]),
-                    np.array([tc[j] for tc in tf_cols], dtype=np.int64),
-                )
-        return out
-
-    def _mc_pos_maps(self, t: str) -> tuple[dict, dict]:
-        """({(doc, col): positions} for fields with an instance,
-        {doc: dl}) for one term, from the positional tier."""
-        nf = len(self.meta.fields)
-        m: dict[tuple, np.ndarray] = {}
-        dlm: dict[int, int] = {}
-        for ids, tf_cols, dls, pos_cols in self._mc_pcache.get(t, []):
-            for j, d in enumerate(ids):
-                dlm[int(d)] = int(dls[j])
-                for c in range(nf):
-                    if tf_cols[c][j]:
-                        m[(int(d), c)] = pos_cols[c][j]
-        return m, dlm
-
-    def _mc_phrase_starts(self, terms: tuple) -> tuple[dict, dict]:
-        """Slot-shifted intersection per (doc, FIELD) — the numpy mirror
-        of ``query._phrase_percol_mc`` (phrases never span fields)."""
-        maps, dlm = [], {}
-        for t in terms:
-            m, dl_t = self._mc_pos_maps(t)
-            maps.append(m)
-            dlm.update(dl_t)
-        common = set(maps[0])
-        for m in maps[1:]:
-            common &= set(m)
-        out: dict[tuple, np.ndarray] = {}
-        for key in common:
-            starts = maps[0][key]
-            for i in range(1, len(terms)):
-                starts = np.intersect1d(starts, maps[i][key] - i)
-                if starts.size == 0:
-                    break
-            if starts.size:
-                out[key] = np.sort(starts)
-        return out, dlm
-
-    def _mc_pp_starts(self, terms: tuple, slots: tuple[int, ...]) -> tuple[dict, dict]:
-        """Starred-phrase instance starts per (doc, FIELD) — numpy
-        mirror of ``query._phrase_starts_any_mc``: slot-shifted
-        intersection within one column; plain slots from the positional
-        term cache, starred slots (tail or internal) from the stem's
-        prefix positional tier."""
-        star = set(slots)
-        maps, dlm = [], {}
-        for i, t in enumerate(terms):
-            if i in star:
-                m, dl_t = self._fetch_prefix_pos_mc(t)
-            else:
-                m, dl_t = self._mc_pos_maps(t)
-            maps.append(m)
-            dlm.update(dl_t)
-        common = set(maps[0])
-        for m in maps[1:]:
-            common &= set(m)
-        out: dict[tuple, np.ndarray] = {}
-        for key in common:
-            starts = maps[0][key]
-            for i in range(1, len(terms)):
-                starts = np.intersect1d(starts, maps[i][key] - i)
-                if starts.size == 0:
-                    break
-            if starts.size:
-                out[key] = np.sort(starts)
-        return out, dlm
-
-    def _mc_unit_percol(self, u) -> dict[int, tuple]:
-        """{doc: (dl, per-field tf array)} for one unit — the serving
-        mirror of ``query._unit_percol_mc`` (anchored units count one
-        instance per field anchored at its position 0)."""
-        nf = len(self.meta.fields)
-        slots = star_slots(u)
-        if u.anchored:
-            if slots and u.is_phrase:
-                posm, dlm = self._mc_pp_starts(u.terms, slots)
-            elif slots:
-                posm, dlm = self._fetch_prefix_pos_mc(u.terms[0])
-            elif u.is_phrase:
-                posm, dlm = self._mc_phrase_starts(u.terms)
-            else:
-                posm, dlm = self._mc_pos_maps(u.terms[0])
-            out: dict[int, tuple] = {}
-            for (d, c), starts in posm.items():
-                if starts.size and starts[0] == 0:
-                    dl, tfc = out.get(d, (dlm[d], np.zeros(nf, np.int64)))
-                    tfc[c] = 1
-                    out[d] = (dl, tfc)
-            return out
-        if slots and not u.is_phrase:
-            # dict view of the array-form prefix aggregation (single
-            # source of truth — the fast-path fold reads the arrays
-            # directly; this view exists for the shared _wfold contract)
-            docs, dls, tf_mat = self._fetch_prefix_mc(u.terms[0])
-            return {
-                int(d): (int(dls[i]), tf_mat[i])
-                for i, d in enumerate(docs)
-            }
-        if u.is_phrase:
-            posm, dlm = (
-                self._mc_pp_starts(u.terms, slots)
-                if slots
-                else self._mc_phrase_starts(u.terms)
-            )
-            out = {}
-            for (d, c), starts in posm.items():
-                dl, tfc = out.get(d, (dlm[d], np.zeros(nf, np.int64)))
-                tfc[c] = starts.size
-                out[d] = (dl, tfc)
-            return out
-        return self._mc_term_percol(u.terms[0])
-
-    def _wfold_term_arrays(self, t: str, w: list[float], cols: list[int]):
-        """Vectorized ``_wfold`` for a PLAIN term unit: the weighted fold
-        runs directly over the cached per-field tf arrays instead of a
-        per-doc Python dict — elementwise IEEE float64 ops in the same
-        left-associated ascending-field order, so the result is bitwise
-        identical to ``_wfold(_mc_term_percol(t), ...)`` (each live doc
-        appears in exactly one shard row: shards partition a term's
-        postings and tombstone masking drops superseded layers, so the
-        dict path never merged anything). ~10-100× less Python overhead
-        on hot terms — this is the serving tier's term hot path."""
-        ids_p, tfw_p, dls_p = [], [], []
-        for _df, ids, tf_cols, dls in self._mc_cache.get(t, []):
-            pres = None
-            for c in cols:
-                p = tf_cols[c] != 0
-                pres = p if pres is None else (pres | p)
-            v = w[cols[0]] * tf_cols[cols[0]].astype(np.float64)
-            for c in cols[1:]:
-                v = v + w[c] * tf_cols[c].astype(np.float64)
-            if pres.all():
-                ids_p.append(ids)
-                tfw_p.append(v)
-                dls_p.append(dls)
-            else:
-                sel = np.flatnonzero(pres)
-                if sel.size:
-                    ids_p.append(ids[sel])
-                    tfw_p.append(v[sel])
-                    dls_p.append(dls[sel])
-        if not ids_p:
-            return (
-                np.empty(0, np.int64),
-                np.empty(0, np.float64),
-                np.empty(0, np.int64),
-            )
-        return (
-            np.concatenate(ids_p),
-            np.concatenate(tfw_p),
-            np.concatenate(dls_p),
-        )
-
-    def _wfold_prefix_arrays(self, stem: str, w: list[float], cols: list[int]):
-        """Vectorized ``_wfold`` for a PREFIX term unit over the cached
-        (docs, dls, per-field tf matrix) aggregation — per-doc tfs are
-        integer sums (order-free), the weighted fold is elementwise
-        IEEE float64 in the same left-associated ascending-field order
-        as ``_wfold``, so scores are bitwise-identical to the dict fold
-        over the same aggregation."""
-        docs, dls, tf_mat = self._fetch_prefix_mc(stem)
-        if not docs.size:
-            return (
-                np.empty(0, np.int64),
-                np.empty(0, np.float64),
-                np.empty(0, np.int64),
-            )
-        pres = None
-        for c in cols:
-            p = tf_mat[:, c] != 0
-            pres = p if pres is None else (pres | p)
-        v = w[cols[0]] * tf_mat[:, cols[0]].astype(np.float64)
-        for c in cols[1:]:
-            v = v + w[c] * tf_mat[:, c].astype(np.float64)
-        if pres.all():
-            return docs, v, dls
-        sel = np.flatnonzero(pres)
-        return docs[sel], v[sel], dls[sel]
-
-    def _wfold(self, percol: dict[int, tuple], w: list[float], cols: list[int]):
-        """Fixed-order weighted fold over the colset — bitwise mirror of
-        ``query._wsum_mc``: tfw = (w_c0·tf_c0) + (w_c1·tf_c1) + … in
-        ascending field order; presence (weight-independent) keeps a doc
-        when ANY colset field has an instance."""
-        ids, tfw, dls = [], [], []
-        for d, (dl, tfc) in percol.items():
-            if not any(int(tfc[c]) for c in cols):
-                continue
-            v = w[cols[0]] * float(tfc[cols[0]])
-            for c in cols[1:]:
-                v = v + w[c] * float(tfc[c])
-            ids.append(d)
-            tfw.append(v)
-            dls.append(dl)
-        return (
-            np.asarray(ids, np.int64),
-            np.asarray(tfw, np.float64),
-            np.asarray(dls, np.int64),
-        )
-
-    def _mc_member_starts(self, u) -> tuple[dict, dict]:
-        """NEAR member instance starts per (doc, FIELD)."""
-        slots = star_slots(u)
-        if slots:
-            if u.is_phrase:
-                return self._mc_pp_starts(u.terms, slots)
-            return self._fetch_prefix_pos_mc(u.terms[0])
-        if u.is_phrase:
-            return self._mc_phrase_starts(u.terms)
-        return self._mc_pos_maps(u.terms[0])
-
-    def _search_expr_mc(self, pq, k: int, weights) -> pd.DataFrame:
-        """Multi-field expr serving: builds the same colset-filtered,
-        weight-folded per-unit relations as the distributed
-        ``query._unit_tf_mc``, then the shared gated fold — results are
-        rank- and score-identical to ``InvertedIndex.search_expr``
-        (pinned in tests/test_multicol_parity.py)."""
-        from sparkgrep.functions.querylang import near_supported
-
-        meta = self.meta
-        w = self.index._weights_list(weights)
-        nf = len(meta.fields)
-        all_cols = list(range(nf))
-        units = pq.units()
-        near_groups = pq.near_groups()
-        if self._over_residency_cap(
-            sorted({t for u in units for t in plain_terms(u)}),
-            sorted({s for u in units for s in stem_terms(u)}),
-        ):
-            return self.index._search_parsed(pq, k, weights).toPandas()
-        # fetch tiers: positions for phrase/anchored units, NEAR members,
-        # and starred phrases' PLAIN-slot terms (every stem's positions
-        # come from the memoized _fetch_prefix_pos_mc); plain tf streams
-        # for the rest
-        all_members = list(units) + [u for g in near_groups for u in g.phrases]
-        pos_terms = sorted(
-            {t for u in units if (u.is_phrase or u.anchored) and not star_slots(u)
-             for t in u.terms}
-            | {t for g in near_groups for u in g.phrases if not star_slots(u)
-               for t in u.terms}
-            | {t for u in all_members if star_slots(u) and u.is_phrase
-               for t in plain_terms(u)}
-        )
-        bare_terms = sorted(
-            {u.terms[0] for u in units
-             if not u.is_phrase and not u.prefix and not u.anchored}
-        )
-        self._fetch_mc(bare_terms)
-        if pos_terms:
-            self._fetch_mc(pos_terms, positions=True)
-
-        per_unit: dict[str, tuple] = {}
-        df_of: dict[str, int] = {}
-        for u in units:
-            cols = sorted(u.cols) if u.cols is not None else all_cols
-            if not cols:
-                continue  # empty colset intersection: matches nothing
-            if not u.anchored and not u.is_phrase and not star_slots(u):
-                # plain term unit: vectorized fold straight over the
-                # cached arrays (bitwise-equal to the dict path)
-                ids, tfw, dls = self._wfold_term_arrays(u.terms[0], w, cols)
-            elif not u.anchored and not u.is_phrase:
-                # prefix term unit: cached array form of the stem scan
-                ids, tfw, dls = self._wfold_prefix_arrays(u.terms[0], w, cols)
-            else:
-                ids, tfw, dls = self._wfold(self._mc_unit_percol(u), w, cols)
-            if ids.size:
-                per_unit[u.uid] = (ids, tfw, dls)
-
-        near_uids: dict[int, list[str]] = {}
-        for gid, grp in enumerate(near_groups):
-            uids_g = [f"n{gid}:{u.uid}" for u in grp.phrases]
-            near_uids[gid] = uids_g
-            cols_g = sorted(grp.cols) if grp.cols is not None else all_cols
-            if not cols_g:
-                continue
-            starts_maps = [self._mc_member_starts(u) for u in grp.phrases]
-            dlm: dict[int, int] = {}
-            for _m, dl_t in starts_maps:
-                dlm.update(dl_t)
-            common = {
-                key for key in starts_maps[0][0] if key[1] in cols_g
-            }
-            for m, _dl in starts_maps[1:]:
-                common &= set(m)
-            lens = [len(u.terms) for u in grp.phrases]
-            # per member: {doc: per-field supported counts}
-            per_member = [dict() for _ in grp.phrases]
-            for d, c in sorted(common):
-                sup = near_supported(
-                    [m[(d, c)] for m, _dl in starts_maps], lens, grp.n
-                )
-                if sup is None:
-                    continue
-                for i, cnt in enumerate(sup):
-                    dl, tfc = per_member[i].get(d, (dlm[d], np.zeros(nf, np.int64)))
-                    tfc[c] = cnt
-                    per_member[i][d] = (dl, tfc)
-            for i, (u, nuid) in enumerate(zip(grp.phrases, uids_g)):
-                ids, tfw, dls = self._wfold(per_member[i], w, cols_g)
-                if ids.size:
-                    per_unit[nuid] = (ids, tfw, dls)
-                    # member df = colset-restricted full presence (the
-                    # member's standalone relation — parser set its cols)
-                    if u.uid in per_unit:
-                        df_of[nuid] = int(per_unit[u.uid][0].size)
-        return self._gated_topk(pq, per_unit, df_of, near_groups, near_uids, k)

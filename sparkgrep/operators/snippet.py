@@ -46,11 +46,13 @@ from __future__ import annotations
 import re
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkgrep.functions.porter import porter_stem
+from sparkgrep.functions.positional import near_mask
 from sparkgrep.functions.querylang import (
     Conjunct,
     NearGroup,
@@ -140,39 +142,6 @@ def _allowed_cols(u_cols, ncols: int) -> list[int]:
     return [c for c in u_cols if c < ncols]
 
 
-def _near_supported_starts(
-    members_inst: list[list[tuple[int, int]]], n: int
-) -> list[list[int]] | None:
-    """Per-member SUPPORTED instance starts for a NEAR group evaluated
-    within ONE column. members_inst[m] = [(start, end_INCLUSIVE)] —
-    same representation as querylang.near_supported (the scoring
-    engine's pinned helper). Rule: instance (s, e) of member m is
-    supported iff for some window floor E (an instance end of any
-    member) E <= e, s <= n + 1 + E, and EVERY member has an instance
-    with end >= E and start <= n + 1 + E."""
-    if any(not mi for mi in members_inst):
-        return None
-    ends = sorted({e for mi in members_inst for (_, e) in mi})
-    valid_E = []
-    for E in ends:
-        if all(
-            any(e >= E and s <= n + 1 + E for (s, e) in mi)
-            for mi in members_inst
-        ):
-            valid_E.append(E)
-    if not valid_E:
-        return None
-    out = []
-    for mi in members_inst:
-        sup = [
-            s
-            for (s, e) in mi
-            if any(E <= e and s <= n + 1 + E for E in valid_E)
-        ]
-        out.append(sup)
-    return out
-
-
 def _conjunct_matches(conj: Conjunct, cols_toks: list[list[str]]) -> bool:
     ncols = len(cols_toks)
     for u in conj.includes:
@@ -200,16 +169,25 @@ def _near_group_eval(
     grp: NearGroup, cols_toks: list[list[str]]
 ) -> dict[int, list[list[int]]] | None:
     """Per-column supported member starts, or None when no column
-    satisfies the group (NEAR never matches across columns — pinned)."""
-    ncols = len(cols_toks)
+    satisfies the group (NEAR never matches across columns — pinned).
+    Every allowed column is one group of the positional kernel's NEAR
+    mask (``positional.near_mask``, the scoring engine's
+    ``querylang.near_supported`` rule), so the doc is one kernel call."""
+    cols = _allowed_cols(grp.cols, len(cols_toks))
+    if not cols:
+        return None
+    members = []
+    for u in grp.phrases:
+        per_col = [_unit_instances(u, cols_toks[c]) for c in cols]
+        members.append((
+            np.repeat(np.arange(len(cols)), [len(p) for p in per_col]),
+            np.asarray([s for p in per_col for s in p], np.int64),
+        ))
+    masks = near_mask(members, [len(u.terms) for u in grp.phrases], grp.n)
     out = {}
-    for c in _allowed_cols(grp.cols, ncols):
-        members = []
-        for u in grp.phrases:
-            starts = _unit_instances(u, cols_toks[c])
-            members.append([(s, s + len(u.terms) - 1) for s in starts])
-        sup = _near_supported_starts(members, grp.n)
-        if sup is not None:
+    for j, c in enumerate(cols):
+        sup = [pos[(g == j) & m].tolist() for (g, pos), m in zip(members, masks)]
+        if sup[0]:  # every member is supported where any is
             out[c] = sup
     return out or None
 

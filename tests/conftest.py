@@ -7,6 +7,14 @@ from sparkgrep.session import get_spark
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "smoke: one fast test per engine module — `pytest -m smoke` is the "
+        "quick review loop; the full suite stays the gate",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("sparkgrep-tests", master="local[4]", shuffle_partitions=4)

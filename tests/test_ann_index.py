@@ -26,6 +26,7 @@ def ann(spark, emb, tmp_path_factory):
     return AnnIndex(spark, out)
 
 
+@pytest.mark.smoke
 def test_meta_roundtrip(ann, emb):
     m = load_ann_meta(ann.index_dir)
     assert m == ann.meta

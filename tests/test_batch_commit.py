@@ -120,6 +120,7 @@ def test_delete_crash_before_root_commit_replay_applies(
     assert InvertedIndex(spark, out).meta.n_docs == 210
 
 
+@pytest.mark.smoke
 def test_bootstrap_crash_replay_recovers(
     spark, corpus, tmp_path_factory, monkeypatch
 ):

@@ -44,6 +44,7 @@ def test_rank_identity_vs_oracle(prepared, query, idf_variant):
     assert (got["score"] - want["score"]).abs().max() <= 1e-9 or want.empty
 
 
+@pytest.mark.smoke
 def test_limit(prepared):
     tf, stats, _ = prepared
     assert S.search(tf, stats, "the table", k=3).count() == 3

@@ -124,6 +124,7 @@ def test_metadata_io_via_hadoop_fs_uri(spark, corpus, tmp_path):
     assert idx.search("hash join", k=5).count() > 0
 
 
+@pytest.mark.smoke
 def test_fsio_atomic_roundtrip(spark, tmp_path):
     from sparkgrep.sources import fsio
 

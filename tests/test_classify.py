@@ -58,6 +58,7 @@ def test_phases_partition_candidates(spark, cascade, corpus):
             )
 
 
+@pytest.mark.smoke
 def test_summary_counts(cascade, corpus):
     _idx, res = cascade
     n_docs = corpus.count()

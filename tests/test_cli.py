@@ -178,6 +178,7 @@ def test_like_glob_subcommands(spark, tmp_path_factory):
     assert [int(x) for x in out.split()] == like_ids and len(like_ids) == 24
 
 
+@pytest.mark.smoke
 def test_session_not_stopped_when_injected(spark, built):
     # the injection seam must never stop the caller's session
     run_cli(spark, "metrics", "--index", built["idx"])

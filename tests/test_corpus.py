@@ -26,6 +26,7 @@ def test_documents_mapping(spark):
     assert r["path"] == "src/file_7.py" and len(r["commit"]) == 40
 
 
+@pytest.mark.smoke
 def test_sha256_matches_hashlib(spark):
     ing = with_ingest_columns(documents_as_corpus(load_documents(spark, SF)))
     rows = ing.select("content", "content_sha256").limit(5).collect()

@@ -34,6 +34,7 @@ def _check(corpus, out, **kw):
     return integrity_check(corpus, out, **kw).collect()
 
 
+@pytest.mark.smoke
 def test_clean_single_field_with_positions_and_prefix(spark, corpus, tmp_path):
     out = str(tmp_path / "idx")
     build_index(

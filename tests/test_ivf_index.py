@@ -109,6 +109,7 @@ def test_train_centroids_guards():
         train_centroids(np.ones((4, 8)), nlist=16)
 
 
+@pytest.mark.smoke
 def test_empty_build_raises(spark):
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError, match="empty"):

@@ -34,6 +34,7 @@ def _inc_uids(pq):
     return [[u.uid for u in c.includes] for c in pq.disjuncts]
 
 
+@pytest.mark.smoke
 def test_colspec_binds_next_atom():
     pq = parse_query("title:alpha beta", "simple", fields=FIELDS)
     assert _inc_uids(pq) == [["f0|t:alpha", "t:beta"]]
@@ -170,14 +171,34 @@ def test_mc_delta_tombstone_compact_bitwise(spark, mc_corpus, tmp_path_factory):
         assert _same(a, b), ("compacted", q, w)
 
 
+def _dict_wfold(docs, dls, tf_mat, w, cols):
+    """Per-doc Python reference of the weighted fold: ascending-field
+    left-associated float adds, kept when ANY colset field has a tf."""
+    ids, tfw, out_dls = [], [], []
+    for d, dl, tfc in zip(docs.tolist(), dls.tolist(), tf_mat.tolist()):
+        if not any(tfc[c] for c in cols):
+            continue
+        v = w[cols[0]] * float(tfc[cols[0]])
+        for c in cols[1:]:
+            v = v + w[c] * float(tfc[c])
+        ids.append(d)
+        tfw.append(v)
+        out_dls.append(dl)
+    return (
+        np.asarray(ids, np.int64),
+        np.asarray(tfw, np.float64),
+        np.asarray(out_dls, np.int64),
+    )
+
+
 def test_wfold_term_fast_path_bitwise(spark, mc_corpus, tmp_path_factory):
-    """The vectorized term fold (`_wfold_term_arrays`) must be bitwise
-    identical to the per-doc dict fold it replaces — same doc order,
-    same IEEE float64 weighted tf bytes — including on a LAYERED index
-    with tombstones (masking already applied at fetch), for full and
-    restricted colsets and zero weights."""
+    """The vectorized weighted fold (`serve._wfold`) must be bitwise
+    identical to a per-doc dict fold — same doc order, same IEEE float64
+    weighted tf bytes — for term and prefix units, including on a
+    LAYERED index with tombstones (masking already applied at fetch),
+    for full and restricted colsets and zero weights."""
     from sparkgrep.functions.querylang import Unit
-    from sparkgrep.operators.serve import LocalServer
+    from sparkgrep.operators.serve import LocalServer, _wfold
 
     out = str(tmp_path_factory.mktemp("mc_fast") / "idx")
     kw = dict(analyzer="fts5", idf_variant="fts5", n_buckets=8)
@@ -190,7 +211,7 @@ def test_wfold_term_fast_path_bitwise(spark, mc_corpus, tmp_path_factory):
     idx = InvertedIndex(spark, out)
     srv = LocalServer(idx)
     terms = ["alpha", "beta", "code", "zeta"]
-    srv._fetch_mc(terms)
+    srv._fetch_tf(terms, per_field=True)
     for t in terms:
         for cols, w in (
             ([0, 1], [1.0, 1.0]),
@@ -199,20 +220,14 @@ def test_wfold_term_fast_path_bitwise(spark, mc_corpus, tmp_path_factory):
             ([1], [1.0, 2.0]),
             ([0, 1], [0.0, 2.0]),  # zero weight still matches
         ):
-            slow = srv._wfold(srv._mc_term_percol(t), w, cols)
-            fast = srv._wfold_term_arrays(t, w, cols)
-            assert (slow[0] == fast[0]).all(), (t, cols, w)
-            assert slow[1].tobytes() == fast[1].tobytes(), (t, cols, w)
-            assert (slow[2] == fast[2]).all(), (t, cols, w)
-            # prefix-unit fold over the same stem's scan cache: the
-            # shared-_wfold dict view vs the direct array fold
-            stem = t[:2]
-            punit = Unit((stem,), prefix=True)
-            pslow = srv._wfold(srv._mc_unit_percol(punit), w, cols)
-            pfast = srv._wfold_prefix_arrays(stem, w, cols)
-            assert (pslow[0] == pfast[0]).all(), (stem, cols, w)
-            assert pslow[1].tobytes() == pfast[1].tobytes(), (stem, cols, w)
-            assert (pslow[2] == pfast[2]).all(), (stem, cols, w)
+            # term unit, then the prefix unit over the same stem's scan
+            for unit in (Unit((t,)), Unit((t[:2],), prefix=True)):
+                rel = srv._unit_tf(unit)
+                slow = _dict_wfold(*rel, w, cols)
+                fast = _wfold(*rel, w, cols)
+                assert (slow[0] == fast[0]).all(), (unit, cols, w)
+                assert slow[1].tobytes() == fast[1].tobytes(), (unit, cols, w)
+                assert (slow[2] == fast[2]).all(), (unit, cols, w)
     # end-to-end: the serve tier (fast paths live) equals the distributed
     # path on the layered index — weighted, colset-filtered, and prefix
     for q, w in MC_QS + [("alp* beta", [2.0, 1.0]), ("title:alp*", None)]:

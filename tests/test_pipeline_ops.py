@@ -26,6 +26,7 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string").cache()
 
 
+@pytest.mark.smoke
 def test_exact_dedup(docs):
     groups = D.exact_dup_groups(docs).collect()
     assert len(groups) == 1
@@ -72,6 +73,7 @@ def test_simhash(docs):
     assert any({r["doc_id_a"], r["doc_id_b"]} == {0, 2} for r in near)
 
 
+@pytest.mark.smoke
 def test_cosine_topk_matches_numpy(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     pdf = emb.toPandas()

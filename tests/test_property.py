@@ -4,6 +4,7 @@ analyzer invariants hold for arbitrary inputs — no Spark session needed."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -12,6 +13,7 @@ from sparkgrep.functions.tokenizer import tokenize_py
 from sparkgrep.functions.varint import gap_decode, gap_encode, varint_decode, varint_encode
 
 
+@pytest.mark.smoke
 @settings(max_examples=200, deadline=None)
 @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=500))
 def test_varint_roundtrip(vals):

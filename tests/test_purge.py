@@ -113,6 +113,7 @@ def corpus(spark):
     return docs
 
 
+@pytest.mark.smoke
 def test_purge_rewrites_only_affected_files(spark, corpus, tmp_path_factory):
     """Base (400 docs) + delta (60 docs) + a 'hash join'-only microbatch;
     deleting the microbatch must leave EVERY base file and every

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkgrep.operators import score as S
@@ -15,6 +16,7 @@ from sparkgrep.plans.manifest import read_manifest
 from sparkgrep.streaming import index_stream
 
 
+@pytest.mark.smoke
 def test_stream_index_equals_batch_build(spark, corpus, tmp_path):
     src = str(tmp_path / "landing")
     out = str(tmp_path / "stream_idx")

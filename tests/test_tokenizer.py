@@ -18,6 +18,7 @@ from sparkgrep.functions.tokenizer import (
 )
 
 
+@pytest.mark.smoke
 def test_simple_basic():
     assert tokenize_py("Hello, World! 42", "simple") == ["hello", "world", "42"]
     assert tokenize_py("", "simple") == []
@@ -89,6 +90,7 @@ def test_simple_col_is_native(spark):
     assert "pythonUDF" not in plan and "ArrowEvalPython" not in plan
 
 
+@pytest.mark.smoke
 def test_porter_reference_cases():
     for w, e in [("running", "run"), ("runs", "run"), ("caresses", "caress"),
                  ("relational", "relat"), ("sky", "sky"), ("東京", "東京")]:

@@ -139,6 +139,7 @@ def test_glob_uses_index_and_matches_sqlite(db, cs_index):
         assert got == want, pattern
 
 
+@pytest.mark.smoke
 def test_like_falls_back_to_scan(cs_index):
     """A case-insensitive predicate cannot use raw-case trigrams:
     like_candidates refuses (None) and like_search stays exact via the
@@ -166,6 +167,7 @@ def test_like_falls_back_to_scan(cs_index):
     assert got_cs == [0]
 
 
+@pytest.mark.smoke
 def test_highlight_parity(db, cs_index):
     from sparkgrep.operators.snippet import search_highlight
 

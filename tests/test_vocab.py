@@ -117,6 +117,7 @@ def synth(spark):
     return synth_corpus(spark, 200, seed=11).cache()
 
 
+@pytest.mark.smoke
 def test_single_field_col_is_content(spark, synth, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("vocab_sf")) + "/idx"
     build_index(synth, out, analyzer="simple", store_positions=True)

@@ -46,6 +46,7 @@ def test_okapi_falls_back(spark, corpus, tmp_path):
     assert (pruned["score"].to_numpy() == exact["score"].to_numpy()).all()
 
 
+@pytest.mark.smoke
 def test_single_term_and_empty(code_index):
     assert search_pruned(code_index, "varint", k=5).count() == \
         code_index.search("varint", k=5).count()

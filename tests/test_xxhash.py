@@ -5,11 +5,13 @@ from __future__ import annotations
 import random
 import string
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkgrep.functions.xxhash import term_bucket, xxhash64
 
 
+@pytest.mark.smoke
 def test_xxhash64_matches_spark(spark):
     rng = random.Random(7)
     words = [""] + [
