@@ -311,6 +311,13 @@ class IndexMeta:
             return "full"
         return "column" if self.fields else "none"
 
+    @property
+    def per_field(self) -> bool:
+        """True when the postings carry per-field streams (``tfs_cols``
+        / ``poss_cols``): a multi-field index stored above detail=none.
+        Otherwise every index stores the single-field layout."""
+        return bool(self.fields) and self.effective_detail() != "none"
+
 
 # v2 postings are BLOCK-ADDRESSABLE: doc_ids gap encoding resets at every
 # block boundary and per-block byte offsets for all three streams are
@@ -373,7 +380,7 @@ def postings_schema(meta: "IndexMeta") -> str:
     writer and every reader (explicit schemas keep empty dirs readable).
     A detail=none multi-field index stores the single-field layout (no
     per-field streams exist to store)."""
-    if meta.fields and meta.effective_detail() != "none":
+    if meta.per_field:
         return (
             POSTINGS_OUT_SCHEMA_MC_POS
             if meta.has_positions
@@ -1019,7 +1026,7 @@ def _make_partition_encoder(meta: IndexMeta):
     """
     frame_fn = (
         _encode_groups_frame_mc
-        if meta.fields and meta.effective_detail() != "none"
+        if meta.per_field
         else _encode_groups_frame
     )
 
@@ -1733,8 +1740,7 @@ def _finalize_index_write(
     # block_max only — the varint payloads never leave the scan). The
     # pruned serving path (operators/wand.py) memoizes this driver-side
     # so planning a MaxScore query schedules no metadata job.
-    mc = bool(meta.fields) and meta.effective_detail() != "none"
-    if mc:
+    if meta.per_field:
         # element-wise max of the per-field metadata across shards: the
         # per-field upper bounds / max tfs the weighted MaxScore planner
         # consumes (wand.plan_pruned). NULL-STRICT: a term with ANY
@@ -1774,7 +1780,7 @@ def _finalize_index_write(
             *extra,
         )
     )
-    if not mc:
+    if not meta.per_field:
         ubs = ubs.withColumn(
             "ub_cols", F.lit(None).cast("array<double>")
         ).withColumn("maxtf_cols", F.lit(None).cast("array<long>"))
@@ -1917,8 +1923,7 @@ def spimi_schema_for(meta: IndexMeta):
         TERM_FREQ_SCHEMA,
     )
 
-    multi = bool(meta.fields) and meta.effective_detail() != "none"
-    if multi:
+    if meta.per_field:
         return TERM_FREQ_MC_POS_SCHEMA if meta.has_positions else TERM_FREQ_MC_SCHEMA
     return TERM_FREQ_POS_SCHEMA if meta.has_positions else TERM_FREQ_SCHEMA
 

@@ -34,7 +34,7 @@ def _expected_postings(corpus: DataFrame, meta, use_lang: bool, positions: bool)
     configuration, via the declarative path (explode + groupBy)."""
     lang = F.col("lang") if use_lang and "lang" in corpus.columns else None
     fields = list(meta.fields or ())
-    collapse = bool(fields) and meta.effective_detail() == "none"
+    collapse = bool(fields) and not meta.per_field
 
     if fields:
         per_field = None
@@ -129,7 +129,7 @@ def integrity_check(
     meta = load_meta(index_dir)
     positions = bool(check_positions and meta.has_positions)
     idx = InvertedIndex(spark, index_dir)
-    multi = bool(meta.fields) and meta.effective_detail() != "none"
+    multi = meta.per_field
 
     exp, lens, keys = _expected_postings(corpus, meta, use_lang, positions)
     exp = exp.persist()

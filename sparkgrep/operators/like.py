@@ -12,10 +12,9 @@ and GLOB queries"). This is the engine's Spark-native analogue:
    positions (1:1 fold, so window i covers codepoints [i, i+3));
 2. candidates = docs matching ALL run phrases (inner doc_id joins of
    bucket-pruned posting decodes — never a corpus scan);
-3. a residual JVM-side ``LIKE``/``ILIKE`` filter over the candidates
-   makes the result exact (it re-checks case sensitivity, ``_``
-   single-char arity, run ordering/overlap, and runs shorter than a
-   trigram).
+3. a residual JVM-side regex filter over the candidates makes the
+   result exact (it re-checks case sensitivity, ``_`` single-char
+   arity, run ordering/overlap, and runs shorter than a trigram).
 
 The candidate set is a sound superset for both case modes: the index
 folds doc text with the same table the pattern runs are folded with,
@@ -81,10 +80,17 @@ def like_candidates(
     }
     if not runs:
         return None
+    return _runs_docs(index, runs)
+
+
+def _runs_docs(index, runs: set[str]) -> DataFrame:
+    """doc_ids (distinct) holding every folded literal run: a run's
+    trigrams at consecutive positions of one field — the index's phrase
+    starts."""
     cands = [
-        index._phrase_tf(
-            tuple(r[i : i + 3] for i in range(len(r) - 2))
-        ).select("doc_id")
+        index._phrase_starts_any(
+            tuple(r[i : i + 3] for i in range(len(r) - 2)), ()
+        ).select("doc_id").distinct()
         for r in sorted(runs)
     ]
     return reduce(lambda a, b: a.join(b, "doc_id"), cands)
@@ -181,15 +187,7 @@ def glob_search(
     }
     base = corpus
     if tri:
-        cands = [
-            index._phrase_tf(
-                tuple(r[i : i + 3] for i in range(len(r) - 2))
-            ).select("doc_id")
-            for r in sorted(tri)
-        ]
-        base = corpus.join(
-            reduce(lambda a, b: a.join(b, "doc_id"), cands), "doc_id", "left_semi"
-        )
+        base = corpus.join(_runs_docs(index, tri), "doc_id", "left_semi")
     return (
         base.filter(F.col(text_col).rlike(regex))
         .select("doc_id")
@@ -205,32 +203,30 @@ def like_search(
     text_col: str = "content",
 ) -> DataFrame:
     """doc_ids whose ``text_col`` matches the SQL LIKE ``pattern``,
-    ordered by doc_id. Exact (candidates + residual verify); the
-    case-sensitive residual is Spark's native ``like`` (JVM-side,
-    whole-stage codegen). The case-insensitive residual is a Java regex
-    under ``(?i)`` WITHOUT ``UNICODE_CASE`` — i.e. ASCII-only case
-    folding, which is exactly SQLite LIKE's documented behavior. Spark's
-    ``ilike`` (full Java Unicode lowercasing, e.g. U+0130 → 'i'+U+0307)
-    would both diverge from SQLite and break candidate soundness: the
-    trigram fold is a superset of the ASCII fold, not of Java's."""
+    ordered by doc_id. Exact (candidates + residual verify). Both
+    residuals are one literal Java regex (:func:`_like_regex`): Spark's
+    native ``like`` would read ``\\`` as its default escape character,
+    while SQLite LIKE has no default ESCAPE (``a\\%`` matches text
+    starting with ``a\\``). The case-insensitive one adds ``(?i)``
+    WITHOUT ``UNICODE_CASE`` — i.e. ASCII-only case folding, which is
+    exactly SQLite LIKE's documented behavior. Spark's ``ilike`` (full
+    Java Unicode lowercasing, e.g. U+0130 → 'i'+U+0307) would both
+    diverge from SQLite and break candidate soundness: the trigram fold
+    is a superset of the ASCII fold, not of Java's."""
     cand = like_candidates(index, pattern, case_insensitive)
     base = corpus
     if cand is not None:
         base = corpus.join(cand, "doc_id", "left_semi")
-    col = F.col(text_col)
-    if case_insensitive:
-        cond = col.rlike(_like_ci_regex(pattern))
-    else:
-        cond = col.like(pattern)
+    cond = F.col(text_col).rlike(_like_regex(pattern, case_insensitive))
     return base.filter(cond).select("doc_id").orderBy("doc_id")
 
 
-def _like_ci_regex(pattern: str) -> str:
-    """SQLite-faithful case-insensitive LIKE as a Java regex: '%' → .*,
-    '_' → ., everything else literal; (?i) without UNICODE_CASE gives
-    ASCII-only case equivalence; \\A..\\z anchors exactly (no
-    trailing-newline leniency)."""
-    parts = ["(?si)\\A"]
+def _like_regex(pattern: str, case_insensitive: bool) -> str:
+    """SQLite-faithful LIKE as a Java regex: '%' → .*, '_' → ., every
+    other character literal (backslash included — no default ESCAPE);
+    (?i) without UNICODE_CASE gives ASCII-only case equivalence;
+    \\A..\\z anchors exactly (no trailing-newline leniency)."""
+    parts = ["(?si)\\A" if case_insensitive else "(?s)\\A"]
     for ch in pattern:
         if ch == "%":
             parts.append(".*")

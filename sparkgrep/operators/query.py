@@ -8,11 +8,17 @@ min/max on ``term``) → decode varint postings and score in one numpy
 pass (`mapInPandas`) → deterministic ordered-fold aggregation per doc →
 distributed top-k. No join against a doc-length table: dl is stored in
 the posting payload, so a query touches ONLY its terms' shards.
+
+The query language (``search_expr``) has one evaluator for every index
+shape: each unit becomes a per-(doc, field) relation off ONE raw decode
+kernel (:func:`_decode_raw_gen`), colset-filtered and weight-folded to a
+per-doc tf (``InvertedIndex._unit_tf``), then ranked by one gated fold
+(``_rank_units``). A single-field or detail=none index is the one-field
+case of weight 1.0 (``InvertedIndex._expr_weights``).
 """
 
 from __future__ import annotations
 
-import math
 from typing import Iterator
 
 import numpy as np
@@ -25,9 +31,7 @@ from sparkgrep.functions.querylang import (
     ParsedQuery,
     Unit,
     parse_query,
-    plain_terms,
     star_slots,
-    stem_terms,
 )
 from sparkgrep.functions.tokenizer import tokenize_py
 from sparkgrep.functions.varint import blocked_gap_decode, delta_decode_segments, varint_decode
@@ -161,56 +165,18 @@ def _decode_score_mc_gen(
 
 
 def _decode_raw_gen(meta: IndexMeta, with_positions: bool = False, tomb=None):
-    """Decode postings to raw (term, doc_id, tf, dl[, positions]) rows —
-    the basis for AND / phrase / boolean scoring, where the fold needs
-    unit frequencies rather than precomputed contributions. ``tomb``
-    masks tombstone-deleted docs right after decode."""
-
-    block = meta.block_size
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples():
-                ids = blocked_gap_decode(r.doc_ids, r.n, block).astype(np.int64)
-                tfs = varint_decode(r.tfs).astype(np.int64)
-                keep = (
-                    _tomb_keep(ids, getattr(r, "layer_seq", 0), tomb)
-                    if tomb else None
-                )
-                dls = varint_decode(r.dls).astype(np.int64)
-                d = {
-                    "term": r.term,
-                    "doc_id": ids,
-                    "tf": tfs.astype(np.int32),
-                    "dl": dls.astype(np.int32),
-                }
-                frame = pd.DataFrame(d)
-                if with_positions:
-                    flat = delta_decode_segments(r.poss, tfs)
-                    frame["positions"] = [
-                        a.astype(np.int32) for a in np.split(flat, np.cumsum(tfs)[:-1])
-                    ]
-                if keep is not None:
-                    frame = frame[keep]
-                    if not len(frame):
-                        continue
-                outs.append(frame)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return gen
-
-
-def _decode_raw_mc_gen(meta: IndexMeta, with_positions: bool = False, tomb=None):
-    """Multi-field raw decode: one output row per (term, doc, FIELD)
-    with tf > 0 — the per-field streams (``tfs_cols``/``poss_cols``)
-    expand next to the shared doc_id/dl streams. Positions are
-    field-relative (they reset at each field start — pinned against
-    SQLite, so '^' anchors per field and phrases never span fields).
-    ``tomb`` masks tombstone-deleted docs exactly like the single-field
-    decode."""
-    nf = len(meta.fields)
+    """Decode postings to raw (term, doc_id, col, tf, dl[, positions])
+    rows, one per (term, doc, FIELD) with tf > 0 — the basis for AND /
+    phrase / prefix / NEAR scoring, where the fold needs unit
+    frequencies rather than precomputed contributions, and for the
+    merges. The per-field layout (:attr:`IndexMeta.per_field`) expands
+    its ``tfs_cols``/``poss_cols`` streams next to the shared doc_id/dl
+    streams, with field-relative positions (they reset at each field
+    start — pinned against SQLite, so '^' anchors per field and phrases
+    never span fields); the single-field layout decodes its ``tfs``/
+    ``poss`` streams as field 0. ``tomb`` masks tombstone-deleted docs
+    right after decode."""
+    per_field = meta.per_field
     block = meta.block_size
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -223,10 +189,12 @@ def _decode_raw_mc_gen(meta: IndexMeta, with_positions: bool = False, tomb=None)
                     _tomb_keep(ids, getattr(r, "layer_seq", 0), tomb)
                     if tomb else None
                 )
-                for c in range(nf):
-                    tfc = varint_decode(r.tfs_cols[c]).astype(np.int64)
+                tf_streams = r.tfs_cols if per_field else [r.tfs]
+                for c, tb in enumerate(tf_streams):
+                    tfc = varint_decode(tb).astype(np.int64)
                     if with_positions:
-                        flat = delta_decode_segments(r.poss_cols[c], tfc)
+                        pb = r.poss_cols[c] if per_field else r.poss
+                        flat = delta_decode_segments(pb, tfc)
                         plist = np.split(flat, np.cumsum(tfc)[:-1])
                     nz = tfc > 0
                     if keep is not None:
@@ -253,6 +221,13 @@ def _decode_raw_mc_gen(meta: IndexMeta, with_positions: bool = False, tomb=None)
     return gen
 
 
+def _raw_schema(with_positions: bool = False) -> str:
+    """Output DDL of :func:`_decode_raw_gen`."""
+    return "term string, doc_id long, col int, tf int, dl int" + (
+        ", positions array<int>" if with_positions else ""
+    )
+
+
 def _shift_by(i: int):
     # single-param closure: a 2-arg lambda would be bound as (element,
     # index) by Spark's higher-order-function API
@@ -262,14 +237,13 @@ def _shift_by(i: int):
     return f
 
 
-def _near_arrow_gen(lens: list[int], n: int, keys: list[str]):
+def _near_arrow_gen(lens: list[int], n: int):
     """``mapInArrow`` kernel of a NEAR group over its joined per-group
-    start arrays ``s0..s{k-1}`` (a group is one ``keys`` row: doc, or
-    doc and field): each Arrow batch is flattened — the row index is the
-    dense group id — and ONE positional-kernel call
-    (``positional.near_mask``, the vectorized
+    start arrays ``s0..s{k-1}`` (a group is one (doc_id, col) row): each
+    Arrow batch is flattened — the row index is the dense group id — and
+    ONE positional-kernel call (``positional.near_mask``, the vectorized
     ``querylang.near_supported``) marks every supported instance. Emits
-    (member, *keys, tf, dl) for satisfied groups, tf = the member's
+    (member, doc_id, col, tf, dl) for satisfied groups, tf = the member's
     supported-instance count."""
     import pyarrow as pa
 
@@ -295,7 +269,7 @@ def _near_arrow_gen(lens: list[int], n: int, keys: list[str]):
             if not sat.size:
                 continue
             cols = {"member": np.repeat(np.arange(k, dtype=np.int32), sat.size)}
-            for key in keys:
+            for key in ("doc_id", "col"):
                 v = b.column(key).to_numpy()
                 cols[key] = np.tile(v[sat], k)
             cols["tf"] = np.concatenate([tf[sat] for tf in tfs]).astype(np.int32)
@@ -829,7 +803,7 @@ class InvertedIndex:
         MaxScore pass 1/2. Contributions are bitwise-equal to the exact
         per-query path's ``_rank_units`` fold inputs (same float-op
         order; pinned by tests/test_wand_weighted.py)."""
-        if not self.meta.fields or self.meta.effective_detail() == "none":
+        if not self.meta.per_field:
             raise ValueError(
                 "weighted contributions need a multi-field index with "
                 "per-field tf streams (detail='full' or 'column')"
@@ -843,32 +817,28 @@ class InvertedIndex:
     def decode_raw(
         self, with_positions: bool = False, postings: DataFrame | None = None
     ) -> DataFrame:
-        """Every live posting as raw (term, doc_id, tf, dl[, positions])
-        rows — tombstone-deleted docs already masked out. This is the
-        lossless basis compaction re-merges from. On a multi-field index
-        rows are per (term, doc, FIELD) with a ``col`` column and
-        field-relative positions — exactly the multi-field SPIMI shape,
-        so compaction feeds them straight back through the merge. A
-        detail=none index stores (and therefore decodes) the plain
-        single-field shape — per-doc totals. ``postings`` substitutes a
-        pre-filtered slice of :attr:`postings` (e.g. the vocab views'
-        marker-free relation) so the filter pushes into the scan instead
-        of running after the decode kernel."""
+        """Every live posting as raw (term, doc_id[, col], tf, dl[,
+        positions]) rows — tombstone-deleted docs already masked out.
+        This is the lossless basis compaction re-merges from. On the
+        per-field layout rows are per (term, doc, FIELD) with a ``col``
+        column and field-relative positions — exactly the multi-field
+        SPIMI shape, so compaction feeds them straight back through the
+        merge; the single-field layout (single-field and detail=none
+        indexes: per-doc totals) drops ``col``, the single-field SPIMI
+        shape. ``postings`` substitutes a pre-filtered slice of
+        :attr:`postings` (e.g. the vocab views' marker-free relation) so
+        the filter pushes into the scan instead of running after the
+        decode kernel."""
         src = postings if postings is not None else self.postings
-        if self.meta.fields and self.meta.effective_detail() != "none":
-            schema = "term string, doc_id long, col int, tf int, dl int" + (
-                ", positions array<int>" if with_positions else ""
-            )
-            return src.mapInPandas(
-                _decode_raw_mc_gen(self.meta, with_positions, tomb=self._tomb_spec),
-                schema,
-            )
-        schema = "term string, doc_id long, tf int, dl int" + (
-            ", positions array<int>" if with_positions else ""
-        )
+        raw = self._decode_raw(src, with_positions)
+        return raw if self.meta.per_field else raw.drop("col")
+
+    def _decode_raw(self, src: DataFrame, with_positions: bool = False) -> DataFrame:
+        """:func:`_decode_raw_gen` over ``src`` postings rows, with this
+        handle's tombstone mask."""
         return src.mapInPandas(
             _decode_raw_gen(self.meta, with_positions, tomb=self._tomb_spec),
-            schema,
+            _raw_schema(with_positions),
         )
 
     def dead_ids_df(self, layer_seq: int) -> DataFrame | None:
@@ -910,198 +880,6 @@ class InvertedIndex:
 
         keys = (extra_keys or []) + ["doc_id"]
         return fold_contribs(contribs, terms_sorted, keys=keys)
-
-    def _raw_units(self, terms: list[str], with_positions: bool = False) -> DataFrame:
-        schema = "term string, doc_id long, tf int, dl int" + (
-            ", positions array<int>" if with_positions else ""
-        )
-        return self._matched(terms).mapInPandas(
-            _decode_raw_gen(self.meta, with_positions, tomb=self._tomb_spec),
-            schema,
-        )
-
-    def _prefix_tf(self, stem: str) -> DataFrame:
-        """(doc_id, tf, dl) for a prefix unit ``stem*``: decode every
-        posting whose term starts with the stem and SUM tfs per doc
-        (FTS5's prefix scoring model). The stem resolves driver-side to
-        its exact matching terms through the sorted term dictionary
-        (term_ubs sidecar), so the scan is the normal bucket-pruned +
-        term-pushdown path — no full-metadata sweep (plan-asserted in
-        tests/test_index.py); the sweep survives only as the documented
-        fallback inside ``_prefix_matched``."""
-        matched = self._prefix_matched(stem)
-        raw = matched.mapInPandas(
-            _decode_raw_gen(self.meta, tomb=self._tomb_spec),
-            "term string, doc_id long, tf int, dl int",
-        )
-        return raw.groupBy("doc_id").agg(
-            F.sum("tf").cast("int").alias("tf"), F.first("dl").alias("dl")
-        )
-
-    def _phrase_starts_any(
-        self, terms: tuple[str, ...], slots: tuple[int, ...]
-    ) -> DataFrame:
-        """(doc_id, dl, starts array<int>) of a phrase with PREFIX slots
-        ``slots`` — the one positional kernel behind plain phrases
-        (slots=()), FTS5 tail prefixes ('"a b"*', slots=(L-1,)) and FTS5
-        phrase-INTERNAL prefixes ('a* + b', probed and pinned in
-        tests/test_phrase_prefix.py). A plain slot contributes its exact
-        term's positions, a starred slot the per-doc UNION of positions
-        of every stored term matching the stem; instance starts are the
-        slot-shifted intersection (array_intersect in codegen). One
-        token occupies each position, so starts stay a set and tf =
-        |starts| for every slot mix. Docs missing any plain term or any
-        stem match drop at the pivot/join."""
-        if not self.meta.has_positions:
-            raise ValueError(
-                "phrase queries need an index built with store_positions=True"
-            )
-        star = set(slots)
-        plain = sorted({t for i, t in enumerate(terms) if i not in star})
-        stems = sorted({terms[i] for i in star})
-        j = None
-        if plain:
-            raw = self._raw_units(plain, with_positions=True)
-            j = (
-                raw.groupBy("doc_id")
-                .agg(
-                    F.first("dl").alias("dl"),
-                    F.map_from_entries(
-                        F.collect_list(F.struct("term", "positions"))
-                    ).alias("pmap"),
-                    F.count("*").alias("_nt"),
-                )
-                .filter(F.col("_nt") == len(plain))
-            )
-        stem_ix = {s: i for i, s in enumerate(stems)}
-        for s in stems:
-            cols = ["doc_id"] + (["dl"] if j is None else [])
-            r = self._prefix_positions(s).select(
-                *cols, F.col("tpos").alias(f"_tp{stem_ix[s]}")
-            )
-            j = r if j is None else j.join(r, "doc_id")
-
-        def src(i: int):
-            if i in star:
-                return F.col(f"_tp{stem_ix[terms[i]]}")
-            return F.element_at(F.col("pmap"), F.lit(terms[i]))
-
-        starts = src(0)
-        for i in range(1, len(terms)):
-            starts = F.array_intersect(starts, F.transform(src(i), _shift_by(i)))
-        return (
-            j.select("doc_id", "dl", F.array_sort(starts).alias("starts"))
-            .filter(F.size("starts") > 0)
-        )
-
-    def _phrase_starts(self, terms: tuple[str, ...]) -> DataFrame:
-        """(doc_id, dl, starts array<int>) for an ordered phrase —
-        the star-free case of :meth:`_phrase_starts_any`."""
-        return self._phrase_starts_any(terms, ())
-
-    def _phrase_tf(self, terms: tuple[str, ...]) -> DataFrame:
-        """(doc_id, tf, dl): phrase tf = |{p : term_i at p+i ∀i}|."""
-        return self._phrase_starts(terms).select(
-            "doc_id", "dl", F.size("starts").cast("int").alias("tf")
-        ).select("doc_id", "tf", "dl")
-
-    def _prefix_positions(self, stem: str) -> DataFrame:
-        """(doc_id, dl, tpos array<int>): per-doc UNION of positions of
-        every stored term matching the prefix stem."""
-        raw = self._prefix_matched(stem).mapInPandas(
-            _decode_raw_gen(self.meta, with_positions=True, tomb=self._tomb_spec),
-            "term string, doc_id long, tf int, dl int, positions array<int>",
-        )
-        return raw.groupBy("doc_id").agg(
-            F.first("dl").alias("dl"),
-            F.array_sort(F.flatten(F.collect_list("positions"))).alias("tpos"),
-        )
-
-    def _phrase_prefix_starts(self, terms: tuple[str, ...]) -> DataFrame:
-        """(doc_id, dl, starts) of a phrase whose LAST token is a prefix
-        stem — FTS5 '"a b"*' / 'a_b*' — via the general star-slot
-        kernel. Pinned against SQLite (tests/test_phrase_prefix.py): the
-        atom's tf is the instance count, df the docs with ≥1 instance,
-        '^' keeps only start 0."""
-        return self._phrase_starts_any(terms, (len(terms) - 1,))
-
-    def _unit_starts(self, u) -> DataFrame:
-        """(doc_id, dl, starts array<int>, asc) of a unit's instance
-        START positions — term: its positions; phrase: intersected
-        starts; prefix: union of matching terms' positions; starred
-        phrase slots (tail OR internal): stem-matched positions in the
-        slot-shifted intersection."""
-        slots = star_slots(u)
-        if slots:
-            if not self.meta.has_positions:
-                raise ValueError(
-                    "NEAR queries need an index built with store_positions=True"
-                )
-            if u.is_phrase:
-                return self._phrase_starts_any(u.terms, slots)
-            return self._prefix_positions(u.terms[0]).select(
-                "doc_id", "dl", F.col("tpos").alias("starts")
-            )
-        if u.is_phrase:
-            return self._phrase_starts(u.terms).select("doc_id", "dl", "starts")
-        return self._raw_units(list(u.terms), with_positions=True).select(
-            "doc_id", "dl", F.array_sort(F.col("positions")).alias("starts")
-        )
-
-    def _anchored_tf(self, u) -> DataFrame:
-        """(doc_id, tf, dl) for an anchored unit ``^u`` (FTS5 '^'): only
-        instances starting at token position 0 count, so tf ∈ {1} for
-        matching docs and df is the anchored-doc count — pinned against
-        SQLite FTS5 (a doc with the term at positions 0 and 5 scores as
-        tf=1)."""
-        if not self.meta.has_positions:
-            raise ValueError(
-                "anchored (^) queries need an index built with store_positions=True"
-            )
-        slots = star_slots(u)
-        if slots:
-            if u.is_phrase:
-                return self._phrase_starts_any(u.terms, slots).filter(
-                    F.array_contains("starts", 0)
-                ).select("doc_id", F.lit(1).cast("int").alias("tf"), "dl")
-            return (
-                self._prefix_positions(u.terms[0])
-                .filter(F.array_contains("tpos", 0))
-                .select("doc_id", F.lit(1).cast("int").alias("tf"), "dl")
-            )
-        if u.is_phrase:
-            return self._phrase_starts(u.terms).filter(
-                F.array_contains("starts", 0)
-            ).select("doc_id", F.lit(1).cast("int").alias("tf"), "dl")
-        raw = self._raw_units(list(u.terms), with_positions=True)
-        return raw.filter(F.array_contains("positions", 0)).select(
-            "doc_id", F.lit(1).cast("int").alias("tf"), "dl"
-        )
-
-    def _near_eval(self, group) -> DataFrame:
-        """(member int, doc_id, tf, dl) for a NEAR group's CONSTRAINED
-        member atoms (FTS5 semantics, ``querylang.near_supported``): rows
-        exist only for docs satisfying the proximity predicate, and tf
-        counts the member's SUPPORTED instances — those participating in
-        at least one selection spanning ≤ N intervening token positions.
-        One inner join chain over the members' per-doc start arrays
-        (docs missing any member can't match), then an Arrow-batched
-        kernel."""
-        if not self.meta.has_positions:
-            raise ValueError(
-                "NEAR queries need an index built with store_positions=True"
-            )
-        joined = None
-        for i, u in enumerate(group.phrases):
-            cols = ["doc_id"] + (["dl"] if i == 0 else [])
-            s = self._unit_starts(u).select(*cols, F.col("starts").alias(f"s{i}"))
-            joined = s if joined is None else joined.join(s, "doc_id")
-        # a phrase-prefix member spans len(terms) positions (tail = 1 token)
-        lens = [len(u.terms) for u in group.phrases]
-        return joined.mapInArrow(
-            _near_arrow_gen(lens, group.n, ["doc_id"]),
-            "member int, doc_id long, tf int, dl int",
-        )
 
     # -- public API ---------------------------------------------------------
 
@@ -1192,119 +970,47 @@ class InvertedIndex:
     def _search_parsed(
         self, pq: ParsedQuery, k: int, weights=None
     ) -> DataFrame:
-        if self.meta.fields and self.meta.effective_detail() == "none":
-            # detail=none: fields exist for colspec PARSING only — the
-            # index stores single-field-shaped total streams. Colset
-            # queries raise exactly like FTS5; per-column weights raise
-            # too (FTS5 recomputes per-column tf by re-tokenizing stored
-            # row content — this index stores no content).
-            self._check_detail_none(pq, weights)
-            unit_tf, groups, near_uids = self._unit_tf_sf(pq)
-        elif self.meta.fields:
-            unit_tf, groups, near_uids = self._unit_tf_mc(pq, weights)
-        else:
-            if weights is not None:
-                raise ValueError(
-                    "per-column weights need a multi-field index "
-                    "(build_index(..., fields=[...]))"
-                )
-            unit_tf, groups, near_uids = self._unit_tf_sf(pq)
+        w, nf = self._expr_weights(pq, weights)
+        unit_tf, groups, near_uids = self._unit_tf(pq, w, nf)
         unit_tf = unit_tf.persist()
         try:
             return self._rank_units(pq, unit_tf, groups, near_uids, k)
         finally:
             unit_tf.unpersist()
 
-    def _check_detail_none(self, pq: ParsedQuery, weights) -> None:
-        """Query gates for a detail=none index (FTS5 parity, probed):
-        column filters raise SQLite's exact complaint; weights raise
-        with the documented divergence (FTS5's slow content-rescan
-        fallback has nothing to rescan here — the index stores no
-        content, and detail=none stores no per-field tfs)."""
+    def _expr_weights(self, pq: ParsedQuery, weights) -> tuple[list[float], int]:
+        """(per-field weights ``w``, field count ``nf``) of the
+        query-language evaluators — this distributed one and
+        ``serve.LocalServer``'s — and their query gates. The per-field
+        layout folds its ``nf`` fields under FTS5's bm25() weights; every
+        other index is ONE field of weight 1.0 (bitwise-exact: 1.0·tf is
+        an exact int → float conversion). Gates (FTS5 parity, probed):
+        on detail=none, where fields exist for colspec PARSING only,
+        colset queries raise SQLite's exact complaint and weights raise
+        (FTS5 recomputes per-column tf by re-tokenizing stored row
+        content — this index stores no content and no per-field tfs); a
+        single-field index refuses weights."""
         from sparkgrep.functions.querylang import uses_colsets
 
-        if uses_colsets(pq):
-            raise ValueError("column queries are not supported (detail=none)")
-        if weights is not None:
+        if self.meta.per_field:
+            return self._weights_list(weights), len(self.meta.fields)
+        if self.meta.fields:
+            if uses_colsets(pq):
+                raise ValueError("column queries are not supported (detail=none)")
+            if weights is not None:
+                raise ValueError(
+                    "per-column weights are not supported on a detail=none "
+                    "index (no per-field tf streams; build with "
+                    "detail='column' or 'full')"
+                )
+        elif weights is not None:
             raise ValueError(
-                "per-column weights are not supported on a detail=none "
-                "index (no per-field tf streams; build with "
-                "detail='column' or 'full')"
+                "per-column weights need a multi-field index "
+                "(build_index(..., fields=[...]))"
             )
+        return [1.0], 1
 
-    def _unit_tf_sf(self, pq: ParsedQuery):
-        """Per-unit per-doc (tf, dl) relation for a SINGLE-FIELD index:
-        terms straight off the postings decode; phrases via position
-        intersection. Returns (unit_tf, near groups, member-uid map)."""
-        units = pq.units()
-        parts = []
-        term_units = [
-            u for u in units if not u.is_phrase and not u.prefix and not u.anchored
-        ]
-        if term_units:
-            terms = sorted({u.terms[0] for u in term_units})
-            raw = self._raw_units(terms)
-            parts.append(
-                raw.select(
-                    F.concat(F.lit("t:"), F.col("term")).alias("uid"),
-                    "doc_id", "tf", "dl",
-                )
-            )
-            # repeat occurrences of a term (FTS5 scores each textual
-            # occurrence as its own atom): relabel the same decoded rows
-            # under the occurrence uid
-            for u in term_units:
-                if u.occ:
-                    parts.append(
-                        raw.filter(F.col("term") == u.terms[0]).select(
-                            F.lit(u.uid).alias("uid"), "doc_id", "tf", "dl"
-                        )
-                    )
-        for u in units:
-            if u.anchored:
-                parts.append(
-                    self._anchored_tf(u).select(
-                        F.lit(u.uid).alias("uid"), "doc_id", "tf", "dl"
-                    )
-                )
-            elif u.prefix or u.stars:
-                rel = (
-                    self._phrase_starts_any(u.terms, star_slots(u)).select(
-                        "doc_id", F.size("starts").cast("int").alias("tf"), "dl"
-                    )
-                    if u.is_phrase
-                    else self._prefix_tf(u.terms[0])
-                )
-                parts.append(
-                    rel.select(F.lit(u.uid).alias("uid"), "doc_id", "tf", "dl")
-                )
-            elif u.is_phrase:
-                parts.append(
-                    self._phrase_tf(u.terms).select(
-                        F.lit(u.uid).alias("uid"), "doc_id", "tf", "dl"
-                    )
-                )
-        # NEAR groups (including those inside exclude expressions): one
-        # constrained-atom relation per distinct group — rows only for
-        # satisfying docs, tf = supported instances (FTS5 semantics)
-        groups = pq.near_groups()
-        near_uids: dict[int, list[str]] = {}
-        for gid, grp in enumerate(groups):
-            uids_g = [f"n{gid}:{u.uid}" for u in grp.phrases]
-            near_uids[gid] = uids_g
-            uid_arr = F.array(*[F.lit(x) for x in uids_g])
-            parts.append(
-                self._near_eval(grp).select(
-                    F.element_at(uid_arr, F.col("member") + 1).alias("uid"),
-                    "doc_id", "tf", "dl",
-                )
-            )
-        unit_tf = parts[0]
-        for p in parts[1:]:
-            unit_tf = unit_tf.unionByName(p)
-        return unit_tf, groups, near_uids
-
-    # -- multi-field (FTS5 multi-column) unit relations ---------------------
+    # -- per-(doc, field) unit relations ------------------------------------
 
     def _weights_list(self, weights) -> list[float]:
         """Per-field BM25 weights in field order. FTS5 parity (pinned):
@@ -1312,8 +1018,6 @@ class InvertedIndex:
         a dict keys by field name. Matching is weight-independent —
         weights only scale each field's tf contribution."""
         nf = len(self.meta.fields)
-        if not nf:
-            raise ValueError("per-column weights need a multi-field index")
         if weights is None:
             return [1.0] * nf
         if isinstance(weights, dict):
@@ -1321,14 +1025,8 @@ class InvertedIndex:
         w = [float(x) for x in weights]
         return (w + [1.0] * nf)[:nf]
 
-    def _raw_units_mc(self, terms: list[str], with_positions: bool = False) -> DataFrame:
-        schema = "term string, doc_id long, col int, tf int, dl int" + (
-            ", positions array<int>" if with_positions else ""
-        )
-        return self._matched(terms).mapInPandas(
-            _decode_raw_mc_gen(self.meta, with_positions, tomb=self._tomb_spec),
-            schema,
-        )
+    def _raw_units(self, terms: list[str], with_positions: bool = False) -> DataFrame:
+        return self._decode_raw(self._matched(terms), with_positions)
 
     def _wsum_mc(self, percol: DataFrame, w: list[float], cols: list[int], keys=("doc_id",)) -> DataFrame:
         """Collapse a per-(doc, field) relation to per-doc weighted tf:
@@ -1336,7 +1034,15 @@ class InvertedIndex:
         left-associated float fold — the DuckDB oracle mirrors the same
         order bitwise). A doc is kept when ANY colset field has an
         instance (presence is weight-independent: zero weights still
-        match, pinned against SQLite)."""
+        match, pinned against SQLite). A one-field colset (every
+        single-field index) needs no grouping: its rows are already one
+        per key, and w_c·tf_c is the whole fold."""
+        if len(cols) == 1:
+            c = cols[0]
+            tf = F.lit(float(w[c])) * F.col("tf").cast("double")
+            return percol.filter(F.col("col") == c).select(
+                *keys, tf.alias("tf"), "dl"
+            )
         aggs = [
             F.sum(F.when(F.col("col") == c, F.col("tf"))).alias(f"_t{c}")
             for c in cols
@@ -1352,15 +1058,22 @@ class InvertedIndex:
             pres = p if pres is None else (pres | p)
         return g.filter(pres).select(*keys, expr.alias("tf"), "dl")
 
-    def _phrase_starts_any_mc(
+    def _phrase_starts_any(
         self, terms: tuple[str, ...], slots: tuple[int, ...]
     ) -> DataFrame:
-        """Multi-field sibling of :meth:`_phrase_starts_any`:
-        (doc_id, col, dl, starts) per (doc, FIELD) for a phrase with
-        prefix slots ``slots`` — positions are field-relative, so the
-        slot-shifted intersection (and every stem-matched successor)
-        runs within one field and a phrase can never span fields (FTS5
-        parity)."""
+        """(doc_id, col, dl, starts array<int>) per (doc, FIELD) of a
+        phrase with PREFIX slots ``slots`` — the one positional kernel
+        behind plain phrases (slots=()), FTS5 tail prefixes ('"a b"*',
+        slots=(L-1,)) and FTS5 phrase-INTERNAL prefixes ('a* + b', probed
+        and pinned in tests/test_phrase_prefix.py). A plain slot
+        contributes its exact term's positions, a starred slot the
+        per-(doc, field) UNION of positions of every stored term matching
+        the stem; instance starts are the slot-shifted intersection
+        (array_intersect in codegen). Positions are field-relative, so a
+        phrase never spans fields (FTS5 parity). One token occupies each
+        position, so starts stay a set and tf = |starts| for every slot
+        mix. Docs missing any plain term or any stem match drop at the
+        pivot/join."""
         if not self.meta.has_positions:
             raise ValueError(
                 "phrase queries need an index built with store_positions=True"
@@ -1370,7 +1083,7 @@ class InvertedIndex:
         stems = sorted({terms[i] for i in star})
         j = None
         if plain:
-            raw = self._raw_units_mc(plain, with_positions=True)
+            raw = self._raw_units(plain, with_positions=True)
             j = (
                 raw.groupBy("doc_id", "col")
                 .agg(
@@ -1385,7 +1098,7 @@ class InvertedIndex:
         stem_ix = {s: i for i, s in enumerate(stems)}
         for s in stems:
             cols = ["doc_id", "col"] + (["dl"] if j is None else [])
-            r = self._prefix_positions_mc(s).select(
+            r = self._prefix_positions(s).select(
                 *cols, F.col("tpos").alias(f"_tp{stem_ix[s]}")
             )
             j = r if j is None else j.join(r, ["doc_id", "col"])
@@ -1403,104 +1116,80 @@ class InvertedIndex:
             .filter(F.size("starts") > 0)
         )
 
-    def _phrase_percol_mc(self, terms: tuple[str, ...]) -> DataFrame:
-        """(doc_id, col, dl, starts) of a plain phrase's instance starts
-        per (doc, FIELD) — the star-free case of
-        :meth:`_phrase_starts_any_mc`."""
-        return self._phrase_starts_any_mc(terms, ())
-
-    def _prefix_positions_mc(self, stem: str) -> DataFrame:
+    def _prefix_positions(self, stem: str) -> DataFrame:
         """(doc_id, col, dl, tpos): per-(doc, FIELD) union of positions
         of every stored term matching the prefix stem."""
-        raw = self._prefix_matched(stem).mapInPandas(
-            _decode_raw_mc_gen(
-                self.meta, with_positions=True, tomb=self._tomb_spec
-            ),
-            "term string, doc_id long, col int, tf int, dl int, positions array<int>",
-        )
+        raw = self._decode_raw(self._prefix_matched(stem), with_positions=True)
         return raw.groupBy("doc_id", "col").agg(
             F.first("dl").alias("dl"),
             F.array_sort(F.flatten(F.collect_list("positions"))).alias("tpos"),
         )
 
-    def _phrase_prefix_starts_mc(self, terms: tuple[str, ...]) -> DataFrame:
-        """Multi-field tail-prefix starts ('"a b"*') — the tail-slot
-        case of :meth:`_phrase_starts_any_mc`."""
-        return self._phrase_starts_any_mc(terms, (len(terms) - 1,))
-
-    def _unit_percol_mc(self, u) -> DataFrame:
+    def _unit_percol(self, u) -> DataFrame:
         """(doc_id, col, tf int, dl) for one unit per (doc, FIELD) —
-        before colset filtering/weighting. Anchored units (FTS5 '^')
-        count one instance per field whose position 0 matches (a row's
-        anchored tf is the weighted count of anchored FIELDS, pinned
-        against SQLite)."""
+        before colset filtering/weighting: terms straight off the
+        postings decode; phrase tf = instance count; prefixes sum the
+        stem's tfs (FTS5's prefix scoring model). Anchored units (FTS5
+        '^') count one instance per field whose position 0 matches (a
+        row's anchored tf is the weighted count of anchored FIELDS,
+        pinned against SQLite; a doc with the term at positions 0 and 5
+        scores as tf=1)."""
         slots = star_slots(u)
         if u.anchored:
             if not self.meta.has_positions:
                 raise ValueError(
                     "anchored (^) queries need an index built with store_positions=True"
                 )
-            if slots:
-                if u.is_phrase:
-                    return self._phrase_starts_any_mc(u.terms, slots).filter(
-                        F.array_contains("starts", 0)
-                    ).select("doc_id", "col", F.lit(1).cast("int").alias("tf"), "dl")
-                return (
-                    self._prefix_positions_mc(u.terms[0])
-                    .filter(F.array_contains("tpos", 0))
-                    .select("doc_id", "col", F.lit(1).cast("int").alias("tf"), "dl")
-                )
             if u.is_phrase:
-                return self._phrase_percol_mc(u.terms).filter(
-                    F.array_contains("starts", 0)
-                ).select("doc_id", "col", F.lit(1).cast("int").alias("tf"), "dl")
-            raw = self._raw_units_mc(list(u.terms), with_positions=True)
-            return raw.filter(F.array_contains("positions", 0)).select(
+                starts = self._phrase_starts_any(u.terms, slots)
+            elif slots:
+                starts = self._prefix_positions(u.terms[0]).withColumnRenamed(
+                    "tpos", "starts"
+                )
+            else:
+                starts = self._raw_units(
+                    list(u.terms), with_positions=True
+                ).withColumnRenamed("positions", "starts")
+            return starts.filter(F.array_contains("starts", 0)).select(
                 "doc_id", "col", F.lit(1).cast("int").alias("tf"), "dl"
             )
-        if slots:
-            if u.is_phrase:
-                return self._phrase_starts_any_mc(u.terms, slots).select(
-                    "doc_id", "col", F.size("starts").cast("int").alias("tf"), "dl"
-                )
-            raw = self._prefix_matched(u.terms[0]).mapInPandas(
-                _decode_raw_mc_gen(self.meta, tomb=self._tomb_spec),
-                "term string, doc_id long, col int, tf int, dl int",
+        if u.is_phrase:
+            return self._phrase_starts_any(u.terms, slots).select(
+                "doc_id", "col", F.size("starts").cast("int").alias("tf"), "dl"
             )
+        if slots:
+            raw = self._decode_raw(self._prefix_matched(u.terms[0]))
             return raw.groupBy("doc_id", "col").agg(
                 F.sum("tf").cast("int").alias("tf"), F.first("dl").alias("dl")
             )
-        if u.is_phrase:
-            return self._phrase_percol_mc(u.terms).select(
-                "doc_id", "col", F.size("starts").cast("int").alias("tf"), "dl"
-            )
-        return self._raw_units_mc([u.terms[0]]).select("doc_id", "col", "tf", "dl")
+        return self._raw_units([u.terms[0]]).select("doc_id", "col", "tf", "dl")
 
-    def _member_starts_mc(self, u) -> DataFrame:
-        """(doc_id, col, dl, starts) of a NEAR member's instance starts
-        per (doc, FIELD)."""
-        slots = star_slots(u)
-        if slots:
-            if not self.meta.has_positions:
-                raise ValueError(
-                    "NEAR queries need an index built with store_positions=True"
-                )
-            if u.is_phrase:
-                return self._phrase_starts_any_mc(u.terms, slots)
-            return self._prefix_positions_mc(u.terms[0]).select(
+    def _member_starts(self, u) -> DataFrame:
+        """(doc_id, col, dl, starts) of a NEAR member's instance START
+        positions per (doc, FIELD) — term: its positions; phrase:
+        intersected starts; prefix: union of matching terms' positions;
+        starred phrase slots (tail OR internal): stem-matched positions
+        in the slot-shifted intersection."""
+        if u.is_phrase:
+            return self._phrase_starts_any(u.terms, star_slots(u))
+        if star_slots(u):
+            return self._prefix_positions(u.terms[0]).select(
                 "doc_id", "col", "dl", F.col("tpos").alias("starts")
             )
-        if u.is_phrase:
-            return self._phrase_percol_mc(u.terms)
-        return self._raw_units_mc(list(u.terms), with_positions=True).select(
+        return self._raw_units(list(u.terms), with_positions=True).select(
             "doc_id", "col", "dl", F.array_sort(F.col("positions")).alias("starts")
         )
 
-    def _near_eval_mc(self, grp, w: list[float], cols: list[int]) -> DataFrame:
-        """(member int, doc_id, tf double, dl) for a NEAR group on a
-        multi-field index. FTS5 semantics (pinned): a selection lives
-        WITHIN one field — the per-(doc, field) start sets are joined and
-        tested independently per field — and a member's tf is the
+    def _near_eval(self, grp, w: list[float], cols: list[int]) -> DataFrame:
+        """(member int, doc_id, tf double, dl) for a NEAR group's
+        CONSTRAINED member atoms (FTS5 semantics,
+        ``querylang.near_supported``, pinned): rows exist only for docs
+        satisfying the proximity predicate, and a member's tf counts its
+        SUPPORTED instances — those participating in at least one
+        selection spanning ≤ N intervening token positions. A selection
+        lives WITHIN one field: the members' per-(doc, field) start sets
+        are inner-joined (docs missing any member can't match) and tested
+        per field by an Arrow-batched kernel, and a member's tf is the
         weighted sum of its supported-instance counts over the satisfied
         colset fields. Member df (handled by the caller's override) is
         the member's colset-restricted full presence."""
@@ -1510,26 +1199,26 @@ class InvertedIndex:
             )
         joined = None
         for i, u in enumerate(grp.phrases):
-            s = self._member_starts_mc(u).filter(F.col("col").isin(cols))
+            s = self._member_starts(u).filter(F.col("col").isin(cols))
             sel = ["doc_id", "col"] + (["dl"] if i == 0 else [])
             s = s.select(*sel, F.col("starts").alias(f"s{i}"))
             joined = s if joined is None else joined.join(s, ["doc_id", "col"])
+        # a phrase-prefix member spans len(terms) positions (tail = 1 token)
         lens = [len(u.terms) for u in grp.phrases]
         percol = joined.mapInArrow(
-            _near_arrow_gen(lens, grp.n, ["doc_id", "col"]),
+            _near_arrow_gen(lens, grp.n),
             "member int, doc_id long, col int, tf int, dl int",
         )
         return self._wsum_mc(percol, w, cols, keys=("member", "doc_id"))
 
-    def _unit_tf_mc(self, pq: ParsedQuery, weights):
-        """Multi-field sibling of :meth:`_unit_tf_sf`: every unit's
-        relation is colset-filtered per (doc, FIELD) and collapsed to a
-        weighted per-doc tf (:meth:`_wsum_mc`), so unit dfs (counted by
-        the shared ranking tail) are colset-restricted and scoring
-        follows FTS5's multi-column bm25 exactly. tf is DOUBLE here (a
-        weighted sum); the shared tail treats both the same."""
-        w = self._weights_list(weights)
-        nf = len(self.meta.fields)
+    def _unit_tf(self, pq: ParsedQuery, w: list[float], nf: int):
+        """Per-unit per-doc (tf, dl) relation over ``nf`` fields weighted
+        by ``w`` (see :meth:`_expr_weights`): every unit's relation is
+        colset-filtered per (doc, FIELD) and collapsed to a weighted
+        per-doc tf (:meth:`_wsum_mc`), so unit dfs (counted by the
+        ranking tail) are colset-restricted and scoring follows FTS5's
+        multi-column bm25 exactly. tf is DOUBLE (a weighted sum). Returns
+        (unit_tf, near groups, member-uid map)."""
         all_cols = list(range(nf))
         units = pq.units()
         parts = []
@@ -1542,7 +1231,7 @@ class InvertedIndex:
         ]
         if plain:
             terms = sorted({u.terms[0] for u in plain})
-            percol = self._raw_units_mc(terms).select(
+            percol = self._raw_units(terms).select(
                 "term", "doc_id", "col", "tf", "dl"
             )
             rel = self._wsum_mc(percol, w, all_cols, keys=("term", "doc_id"))
@@ -1558,11 +1247,14 @@ class InvertedIndex:
             cols = sorted(u.cols) if u.cols is not None else all_cols
             if not cols:
                 continue  # empty colset intersection: matches nothing
-            percol = self._unit_percol_mc(u).filter(F.col("col").isin(cols))
+            percol = self._unit_percol(u).filter(F.col("col").isin(cols))
             rel = self._wsum_mc(percol, w, cols)
             parts.append(
                 rel.select(F.lit(u.uid).alias("uid"), "doc_id", "tf", "dl")
             )
+        # NEAR groups (including those inside exclude expressions): one
+        # constrained-atom relation per distinct group — rows only for
+        # satisfying docs, tf = supported instances (FTS5 semantics)
         groups = pq.near_groups()
         near_uids: dict[int, list[str]] = {}
         for gid, grp in enumerate(groups):
@@ -1573,7 +1265,7 @@ class InvertedIndex:
                 continue  # unmatchable group: member atoms stay absent
             uid_arr = F.array(*[F.lit(x) for x in uids_g])
             parts.append(
-                self._near_eval_mc(grp, w, cols_g).select(
+                self._near_eval(grp, w, cols_g).select(
                     F.element_at(uid_arr, F.col("member") + 1).alias("uid"),
                     "doc_id", "tf", "dl",
                 )
@@ -1760,7 +1452,7 @@ class InvertedIndex:
             # survives only for shapes whose weighted decode can't run
             # (no per-field tf streams) so the error surface matches
             # per-query search.
-            if self.meta.fields and self.meta.effective_detail() != "none":
+            if self.meta.per_field:
                 weighted_w = self._weights_list(list(self.meta.rank_weights))
             else:
                 parts = []

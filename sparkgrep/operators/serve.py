@@ -122,7 +122,7 @@ def _common_docs(recs: list[Flat]) -> np.ndarray:
 
 def _wfold(docs, dls, tf_mat, w: list[float], cols: list[int]):
     """Fixed-order weighted fold over the colset — bitwise mirror of
-    ``query._wsum_mc``: tfw = (w_c0·tf_c0) + (w_c1·tf_c1) + … in
+    ``InvertedIndex._wsum_mc``: tfw = (w_c0·tf_c0) + (w_c1·tf_c1) + … in
     ascending field order, elementwise IEEE float64; presence
     (weight-independent) keeps a doc when ANY colset field has an
     instance. A single-field index folds its one column with weight 1.0
@@ -157,7 +157,7 @@ class LocalServer:
         self.max_resident_df = max_resident_df
         # per-field layout (multi-field, detail != none): tf and position
         # streams are stored per field; otherwise one field
-        self._mc = bool(self.meta.fields) and self.meta.effective_detail() != "none"
+        self._mc = self.meta.per_field
         self._nf = len(self.meta.fields) if self._mc else 1
         # tf tiers: term -> (df, docs asc, dls, tf matrix) or None (no
         # postings — a negative cache). _cache holds the total-tf stream
@@ -269,7 +269,7 @@ class LocalServer:
     def _fetch_tf(self, terms: list[str], per_field: bool) -> None:
         """tf tier for ``terms`` (one Spark job): the per-field streams
         (``_mc_cache``, the serving analogue of
-        ``query._decode_raw_mc_gen``) or the total-tf stream
+        ``query._decode_raw_gen``) or the total-tf stream
         (``_cache``, bag-of-words ``search``)."""
         cache = self._mc_cache if per_field else self._cache
         missing = [t for t in terms if t not in cache]
@@ -509,7 +509,7 @@ class LocalServer:
 
     def _unit_tf(self, u) -> tuple:
         """(docs asc, dls, tf matrix per field) for one unit — the
-        serving mirror of ``query._unit_percol_mc`` / ``_unit_tf_sf``:
+        serving mirror of ``InvertedIndex._unit_percol``:
         phrase tf = instance count; anchored units (FTS5 '^') count one
         instance per field whose position 0 starts one; prefixes sum
         the stem's tfs; terms come straight off the tf tier."""
@@ -535,7 +535,7 @@ class LocalServer:
     def _near_tf(self, grp, cols: list[int]) -> tuple:
         """(docs, dls, [tf matrix per member]) for a NEAR group's
         CONSTRAINED member atoms (numpy mirror of
-        ``InvertedIndex._near_eval``/``_near_eval_mc``): docs with a
+        ``InvertedIndex._near_eval``): docs with a
         satisfied (doc, field) in ``cols``, and per member per field the
         count of its SUPPORTED instances (``querylang.near_supported``'s
         rule) — 0 in fields where the group is unsatisfied, since a
@@ -578,23 +578,15 @@ class LocalServer:
 
     def _search_parsed(self, pq, k: int, weights) -> pd.DataFrame:
         """Expr serving: builds the same colset-filtered, weight-folded
-        per-unit relations as the distributed ``query._unit_tf_mc`` /
-        ``_unit_tf_sf`` (a single-field index is one field of weight
-        1.0), then the shared gated fold — rank- and score-identical to
-        ``InvertedIndex.search_expr`` (pinned in
-        tests/test_multicol_parity.py and tests/test_fts5_parity.py)."""
-        meta = self.meta
-        if meta.fields and not self._mc:
-            # detail=none stores the single-field layout: colsets raise
-            # (FTS5 parity), weights raise (no per-field tfs)
-            self.index._check_detail_none(pq, weights)
-        elif not meta.fields and weights is not None:
-            raise ValueError(
-                "per-column weights need a multi-field index "
-                "(build_index(..., fields=[...]))"
-            )
-        w = self.index._weights_list(weights) if self._mc else [1.0]
-        all_cols = list(range(self._nf))
+        per-unit relations as the distributed ``InvertedIndex._unit_tf``
+        under the same gates and field layout
+        (``InvertedIndex._expr_weights``: a single-field or detail=none
+        index is one field of weight 1.0), then the shared gated fold —
+        rank- and score-identical to ``InvertedIndex.search_expr``
+        (pinned in tests/test_multicol_parity.py,
+        tests/test_fts5_parity.py and tests/test_expr_equivalence.py)."""
+        w, nf = self.index._expr_weights(pq, weights)
+        all_cols = list(range(nf))
         units = pq.units()
         near_groups = pq.near_groups()
         if self._over_residency_cap(

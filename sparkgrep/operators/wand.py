@@ -172,9 +172,9 @@ def _filtered_decode_w_gen(
     the per-field tf streams are block-addressable too (offs_tfs_cols
     shares the doc_ids block grid), so only candidate-touching blocks of
     ANY stream are decoded. The weighted tf folds w_c·tf_c in ascending
-    field order (the exact path's ``_wsum_mc`` float sequence) and the
-    contribution uses the identical op order as ``bm25_contrib_col`` —
-    bitwise-equal scores (pinned by tests/test_wand_weighted.py).
+    field order (the exact path's ``InvertedIndex._wsum_mc`` float
+    sequence) and the contribution uses the identical op order as
+    ``bm25_contrib_col`` — bitwise-equal scores (pinned by tests/test_wand_weighted.py).
     Zero-contribution rows are kept: presence is weight-independent
     (FTS5 parity)."""
     k1, b, avgdl, n_docs = meta.k1, meta.b, meta.avgdl, meta.n_docs
@@ -315,7 +315,7 @@ def plan_pruned(
         list(meta.rank_weights) if getattr(meta, "rank_weights", ()) else None
     )
     if eff is not None:
-        if not meta.fields or meta.effective_detail() == "none":
+        if not meta.per_field:
             # weights are an error (single-field) or unsupported
             # (detail=none) on this index: the exact path raises the
             # canonical message — route there

@@ -693,7 +693,7 @@ def delete_batch_delta(
     # deleted doc_ids at decode, which covers marker postings too, and
     # the marker fast path (prefix_terms) never consults sidecar dfs —
     # deriving them would only inflate this batch's token correction.
-    coll = root.effective_detail() == "none"
+    coll = not root.per_field
     if root.fields:
         tf = spimi_term_freqs_mc(
             corpus_batch, list(root.fields), root.analyzer, use_lang,
@@ -805,7 +805,7 @@ def set_rank(index_dir: str, rank: str) -> IndexMeta:
             "divergence)"
         ) from None
     nf = len(meta.fields or ())
-    if not meta.fields or meta.effective_detail() == "none":
+    if not meta.per_field:
         raise ValueError(
             "rank configuration needs a multi-field index with per-field "
             "tf streams (build_index(..., fields=[...], detail='full' or "
@@ -956,11 +956,10 @@ def merge_delta_layers(
     if not any(len(g) > 1 for g in groups):
         return meta  # nothing mergeable: no-op
 
-    from sparkgrep.operators.query import _decode_raw_gen, _decode_raw_mc_gen
+    from sparkgrep.operators.query import _decode_raw_gen, _raw_schema
     from sparkgrep.operators.index_build import postings_schema
 
     schema = postings_schema(meta)
-    multi = bool(meta.fields) and meta.effective_detail() != "none"
     old_layers = list(meta.layers or ())
     old_stats = [tuple(x) for x in (meta.layer_stats or ())]
     stats_ok = len(old_stats) == 1 + len(old_layers)
@@ -989,25 +988,19 @@ def merge_delta_layers(
                 f"{d}/doc_lens"
             )
             dls = part if dls is None else dls.unionByName(part)
-        if multi:
-            raw = posts.mapInPandas(
-                _decode_raw_mc_gen(meta, meta.has_positions),
-                "term string, doc_id long, col int, tf int, dl int"
-                + (", positions array<int>" if meta.has_positions else ""),
-            )
-        else:
-            raw = posts.mapInPandas(
-                _decode_raw_gen(meta, meta.has_positions),
-                "term string, doc_id long, tf int, dl int"
-                + (", positions array<int>" if meta.has_positions else ""),
-            )
+        raw = posts.mapInPandas(
+            _decode_raw_gen(meta, meta.has_positions),
+            _raw_schema(meta.has_positions),
+        )
+        if not meta.per_field:
+            raw = raw.drop("col")  # the single-field SPIMI shape
         sent_cols = [
             F.lit("").alias("term"),
             F.col("doc_id"),
             F.lit(0).cast("int").alias("tf"),
             F.col("dl"),
         ]
-        if multi:
+        if meta.per_field:
             sent_cols.insert(2, F.lit(0).cast("int").alias("col"))
         if meta.has_positions:
             sent_cols.append(F.array().cast("array<int>").alias("positions"))
@@ -1094,7 +1087,7 @@ def compact_index(
         F.lit(0).cast("int").alias("tf"),
         F.col("dl"),
     ]
-    if meta.fields and meta.effective_detail() != "none":
+    if meta.per_field:
         # multi-field raw rows carry the field index; sentinels use 0
         # (detail=none decodes — and re-merges — single-field-shaped)
         sent_cols.insert(2, F.lit(0).cast("int").alias("col"))

@@ -343,7 +343,7 @@ def _rewrite_gen(meta_l: IndexMeta, dead_bc, n_buckets: int, out_cols: list[str]
     dead are dropped; the rest are re-encoded sans the dead slots. The
     output carries the partition ``bucket`` recomputed from the term
     (the same driver/build hash)."""
-    mc = bool(meta_l.fields) and meta_l.effective_detail() != "none"
+    mc = meta_l.per_field
     block = meta_l.block_size
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -359,7 +359,10 @@ def test_glob_like_regex_edge_parity(spark, tmp_path_factory):
     accepted 'abc\\n' for GLOB 'abc' (SQLite refuses; \\A..\\z now
     exact); (b) '&&' inside a GLOB class is Java regex INTERSECTION but
     an ordinary member to SQLite; (c) case-insensitive LIKE is
-    ASCII-only in SQLite — the ilike residual was full-Unicode."""
+    ASCII-only in SQLite — the ilike residual was full-Unicode; (d)
+    SQLite LIKE has no default ESCAPE, so a case-sensitive pattern's
+    '\\' is an ordinary character — Spark's like() read it as its
+    default escape."""
     import sqlite3
 
     from sparkgrep.operators.index_build import build_index
@@ -369,6 +372,7 @@ def test_glob_like_regex_edge_parity(spark, tmp_path_factory):
     texts = [
         "hello", "hello\n", "say hello\nthere", "a&b here", "b side",
         "Thank You\n", "thank you",
+        "a\\", "a%", "a\\xyz", "x_y", "x\\_y", "dir\\", "Ab\\cd", "ab\\cd",
     ]
     rows = [(i, t) for i, t in enumerate(texts)]
     corpus = spark.createDataFrame(rows, "doc_id long, content string")
@@ -400,4 +404,12 @@ def test_glob_like_regex_edge_parity(spark, tmp_path_factory):
             ).collect()
         ]
         assert got == want, ("like_ci", pat)
+
+    con.execute("PRAGMA case_sensitive_like=ON")
+    for pat in ["a\\%", "%\\_%", "%\\", "%b\\cd%", "%B\\cd%", "A%", "a%"]:
+        want = [r[0] for r in con.execute(
+            "SELECT id FROM t WHERE c LIKE ? ORDER BY id", (pat,)
+        )]
+        got = [r["doc_id"] for r in like_search(idx, corpus, pat).collect()]
+        assert got == want, ("like_cs", pat)
     con.close()

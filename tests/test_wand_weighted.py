@@ -104,7 +104,7 @@ def test_weighted_bound_is_sound_and_tighter_than_naive(mc_index):
     terms = ["needle", "alpha"]
     ubs = _weighted_ubs(mc_index, terms, w)
     meta = mc_index.meta
-    raw = mc_index._raw_units_mc(terms).toPandas()
+    raw = mc_index._raw_units(terms).toPandas()
     from sparkgrep.operators.score import idf as idf_fn
 
     for t in terms:
