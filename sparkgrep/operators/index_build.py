@@ -1012,6 +1012,13 @@ def _encode_groups_frame_mc(
     return pd.DataFrame(out)
 
 
+def group_encoder(meta: IndexMeta):
+    """The group encoder of an index's postings layout: per-(doc, field)
+    SPIMI rows → :func:`_encode_groups_frame_mc` on the per-field
+    layout, per-doc rows → :func:`_encode_groups_frame` otherwise."""
+    return _encode_groups_frame_mc if meta.per_field else _encode_groups_frame
+
+
 def _make_partition_encoder(meta: IndexMeta):
     """Streaming partition encoder for ``mapInPandas`` over input
     repartitioned by (term, shard) and sorted within partitions by
@@ -1024,11 +1031,7 @@ def _make_partition_encoder(meta: IndexMeta):
     batch's final (possibly incomplete) group is carried into the next
     batch; the last group flushes at end of partition.
     """
-    frame_fn = (
-        _encode_groups_frame_mc
-        if meta.per_field
-        else _encode_groups_frame
-    )
+    frame_fn = group_encoder(meta)
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None

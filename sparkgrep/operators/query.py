@@ -34,129 +34,77 @@ from sparkgrep.functions.querylang import (
     star_slots,
 )
 from sparkgrep.functions.tokenizer import tokenize_py
-from sparkgrep.functions.varint import blocked_gap_decode, delta_decode_segments, varint_decode
+from sparkgrep.functions.postings import candidate_blocks, decode_row
 from sparkgrep.operators.index_build import IndexMeta, load_meta
 from sparkgrep.operators.score import idf as idf_fn
 
 
-def _tomb_keep(ids: np.ndarray, layer_seq: int, tomb) -> np.ndarray | None:
-    """Decode-time tombstone mask: keep[i] is False when doc ids[i] was
-    deleted by a tombstone NEWER than this row's layer (``cut >
-    layer_seq``) — older layers only, so a doc_id re-appended after its
-    delete (an UPDATE) survives in its new layer. ``tomb`` is
-    [(cut, ids)] where ids is a sorted int64 array or a Broadcast of
-    one. None = nothing to mask for this layer."""
-    keep = None
-    for cut, dead in tomb:
-        if cut <= layer_seq:
-            continue
-        arr = dead.value if hasattr(dead, "value") else dead
-        m = ~np.isin(ids, arr, assume_unique=False)
-        keep = m if keep is None else (keep & m)
-    return keep
-
-
 def _decode_score_gen(
     meta: IndexMeta,
-    idf_by_term: dict[str, float] | None = None,
+    w: list[float] | None = None,
+    idf_map: dict[str, float] | None = None,
     tomb=None,
+    candidates: np.ndarray | None = None,
 ):
-    """Decode-and-score kernel. ``idf_by_term`` (required for LAYERED
-    indexes, where a row's stored df is layer-local) carries the global
-    idf per term computed driver-side from summed layer dfs; when absent
-    (single-layer index) the row's own global df is used — both paths
-    produce the identical double (same idf_fn on the same df). ``tomb``
-    (tombstoned index) masks deleted docs right after decode."""
+    """Decode-and-score kernel: (term, doc_id, contrib) per posting.
+
+    ``w=None`` scores the total-tf stream (plain OR). With per-field
+    weights ``w`` the tf is FTS5's per-column weighted sum Σ_c w_c·tf_c
+    off the per-field streams, folded in ascending field order — the
+    left-associated float sequence of the exact path's ``_wsum_mc``, so
+    contributions are bitwise-equal to ``_rank_units``'s fold inputs.
+    Presence stays weight-independent (zero weights still match, FTS5
+    parity), so zero-contribution rows are kept.
+
+    ``idf_map`` (required for LAYERED indexes, where a row's stored df
+    is layer-local) carries the global idf per term computed
+    driver-side from summed layer dfs; when absent the row's own global
+    df is used — the identical double either way (same idf_fn on the
+    same df). ``tomb`` masks tombstone-deleted docs at decode.
+    ``candidates`` (sorted doc ids, wand pass 2) decodes only the blocks
+    whose doc range holds a candidate and keeps only candidate docs."""
     k1, b, avgdl, n_docs = meta.k1, meta.b, meta.avgdl, meta.n_docs
-    variant, block = meta.idf_variant, meta.block_size
+    variant = meta.idf_variant
+    cand = None if candidates is None else np.sort(candidates)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             outs = []
             for r in pdf.itertuples():
-                if idf_by_term is not None and r.term not in idf_by_term:
+                if idf_map is not None and r.term not in idf_map:
                     # a fully-deleted term (summed df ≤ 0): every one of
-                    # its postings is masked below — skip the row
+                    # its postings is masked — skip the row
                     continue
-                ids = blocked_gap_decode(r.doc_ids, r.n, block)
-                tfs = varint_decode(r.tfs).astype(np.int64)
-                dls = varint_decode(r.dls).astype(np.int64)
-                if tomb:
-                    keep = _tomb_keep(ids, getattr(r, "layer_seq", 0), tomb)
-                    if keep is not None:
-                        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                        if not ids.size:
-                            continue
+                blocks = None
+                if cand is not None:
+                    blocks = candidate_blocks(r, cand)
+                    if not blocks.size:
+                        continue
+                ids, dls, tf = decode_row(
+                    r, meta, fields=w is not None, blocks=blocks, tomb=tomb
+                )[:3]
+                if cand is not None:
+                    at = np.searchsorted(cand, ids)
+                    keep = cand[np.minimum(at, cand.size - 1)] == ids
+                    ids, dls, tf = ids[keep], dls[keep], tf[keep]
+                if not ids.size:
+                    continue
+                if w is None:
+                    tfs = tf[:, 0]
+                else:
+                    tfs = w[0] * tf[:, 0].astype(np.float64)
+                    for c in range(1, tf.shape[1]):
+                        tfs = tfs + w[c] * tf[:, c].astype(np.float64)
                 idf = (
-                    idf_by_term[r.term]
-                    if idf_by_term is not None
+                    idf_map[r.term]
+                    if idf_map is not None
                     else idf_fn(n_docs, r.df, variant)
                 )
                 contrib = idf * (tfs * (k1 + 1.0)) / (
                     tfs + (k1 * ((1.0 - b) + ((b * dls) / avgdl)))
                 )
                 outs.append(
-                    pd.DataFrame(
-                        {"term": r.term, "doc_id": ids.astype(np.int64), "contrib": contrib}
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return gen
-
-
-def _decode_score_mc_gen(
-    meta: IndexMeta,
-    w: list[float],
-    idf_by_term: dict[str, float] | None = None,
-    tomb=None,
-):
-    """WEIGHTED decode-and-score kernel for multi-field indexes: the
-    per-(term, doc) tf is FTS5's per-column weighted sum Σ_c w_c·tf_c,
-    folded in ascending field order with the identical left-associated
-    float sequence as the exact path's ``_wsum_mc`` Spark expression
-    (w_c·tf_c added one field at a time) so contributions are
-    bitwise-equal to ``_rank_units``'s ``bm25_contrib_col`` output.
-    Presence stays weight-independent (zero weights still match — a row
-    decodes for every doc in the posting list, FTS5 parity), so
-    zero-contribution rows are NOT dropped. ``idf_by_term`` / ``tomb``
-    exactly as in :func:`_decode_score_gen`."""
-    k1, b, avgdl, n_docs = meta.k1, meta.b, meta.avgdl, meta.n_docs
-    variant, block = meta.idf_variant, meta.block_size
-    nf = len(meta.fields)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples():
-                if idf_by_term is not None and r.term not in idf_by_term:
-                    continue  # fully-deleted term (summed df ≤ 0)
-                ids = blocked_gap_decode(r.doc_ids, r.n, block)
-                dls = varint_decode(r.dls).astype(np.int64)
-                wtf = None
-                for c in range(nf):
-                    tfc = varint_decode(r.tfs_cols[c]).astype(np.float64)
-                    e = w[c] * tfc
-                    wtf = e if wtf is None else wtf + e
-                if tomb:
-                    keep = _tomb_keep(ids, getattr(r, "layer_seq", 0), tomb)
-                    if keep is not None:
-                        ids, wtf, dls = ids[keep], wtf[keep], dls[keep]
-                        if not ids.size:
-                            continue
-                idf = (
-                    idf_by_term[r.term]
-                    if idf_by_term is not None
-                    else idf_fn(n_docs, r.df, variant)
-                )
-                contrib = idf * (wtf * (k1 + 1.0)) / (
-                    wtf + (k1 * ((1.0 - b) + ((b * dls) / avgdl)))
-                )
-                outs.append(
-                    pd.DataFrame(
-                        {"term": r.term, "doc_id": ids.astype(np.int64), "contrib": contrib}
-                    )
+                    pd.DataFrame({"term": r.term, "doc_id": ids, "contrib": contrib})
                 )
             if outs:
                 yield pd.concat(outs, ignore_index=True)
@@ -175,45 +123,33 @@ def _decode_raw_gen(meta: IndexMeta, with_positions: bool = False, tomb=None):
     start — pinned against SQLite, so '^' anchors per field and phrases
     never span fields); the single-field layout decodes its ``tfs``/
     ``poss`` streams as field 0. ``tomb`` masks tombstone-deleted docs
-    right after decode."""
-    per_field = meta.per_field
-    block = meta.block_size
+    at decode."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             outs = []
             for r in pdf.itertuples():
-                ids = blocked_gap_decode(r.doc_ids, r.n, block).astype(np.int64)
-                dls = varint_decode(r.dls).astype(np.int64)
-                keep = (
-                    _tomb_keep(ids, getattr(r, "layer_seq", 0), tomb)
-                    if tomb else None
-                )
-                tf_streams = r.tfs_cols if per_field else [r.tfs]
-                for c, tb in enumerate(tf_streams):
-                    tfc = varint_decode(tb).astype(np.int64)
-                    if with_positions:
-                        pb = r.poss_cols[c] if per_field else r.poss
-                        flat = delta_decode_segments(pb, tfc)
-                        plist = np.split(flat, np.cumsum(tfc)[:-1])
-                    nz = tfc > 0
-                    if keep is not None:
-                        nz &= keep
-                    sel = np.flatnonzero(nz)
+                d = decode_row(r, meta, fields=True, positions=with_positions, tomb=tomb)
+                # flat positions run field by field: field c's instances
+                # are pos[bounds[c]:bounds[c + 1]]
+                bounds = np.concatenate(([0], np.cumsum(d.tf.sum(axis=0))))
+                for c in range(d.tf.shape[1]):
+                    tfc = d.tf[:, c]
+                    sel = np.flatnonzero(tfc > 0)
                     if not sel.size:
                         continue
-                    d = {
+                    frame = pd.DataFrame({
                         "term": r.term,
-                        "doc_id": ids[sel],
+                        "doc_id": d.ids[sel],
                         "col": np.full(sel.size, c, dtype=np.int32),
                         "tf": tfc[sel].astype(np.int32),
-                        "dl": dls[sel].astype(np.int32),
-                    }
-                    frame = pd.DataFrame(d)
+                        "dl": d.dls[sel].astype(np.int32),
+                    })
                     if with_positions:
-                        frame["positions"] = [
-                            plist[j].astype(np.int32) for j in sel
-                        ]
+                        plist = np.split(
+                            d.pos[bounds[c]:bounds[c + 1]], np.cumsum(tfc)[:-1]
+                        )
+                        frame["positions"] = [plist[j].astype(np.int32) for j in sel]
                     outs.append(frame)
             if outs:
                 yield pd.concat(outs, ignore_index=True)
@@ -789,28 +725,28 @@ class InvertedIndex:
             return self.postings.filter(pred)
         return self.postings.filter(F.col("bucket").isin(buckets) & pred)
 
-    def _contribs(self, terms: list[str]) -> DataFrame:
-        idf_map = self._layered_idf_map(terms)
-        return self._matched(terms).mapInPandas(
-            _decode_score_gen(self.meta, idf_map, tomb=self._tomb_spec),
-            "term string, doc_id long, contrib double",
-        )
-
-    def _contribs_weighted(self, terms: list[str], w: list[float]) -> DataFrame:
-        """Per-(term, doc) WEIGHTED BM25 contributions (tf = Σ_c w_c·tf_c
-        in fixed field order) off the per-field tf streams — the
-        single-decode basis for weighted batched serving and weighted
-        MaxScore pass 1/2. Contributions are bitwise-equal to the exact
-        per-query path's ``_rank_units`` fold inputs (same float-op
-        order; pinned by tests/test_wand_weighted.py)."""
-        if not self.meta.per_field:
+    def _contribs(
+        self,
+        terms: list[str],
+        w: list[float] | None = None,
+        candidates: np.ndarray | None = None,
+    ) -> DataFrame:
+        """Per-(term, doc) BM25 contributions off one decode
+        (:func:`_decode_score_gen`): plain over the total-tf streams, or
+        WEIGHTED (tf = Σ_c w_c·tf_c in fixed field order) over the
+        per-field streams — the single-decode basis for batched serving
+        and MaxScore pass 1/2, bitwise-equal to the exact per-query
+        path's ``_rank_units`` fold inputs (pinned by
+        tests/test_wand_weighted.py). ``candidates`` restricts the
+        decode to candidate-touching blocks (MaxScore pass 2)."""
+        if w is not None and not self.meta.per_field:
             raise ValueError(
                 "weighted contributions need a multi-field index with "
                 "per-field tf streams (detail='full' or 'column')"
             )
         idf_map = self._layered_idf_map(terms)
         return self._matched(terms).mapInPandas(
-            _decode_score_mc_gen(self.meta, w, idf_map, tomb=self._tomb_spec),
+            _decode_score_gen(self.meta, w, idf_map, self._tomb_spec, candidates),
             "term string, doc_id long, contrib double",
         )
 
@@ -1442,8 +1378,8 @@ class InvertedIndex:
             # persisted rank configuration (set_rank): the plain batched
             # fold scores the unweighted TOTAL streams, so the batch
             # decodes WEIGHTED contributions instead (one shared decode,
-            # _decode_score_mc_gen — tf = Σ_c w_c·tf_c in the exact
-            # path's float order) and reuses the same single fold keyed
+            # _decode_score_gen with weights — tf = Σ_c w_c·tf_c in the
+            # exact path's float order) and reuses the same single fold keyed
             # (query_id, doc_id). Bitwise-consistent with per-query
             # search under the config: restricting the global
             # sorted-term fold to a query's terms preserves its sorted
@@ -1474,11 +1410,7 @@ class InvertedIndex:
                 [], "query_id string, rank int, doc_id long, score double"
             )
         all_terms = sorted({t for _, t in qterm_rows})
-        contribs = (
-            self._contribs_weighted(all_terms, weighted_w)
-            if weighted_w is not None
-            else self._contribs(all_terms)
-        )
+        contribs = self._contribs(all_terms, weighted_w)
         qterms = self.spark.createDataFrame(qterm_rows, "query_id string, term string")
         fanned = contribs.join(F.broadcast(qterms), "term")
         scored = self._fold_scores(fanned, all_terms, extra_keys=["query_id"])

@@ -18,17 +18,19 @@ left-associated order (``wand.seq_fold``, one strictly sequential add
 per term — NOT reduceat/np.sum, whose pairwise summation diverges from
 the Spark fold by 1 ulp), same (score desc, doc_id asc) tie-break.
 
-Resident tiers, each decoded once per term (or prefix stem):
-
-- tf tiers — per term (df, docs ascending, dls, tf matrix): one column
-  (the total-tf stream) for bag-of-words ``search``, one column per
-  field for the query language on a multi-field index;
-- the flat positional tier (phrase, NEAR and ``^``) — per term or stem,
-  :class:`Flat`: one (doc row, field, position) entry per instance,
-  sorted. Phrase starts and NEAR support come from ONE vectorized
-  kernel over these arrays (``functions/positional.py``), for every
-  document of the query at once. A single-field index is the one-field
-  case of the same code.
+One resident cache, one entry per term or ``stem*`` (:class:`Postings`),
+decoded once through the postings decoder (``functions/postings.py``):
+docs ascending, dls, the per-field tf matrix (the total-tf stream as one
+column on every other layout), the stored df and — exactly when the
+index stores positions — one flat (doc row, field, position) entry per
+instance, sorted. A ``stem*`` entry is the union of its matching terms
+(tfs summed, positions merged). Bag-of-words ``search`` scores the
+matrix's row sums (the writer's own definition of the total stream),
+the query language folds its columns under the field weights, and
+phrase starts and NEAR support come from ONE vectorized kernel over the
+flat positions (``functions/positional.py``), for every document of the
+query at once. A single-field index is the one-field case of the same
+code.
 """
 
 from __future__ import annotations
@@ -47,12 +49,8 @@ from sparkgrep.functions.querylang import (
     star_slots,
     stem_terms,
 )
+from sparkgrep.functions.postings import decode_row
 from sparkgrep.functions.tokenizer import tokenize_py
-from sparkgrep.functions.varint import (
-    blocked_gap_decode,
-    delta_decode_segments,
-    varint_decode,
-)
 from sparkgrep.operators.query import InvertedIndex
 from sparkgrep.operators.score import idf as idf_fn
 
@@ -65,18 +63,22 @@ _EMPTY = pd.DataFrame(
 )
 
 
-class Flat(NamedTuple):
-    """Flat positional postings — of one term, of every term matching a
-    prefix stem, or of a unit's instance starts: per-doc ``docs``
-    (ascending, distinct) and ``dls``, and one (``row``, ``field``,
-    ``pos``) entry per instance sorted by (row, field, pos), ``row``
-    indexing ``docs``. Positions are field-relative."""
+class Postings(NamedTuple):
+    """A resident entry — a term's postings, a ``stem*`` union, or a
+    unit's instance starts: per-doc ``docs`` (ascending, distinct) and
+    ``dls``; the tf matrix ``tf`` [docs, fields] (None for starts); the
+    stored ``df`` (a union's matched-doc count); and on a positional
+    index one (``row``, ``field``, ``pos``) entry per instance sorted by
+    (row, field, pos), ``row`` indexing ``docs``. Positions are
+    field-relative."""
 
     docs: np.ndarray
     dls: np.ndarray
-    row: np.ndarray
-    field: np.ndarray
-    pos: np.ndarray
+    tf: np.ndarray | None
+    df: int
+    row: np.ndarray | None = None
+    field: np.ndarray | None = None
+    pos: np.ndarray | None = None
 
 
 def _check_distinct(term: str, ids_sorted: np.ndarray) -> None:
@@ -92,27 +94,7 @@ def _check_distinct(term: str, ids_sorted: np.ndarray) -> None:
         )
 
 
-def _merge_flat(parts: list[Flat], term: str | None = None) -> Flat:
-    """One :class:`Flat` over several — a term's shard rows (``term``
-    given: their docs must be distinct) or a stem's matching terms."""
-    if not parts:
-        e = np.empty(0, np.int64)
-        return Flat(e, e, e, e, e)
-    ids = np.concatenate([p.docs for p in parts])
-    docs, inv = np.unique(ids, return_inverse=True)
-    if term is not None and docs.size < ids.size:
-        _check_distinct(term, np.sort(ids))
-    dls = np.empty(docs.size, np.int64)
-    dls[inv] = np.concatenate([p.dls for p in parts])
-    off = np.cumsum([0] + [p.docs.size for p in parts[:-1]])
-    row = inv[np.concatenate([p.row + o for p, o in zip(parts, off)])]
-    field = np.concatenate([p.field for p in parts])
-    pos = np.concatenate([p.pos for p in parts])
-    order = np.lexsort((pos, field, row))
-    return Flat(docs, dls, row[order], field[order], pos[order])
-
-
-def _common_docs(recs: list[Flat]) -> np.ndarray:
+def _common_docs(recs: list[Postings]) -> np.ndarray:
     """Docs holding an instance in every one of ``recs``."""
     common = recs[0].docs
     for r in recs[1:]:
@@ -159,222 +141,120 @@ class LocalServer:
         # streams are stored per field; otherwise one field
         self._mc = self.meta.per_field
         self._nf = len(self.meta.fields) if self._mc else 1
-        # tf tiers: term -> (df, docs asc, dls, tf matrix) or None (no
-        # postings — a negative cache). _cache holds the total-tf stream
-        # (one column, plain bag-of-words search); _mc_cache one column
-        # per field (the query language on a multi-field index)
-        self._cache: dict[str, tuple | None] = {}
-        self._mc_cache: dict[str, tuple | None] = {}
-        # prefix tf tier: stem -> (docs asc, dls, tf matrix) with tfs
-        # integer-summed over every index term starting with the stem
-        self._xcache: dict[str, tuple] = {}
-        # flat positional tier (phrase, NEAR, '^'): term -> Flat, built
-        # once at fetch/warm time
-        self._pcache: dict[str, Flat] = {}
-        # prefix positional tier: stem -> Flat over the union of every
-        # matching term's instances
-        self._xpcache: dict[str, Flat] = {}
-
-    def _seq_col(self) -> list[str]:
-        """The postings rows' layer column — present only on tombstoned
-        indexes (the decode-time mask is cut-aware per layer)."""
-        return ["layer_seq"] if getattr(self.index, "_tomb_spec", None) else []
-
-    def _keep(self, r, ids: np.ndarray) -> np.ndarray | None:
-        """Tombstone mask for one collected shard row (numpy mirror of
-        query._tomb_keep) — None when nothing masks this row."""
-        spec = getattr(self.index, "_tomb_spec", None)
-        if not spec:
-            return None
-        from sparkgrep.operators.query import _tomb_keep
-
-        return _tomb_keep(ids, int(r["layer_seq"]), spec)
-
-    # -- decode ---------------------------------------------------------------
-
-    def _decode_tf_rows(self, rows, per_field: bool) -> dict[str, tuple]:
-        """term -> (df, docs asc, dls, tf matrix) of collected shard rows
-        — one tf column per field (``tfs_cols``) when ``per_field``, else
-        the total ``tfs`` stream — tombstone-masked, docs distinct."""
-        parts: dict[str, list] = {}
-        for r in rows:
-            ids = blocked_gap_decode(
-                r["doc_ids"], int(r["n"]), self.meta.block_size
-            ).astype(np.int64)
-            dls = varint_decode(r["dls"]).astype(np.int64)
-            streams = r["tfs_cols"] if per_field else [r["tfs"]]
-            tf = np.stack(
-                [varint_decode(b).astype(np.int64) for b in streams], axis=1
-            )
-            keep = self._keep(r, ids)
-            if keep is not None:
-                ids, dls, tf = ids[keep], dls[keep], tf[keep]
-            parts.setdefault(r["term"], []).append((int(r["df"]), ids, dls, tf))
-        out = {}
-        for t, ps in parts.items():
-            ids = np.concatenate([p[1] for p in ps])
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            _check_distinct(t, ids)
-            if ids.size:
-                dls = np.concatenate([p[2] for p in ps])[order]
-                tf = np.concatenate([p[3] for p in ps])[order]
-                out[t] = (ps[0][0], ids, dls, tf)
-        return out
-
-    def _decode_pos_rows(self, rows) -> dict[str, Flat]:
-        """term -> :class:`Flat` of collected shard rows (tombstone-
-        masked, docs distinct per term)."""
-        parts: dict[str, list[Flat]] = {}
-        for r in rows:
-            ids = blocked_gap_decode(
-                r["doc_ids"], int(r["n"]), self.meta.block_size
-            ).astype(np.int64)
-            dls = varint_decode(r["dls"]).astype(np.int64)
-            streams = (
-                zip(r["tfs_cols"], r["poss_cols"]) if self._mc
-                else [(r["tfs"], r["poss"])]
-            )
-            rows_c, fields_c, pos_c = [], [], []
-            for c, (tb, pb) in enumerate(streams):
-                tf = varint_decode(tb).astype(np.int64)
-                rows_c.append(np.repeat(np.arange(ids.size), tf))
-                fields_c.append(np.full(int(tf.sum()), c, np.int64))
-                pos_c.append(delta_decode_segments(pb, tf))
-            row = np.concatenate(rows_c)
-            field = np.concatenate(fields_c)
-            pos = np.concatenate(pos_c)
-            keep = self._keep(r, ids)
-            if keep is not None:
-                inst = keep[row]
-                row = (np.cumsum(keep) - 1)[row[inst]]
-                field, pos = field[inst], pos[inst]
-                ids, dls = ids[keep], dls[keep]
-            parts.setdefault(r["term"], []).append(Flat(ids, dls, row, field, pos))
-        return {t: _merge_flat(ps, term=t) for t, ps in parts.items()}
-
-    def _pos_select(self) -> list[str]:
-        """Columns the positional tiers collect (the index must store
-        positions)."""
-        if not self.meta.has_positions:
-            raise ValueError(
-                "phrase/NEAR/anchored queries need an index built with "
-                "store_positions=True"
-            )
-        streams = ["tfs_cols", "poss_cols"] if self._mc else ["tfs", "poss"]
-        return ["term", "df", "n", "doc_ids", "dls", *streams, *self._seq_col()]
+        # the one resident cache: term -> Postings, (stem, "*") -> the
+        # stem's union; a term without postings holds an empty entry
+        self._cache: dict = {}
 
     # -- fetch ----------------------------------------------------------------
 
-    def _fetch_tf(self, terms: list[str], per_field: bool) -> None:
-        """tf tier for ``terms`` (one Spark job): the per-field streams
-        (``_mc_cache``, the serving analogue of
-        ``query._decode_raw_gen``) or the total-tf stream
-        (``_cache``, bag-of-words ``search``)."""
-        cache = self._mc_cache if per_field else self._cache
-        missing = [t for t in terms if t not in cache]
-        if not missing:
-            return
-        streams = ["tfs_cols"] if per_field else ["tfs"]
-        rows = (
-            self.index._matched(missing)
-            .select("term", "df", "n", "doc_ids", "dls", *streams, *self._seq_col())
-            .collect()
-        )
-        got = self._decode_tf_rows(rows, per_field)
-        for t in missing:
-            cache[t] = got.get(t)
+    def _columns(self) -> list[str]:
+        """The postings columns an entry decodes from."""
+        meta = self.meta
+        cols = ["term", "df", "n", "doc_ids", "dls", "tfs_cols" if self._mc else "tfs"]
+        if meta.has_positions:
+            cols.append("poss_cols" if self._mc else "poss")
+        if self.index._tomb_spec:
+            # the decode-time tombstone mask is cut-aware per layer
+            cols.append("layer_seq")
+        return cols
 
-    def _fetch_pos(self, terms: list[str]) -> None:
-        """Flat positional tier for ``terms`` (one Spark job)."""
-        missing = [t for t in terms if t not in self._pcache]
-        if not missing:
-            return
-        rows = self.index._matched(missing).select(*self._pos_select()).collect()
-        got = self._decode_pos_rows(rows)
-        for t in missing:
-            self._pcache[t] = got.get(t) or _merge_flat([])
+    def _decode(self, rows) -> dict[str, list[Postings]]:
+        """term -> its collected shard rows, decoded (tombstone-masked)."""
+        parts: dict[str, list[Postings]] = {}
+        for r in rows:
+            d = decode_row(
+                r, self.meta, fields=True, positions=self.meta.has_positions,
+                tomb=self.index._tomb_spec,
+            )
+            parts.setdefault(r.term, []).append(
+                Postings(d.ids, d.dls, d.tf, int(r.df), d.row, d.field, d.pos)
+            )
+        return parts
 
-    def _fetch_prefix(self, stem: str) -> tuple:
-        """``stem*`` tf tier: (docs ascending, dls, tf matrix — one
-        column per field on the per-field layout) with tfs integer-summed
-        over every index term starting with the stem. The stem resolves
-        through the term dictionary into a bucket-pruned scan
-        (InvertedIndex._prefix_matched); cached per stem."""
-        hit = self._xcache.get(stem)
-        if hit is not None:
-            return hit
-        streams = ["tfs_cols"] if self._mc else ["tfs"]
-        rows = (
-            self.index._prefix_matched(stem)
-            .select("term", "df", "n", "doc_ids", "dls", *streams, *self._seq_col())
-            .collect()
-        )
-        recs = list(self._decode_tf_rows(rows, self._mc).values())
-        if not recs:
+    def _merge(self, parts: list[Postings], term: str | None = None) -> Postings:
+        """One entry over several — a term's shard rows (``term`` given:
+        their docs must be distinct) or a stem's matching terms (a union:
+        tfs summed per doc, positions merged)."""
+        if not parts:
             e = np.empty(0, np.int64)
-            out = (e, e, np.zeros((0, self._nf), np.int64))
+            pos = (e, e, e) if self.meta.has_positions else ()
+            return Postings(e, e, np.zeros((0, self._nf), np.int64), 0, *pos)
+        if len(parts) == 1:
+            docs, dls, tf, _df, row, field, pos = parts[0]
         else:
-            ids = np.concatenate([r[1] for r in recs])
-            docs = np.unique(ids)
-            pos = np.searchsorted(docs, ids)
+            ids = np.concatenate([p.docs for p in parts])
+            docs, inv = np.unique(ids, return_inverse=True)
+            if term is not None and docs.size < ids.size:
+                _check_distinct(term, np.sort(ids))
+            dls = np.empty(docs.size, np.int64)
+            dls[inv] = np.concatenate([p.dls for p in parts])  # same on every term row
             tf = np.zeros((docs.size, self._nf), np.int64)
-            np.add.at(tf, pos, np.concatenate([r[3] for r in recs]))  # order-free
-            dls = np.zeros(docs.size, np.int64)
-            dls[pos] = np.concatenate([r[2] for r in recs])  # same on every term row
-            out = (docs, dls, tf)
-        self._xcache[stem] = out
-        return out
+            np.add.at(tf, inv, np.concatenate([p.tf for p in parts]))  # order-free
+            row = field = pos = None
+            if self.meta.has_positions:
+                off = np.cumsum([0] + [p.docs.size for p in parts[:-1]])
+                row = inv[np.concatenate([p.row + o for p, o in zip(parts, off)])]
+                field = np.concatenate([p.field for p in parts])
+                pos = np.concatenate([p.pos for p in parts])
+        df = parts[0].df if term is not None else int(docs.size)
+        if row is None:
+            return Postings(docs, dls, tf, df)
+        order = np.lexsort((pos, field, row))
+        return Postings(docs, dls, tf, df, row[order], field[order], pos[order])
 
-    def _fetch_prefix_pos(self, stem: str) -> Flat:
-        """``stem*`` positional tier: one :class:`Flat` over every term
-        starting with the stem (NEAR members, '^', starred phrases)."""
-        hit = self._xpcache.get(stem)
-        if hit is not None:
-            return hit
-        rows = self.index._prefix_matched(stem).select(*self._pos_select()).collect()
-        out = _merge_flat(list(self._decode_pos_rows(rows).values()))
-        self._xpcache[stem] = out
-        return out
+    def _fetch(self, terms: list[str]) -> None:
+        """Entries for ``terms``: one Spark job for every missing term."""
+        missing = [t for t in terms if t not in self._cache]
+        if not missing:
+            return
+        rows = self.index._matched(missing).select(*self._columns()).collect()
+        got = self._decode(rows)
+        for t in missing:
+            self._cache[t] = self._merge(got.get(t, []), term=t)
+
+    def _term(self, t: str) -> Postings:
+        self._fetch([t])
+        return self._cache[t]
+
+    def _fetch_stem(self, stem: str) -> Postings:
+        """``stem*`` entry: the union of every index term starting with
+        the stem. The stem resolves through the term dictionary into a
+        bucket-pruned scan (InvertedIndex._prefix_matched); one Spark job,
+        cached per stem."""
+        key = (stem, "*")
+        hit = self._cache.get(key)
+        if hit is None:
+            rows = self.index._prefix_matched(stem).select(*self._columns()).collect()
+            hit = self._cache[key] = self._merge(
+                [self._merge(ps, term=t) for t, ps in self._decode(rows).items()]
+            )
+        return hit
 
     def warm(self, queries: list[str]) -> "LocalServer":
-        """Prefetch postings for a query workload (one Spark job per
-        tier): bag-of-words terms, and for the query language the tiers
-        ``search_expr`` reads — tf streams for bare terms, prefix tiers
-        for stems, positions for phrase/anchored units and NEAR members.
-        On a multi-field index the bare terms' per-field tier is warmed
-        (plain unweighted ``search`` additionally reads the total-tf
-        tier)."""
+        """Prefetch the entries a query workload reads: ONE Spark job for
+        every term — bag-of-words tokens and the query language's plain
+        terms, phrase slots and NEAR members included — plus one per
+        ``stem*``. A query that :meth:`_over_residency_cap` would
+        delegate is skipped: the cap bounds what warming pulls resident
+        too."""
         meta = self.meta
         terms: set[str] = set()
-        pterms: set[str] = set()
+        stems: set[str] = set()
         for q in queries:
             # plain search() is bag-of-words: tokens the query-language
             # parser would consume as operators (OR/NOT/...) still score
             # there — warm them too so neither entry point misses
-            terms.update(tokenize_py(q, meta.analyzer))
-            pq = parse_query(q, meta.analyzer, fields=meta.fields or None)
-            members = [u for g in pq.near_groups() for u in g.phrases]
-            for u, positional in [
-                (u, u.is_phrase or u.anchored) for u in pq.units()
-            ] + [(u, True) for u in members]:
-                if star_slots(u) and not u.is_phrase:
-                    if positional:
-                        self._fetch_prefix_pos(u.terms[0])
-                    else:
-                        self._fetch_prefix(u.terms[0])
-                elif positional:
-                    pterms.update(plain_terms(u))
-                    for s in stem_terms(u):
-                        self._fetch_prefix_pos(s)
-                else:
-                    terms.add(u.terms[0])
-        if self._mc:
-            self._fetch_tf(sorted(terms), per_field=True)
-        if not self._mc or not meta.rank_weights:
-            self._fetch_tf(sorted(terms), per_field=False)
-        if pterms:
-            self._fetch_pos(sorted(pterms))
+            q_terms = set(tokenize_py(q, meta.analyzer))
+            units = parse_query(q, meta.analyzer, fields=meta.fields or None).units()
+            q_terms.update(t for u in units for t in plain_terms(u))
+            q_stems = {s for u in units for s in stem_terms(u)}
+            if self._over_residency_cap(sorted(q_terms), sorted(q_stems)):
+                continue
+            terms |= q_terms
+            stems |= q_stems
+        self._fetch(sorted(terms))
+        for s in sorted(stems):
+            self._fetch_stem(s)
         return self
 
     def _over_residency_cap(self, terms: list[str], stems: list[str] = ()) -> bool:
@@ -422,7 +302,7 @@ class LocalServer:
             return empty
         if self._over_residency_cap(terms):
             return self.index.search(query_text, k).toPandas()
-        self._fetch_tf(terms, per_field=False)
+        self._fetch(terms)
         k1, b, avgdl, n_docs = meta.k1, meta.b, meta.avgdl, meta.n_docs
         # LAYERED index: a shard row's stored df is layer-local — use the
         # summed global dfs from the layered term_ubs sidecars instead
@@ -433,15 +313,16 @@ class LocalServer:
         )
         ids_parts, tix_parts, contrib_parts = [], [], []
         for ti, t in enumerate(terms):
-            rec = self._cache[t]
-            if rec is None:
+            ids, dls, tf, df = self._cache[t][:4]
+            if not ids.size:
                 continue
-            df, ids, dls, tf = rec
             # single layer: df in the payload is the GLOBAL document
             # frequency (same on every shard row) — no aggregation needed
             df_g = layered_dfs.get(t, 0) if layered_dfs is not None else df
             idf = idf_fn(n_docs, df_g, meta.idf_variant)
-            tfs = tf[:, 0]
+            # the total-tf stream IS the per-field tfs' sum (the writer's
+            # tf_tot = tfc.sum(axis=1)): exact ints, bitwise-equal scores
+            tfs = tf.sum(axis=1)
             contrib = idf * (tfs * (k1 + 1.0)) / (
                 tfs + (k1 * ((1.0 - b) + ((b * dls) / avgdl)))
             )
@@ -471,11 +352,7 @@ class LocalServer:
 
     # -- boolean / phrase query language ------------------------------------
 
-    def _term_pos(self, t: str) -> Flat:
-        self._fetch_pos([t])
-        return self._pcache[t]
-
-    def _groups(self, fl: Flat, universe: np.ndarray, cols=None):
+    def _groups(self, fl: Postings, universe: np.ndarray, cols=None):
         """``fl``'s instances inside the ``universe`` docs (and ``cols``
         fields) as the kernel's sorted dense (group, pos)."""
         inst, g = group_ids(universe, fl.docs, fl.row, fl.field, self._nf)
@@ -484,35 +361,39 @@ class LocalServer:
         in_cols = np.isin(fl.field[inst], cols)
         return g[in_cols], fl.pos[inst][in_cols]
 
-    def _starts(self, u) -> Flat:
+    def _starts(self, u) -> Postings:
         """Instance START positions of unit ``u`` per (doc, field) —
         term: its positions; prefix: the stem's union; phrase (plain or
         with starred slots, tail or internal): the kernel's slot-shifted
         intersection over every slot's flat postings — plain slots from
-        the term tier, starred slots from the stem tier (numpy mirror of
+        their term's entry, starred slots from the stem's (numpy mirror of
         ``InvertedIndex._phrase_starts_any``). Phrases never span fields
         (positions are field-relative)."""
+        if not self.meta.has_positions:
+            raise ValueError(
+                "phrase/NEAR/anchored queries need an index built with "
+                "store_positions=True"
+            )
         slots = star_slots(u)
-        if not u.is_phrase:
-            t = u.terms[0]
-            return self._fetch_prefix_pos(t) if slots else self._term_pos(t)
         recs = [
-            self._fetch_prefix_pos(t) if i in slots else self._term_pos(t)
+            self._fetch_stem(t) if i in slots else self._term(t)
             for i, t in enumerate(u.terms)
         ]
+        if not u.is_phrase:
+            return recs[0]
         common = _common_docs(recs)
         g, start = phrase_starts([self._groups(r, common) for r in recs])
         ranks, row = np.unique(g // self._nf, return_inverse=True)
         docs = common[ranks]
         dls = recs[0].dls[np.searchsorted(recs[0].docs, docs)]
-        return Flat(docs, dls, row, g % self._nf, start)
+        return Postings(docs, dls, None, 0, row, g % self._nf, start)
 
     def _unit_tf(self, u) -> tuple:
         """(docs asc, dls, tf matrix per field) for one unit — the
         serving mirror of ``InvertedIndex._unit_percol``:
         phrase tf = instance count; anchored units (FTS5 '^') count one
         instance per field whose position 0 starts one; prefixes sum
-        the stem's tfs; terms come straight off the tf tier."""
+        the stem's tfs; terms come straight off their entry."""
         nf = self._nf
         if u.anchored or u.is_phrase:
             fl = self._starts(u)
@@ -522,15 +403,8 @@ class LocalServer:
             ).reshape(-1, nf)
             has = tf.any(axis=1)
             return fl.docs[has], fl.dls[has], tf[has]
-        if star_slots(u):
-            return self._fetch_prefix(u.terms[0])
-        cache = self._mc_cache if self._mc else self._cache
-        self._fetch_tf([u.terms[0]], self._mc)
-        rec = cache[u.terms[0]]
-        if rec is None:
-            e = np.empty(0, np.int64)
-            return e, e, np.zeros((0, nf), np.int64)
-        return rec[1:]
+        t = u.terms[0]
+        return (self._fetch_stem(t) if star_slots(u) else self._term(t))[:3]
 
     def _near_tf(self, grp, cols: list[int]) -> tuple:
         """(docs, dls, [tf matrix per member]) for a NEAR group's
@@ -589,27 +463,14 @@ class LocalServer:
         all_cols = list(range(nf))
         units = pq.units()
         near_groups = pq.near_groups()
+        terms = sorted({t for u in units for t in plain_terms(u)})
         if self._over_residency_cap(
-            sorted({t for u in units for t in plain_terms(u)}),
-            sorted({s for u in units for s in stem_terms(u)}),
+            terms, sorted({s for u in units for s in stem_terms(u)})
         ):
             return self.index._search_parsed(pq, k, weights).toPandas()
-        # batch each tier's fetch into one job: positions for the plain
-        # slots of phrase/anchored units and NEAR members (every stem's
-        # positions come from the memoized _fetch_prefix_pos), tf streams
-        # for bare terms
-        pos_units = [u for u in units if u.is_phrase or u.anchored]
-        pos_units += [u for g in near_groups for u in g.phrases]
-        self._fetch_tf(
-            sorted({
-                u.terms[0] for u in units
-                if not u.is_phrase and not u.prefix and not u.anchored
-            }),
-            self._mc,
-        )
-        pos_terms = sorted({t for u in pos_units for t in plain_terms(u)})
-        if pos_terms:
-            self._fetch_pos(pos_terms)
+        # one job for every plain term (NEAR members are units too);
+        # stems are fetched per stem on first use
+        self._fetch(terms)
 
         # per-unit postings; unit df = matched-doc count (== stored df
         # for terms); drop no-match units like the distributed path

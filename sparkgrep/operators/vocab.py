@@ -37,8 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparkgrep.operators.query import InvertedIndex, _tomb_keep
-from sparkgrep.functions.varint import blocked_gap_decode, varint_decode
+from sparkgrep.functions.postings import decode_row
+from sparkgrep.operators.query import InvertedIndex
 
 _SINGLE_FIELD_NAME = "content"
 
@@ -63,9 +63,9 @@ def _main_postings(index: InvertedIndex) -> DataFrame:
 
 def _partials_gen(meta, per_col: bool, tomb):
     """Decode kernel emitting per-(term[, col]) PARTIAL counts: one output
-    row per posting row (per field when ``per_col``), never per doc."""
-    block = meta.block_size
-    nf = len(meta.fields) if meta.fields else 0
+    row per posting row (per field when ``per_col``), never per doc —
+    docs with tf > 0 and their tf sum, per column of the decoded tf
+    matrix (the total stream is one column)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -74,31 +74,13 @@ def _partials_gen(meta, per_col: bool, tomb):
             docs: list[int] = []
             cnts: list[int] = []
             for r in pdf.itertuples():
-                keep = None
-                if tomb:
-                    ids = blocked_gap_decode(r.doc_ids, r.n, block)
-                    keep = _tomb_keep(ids, getattr(r, "layer_seq", 0), tomb)
-                if per_col and nf:
-                    for c in range(nf):
-                        tfc = varint_decode(r.tfs_cols[c]).astype(np.int64)
-                        nz = tfc > 0
-                        if keep is not None:
-                            nz &= keep
-                        d = int(nz.sum())
-                        if d:
-                            terms.append(r.term)
-                            cols.append(c)
-                            docs.append(d)
-                            cnts.append(int(tfc[nz].sum()))
-                else:
-                    tfs = varint_decode(r.tfs).astype(np.int64)
-                    if keep is not None:
-                        tfs = tfs[keep]
-                    if tfs.size:
+                tf = decode_row(r, meta, fields=per_col, tomb=tomb).tf
+                for c, (d, n) in enumerate(zip((tf > 0).sum(axis=0), tf.sum(axis=0))):
+                    if d:
                         terms.append(r.term)
-                        cols.append(0)
-                        docs.append(int(tfs.size))
-                        cnts.append(int(tfs.sum()))
+                        cols.append(c)
+                        docs.append(int(d))
+                        cnts.append(int(n))
             if terms:
                 out = {"term": terms, "doc": np.asarray(docs, dtype=np.int64),
                        "cnt": np.asarray(cnts, dtype=np.int64)}

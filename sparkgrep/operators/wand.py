@@ -16,9 +16,10 @@ transparently falls back to exact scoring):
    terms only raises scores).
 3. If Σ_{t∈R} UB_t < θ, no doc outside pass 1's match set can reach the
    top-k. Candidates = pass-1 docs with s_E(doc) + Σ_R UB_t ≥ θ.
-4. Pass 2: full scoring with the decode UDF filtering postings to the
-   candidate set (broadcast numpy membership test inside the Arrow
-   batch), then the standard fold + top-k.
+4. Pass 2: full scoring with the one decode-and-score kernel
+   (``query._decode_score_gen``) given the candidate set: it decodes only
+   candidate-touching blocks and keeps only candidate docs, then the
+   standard fold + top-k.
 
 Results are rank- and score-identical to the exact path by construction
 (pass 2 recomputes true scores; pruning only removes docs provably
@@ -27,16 +28,12 @@ below θ) — pinned by tests/test_wand.py.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkgrep.functions.tokenizer import tokenize_py
-from sparkgrep.functions.varint import varint_decode
-from sparkgrep.operators.query import InvertedIndex, _tomb_keep
+from sparkgrep.operators.query import InvertedIndex
 from sparkgrep.operators.score import idf as idf_fn
 
 
@@ -79,172 +76,6 @@ def seq_fold(
         # next left-associated addition
         scores[pos[m]] += contribs[m]
     return docs, scores
-
-
-def _filtered_decode_gen(
-    meta,
-    candidates: np.ndarray,
-    idf_map: dict[str, float] | None = None,
-    tomb=None,
-):
-    """Pass-2 decoder with TRUE block skipping: the v2 postings format
-    stores per-block first-doc_ids (block_min) and byte offsets for all
-    three varint streams, so only blocks whose doc-id range intersects
-    the candidate set are decoded at all — pass-2 work is proportional
-    to candidate-touching blocks, not to posting-list length.
-
-    ``idf_map`` / ``tomb`` mirror the exact path's layered handling
-    (query.py ``_decode_score_gen``): on a layered index a row's stored
-    df is layer-local, so the global idf ships from the driver, and
-    tombstone-deleted doc_ids are masked right after decode (only in
-    rows from layers older than the tombstone) — both required for
-    bitwise identity with the exact fold."""
-    k1, b, avgdl, n_docs = meta.k1, meta.b, meta.avgdl, meta.n_docs
-    variant = meta.idf_variant
-    cand = np.sort(candidates)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples():
-                if idf_map is not None and r.term not in idf_map:
-                    continue  # fully-deleted term: every posting masked
-                bmin = np.asarray(r.block_min, dtype=np.int64)
-                # block holding each candidate (blocks partition the
-                # sorted doc space: block i covers [bmin[i], bmin[i+1]))
-                bi = np.searchsorted(bmin, cand, side="right") - 1
-                sel = np.unique(bi[bi >= 0])
-                if sel.size == 0:
-                    continue
-                o_ids = np.asarray(r.offs_ids, dtype=np.int64)
-                o_tfs = np.asarray(r.offs_tfs, dtype=np.int64)
-                o_dls = np.asarray(r.offs_dls, dtype=np.int64)
-                buf_ids, buf_tfs, buf_dls = r.doc_ids, r.tfs, r.dls
-                id_parts, tf_parts, dl_parts = [], [], []
-                for i in sel:
-                    # each block is independently decodable: gaps reset
-                    # at the block head (first value absolute)
-                    id_parts.append(
-                        np.cumsum(
-                            varint_decode(buf_ids[o_ids[i]:o_ids[i + 1]]).astype(np.int64)
-                        )
-                    )
-                    tf_parts.append(varint_decode(buf_tfs[o_tfs[i]:o_tfs[i + 1]]))
-                    dl_parts.append(varint_decode(buf_dls[o_dls[i]:o_dls[i + 1]]))
-                ids = np.concatenate(id_parts)
-                keep = np.searchsorted(cand, ids)
-                keep = (keep < len(cand)) & (cand[np.clip(keep, 0, len(cand) - 1)] == ids)
-                if not keep.any():
-                    continue
-                tfs = np.concatenate(tf_parts).astype(np.int64)[keep]
-                dls = np.concatenate(dl_parts).astype(np.int64)[keep]
-                ids = ids[keep]
-                if tomb:
-                    tkeep = _tomb_keep(ids, getattr(r, "layer_seq", 0), tomb)
-                    if tkeep is not None:
-                        ids, tfs, dls = ids[tkeep], tfs[tkeep], dls[tkeep]
-                        if not ids.size:
-                            continue
-                idf = (
-                    idf_map[r.term]
-                    if idf_map is not None
-                    else idf_fn(n_docs, r.df, variant)
-                )
-                contrib = idf * (tfs * (k1 + 1.0)) / (
-                    tfs + (k1 * ((1.0 - b) + ((b * dls) / avgdl)))
-                )
-                outs.append(pd.DataFrame({"term": r.term, "doc_id": ids, "contrib": contrib}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return gen
-
-
-def _filtered_decode_w_gen(
-    meta,
-    candidates: np.ndarray,
-    w: list[float],
-    idf_map: dict[str, float] | None = None,
-    tomb=None,
-):
-    """WEIGHTED sibling of :func:`_filtered_decode_gen`: pass-2 decoder
-    for per-column-weighted scoring with the same TRUE block skipping —
-    the per-field tf streams are block-addressable too (offs_tfs_cols
-    shares the doc_ids block grid), so only candidate-touching blocks of
-    ANY stream are decoded. The weighted tf folds w_c·tf_c in ascending
-    field order (the exact path's ``InvertedIndex._wsum_mc`` float
-    sequence) and the contribution uses the identical op order as
-    ``bm25_contrib_col`` — bitwise-equal scores (pinned by tests/test_wand_weighted.py).
-    Zero-contribution rows are kept: presence is weight-independent
-    (FTS5 parity)."""
-    k1, b, avgdl, n_docs = meta.k1, meta.b, meta.avgdl, meta.n_docs
-    variant = meta.idf_variant
-    nf = len(meta.fields)
-    cand = np.sort(candidates)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples():
-                if idf_map is not None and r.term not in idf_map:
-                    continue  # fully-deleted term: every posting masked
-                bmin = np.asarray(r.block_min, dtype=np.int64)
-                bi = np.searchsorted(bmin, cand, side="right") - 1
-                sel = np.unique(bi[bi >= 0])
-                if sel.size == 0:
-                    continue
-                o_ids = np.asarray(r.offs_ids, dtype=np.int64)
-                o_dls = np.asarray(r.offs_dls, dtype=np.int64)
-                o_tfc = [
-                    np.asarray(r.offs_tfs_cols[c], dtype=np.int64)
-                    for c in range(nf)
-                ]
-                id_parts, dl_parts = [], []
-                tfc_parts: list[list] = [[] for _ in range(nf)]
-                for i in sel:
-                    id_parts.append(
-                        np.cumsum(
-                            varint_decode(r.doc_ids[o_ids[i]:o_ids[i + 1]]).astype(np.int64)
-                        )
-                    )
-                    dl_parts.append(varint_decode(r.dls[o_dls[i]:o_dls[i + 1]]))
-                    for c in range(nf):
-                        tfc_parts[c].append(
-                            varint_decode(
-                                r.tfs_cols[c][o_tfc[c][i]:o_tfc[c][i + 1]]
-                            )
-                        )
-                ids = np.concatenate(id_parts)
-                keep = np.searchsorted(cand, ids)
-                keep = (keep < len(cand)) & (cand[np.clip(keep, 0, len(cand) - 1)] == ids)
-                if not keep.any():
-                    continue
-                dls = np.concatenate(dl_parts).astype(np.int64)[keep]
-                wtf = None
-                for c in range(nf):
-                    tfc = np.concatenate(tfc_parts[c]).astype(np.float64)[keep]
-                    e = w[c] * tfc
-                    wtf = e if wtf is None else wtf + e
-                ids = ids[keep]
-                if tomb:
-                    tkeep = _tomb_keep(ids, getattr(r, "layer_seq", 0), tomb)
-                    if tkeep is not None:
-                        ids, wtf, dls = ids[tkeep], wtf[tkeep], dls[tkeep]
-                        if not ids.size:
-                            continue
-                idf = (
-                    idf_map[r.term]
-                    if idf_map is not None
-                    else idf_fn(n_docs, r.df, variant)
-                )
-                contrib = idf * (wtf * (k1 + 1.0)) / (
-                    wtf + (k1 * ((1.0 - b) + ((b * dls) / avgdl)))
-                )
-                outs.append(pd.DataFrame({"term": r.term, "doc_id": ids, "contrib": contrib}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return gen
 
 
 def _weighted_ubs(
@@ -407,8 +238,9 @@ def search_pruned(
     ``weights`` (or a persisted rank configuration): per-field BM25
     weights — planning switches to the per-field sidecar bounds
     (:func:`_weighted_ubs`) and both passes decode the per-field tf
-    streams (``_contribs_weighted`` / :func:`_filtered_decode_w_gen`),
-    bitwise-identical to the exact weighted path.
+    streams through ``InvertedIndex._contribs(terms, w)`` (the one
+    decode-and-score kernel), bitwise-identical to the exact weighted
+    path.
     """
     spark = index.spark
     meta = index.meta
@@ -433,12 +265,6 @@ def search_pruned(
     def _exact():
         return index.search(query_text, k, weights=weights)
 
-    def _pass1_contribs(ts: list[str]) -> DataFrame:
-        return (
-            index._contribs_weighted(ts, w) if w is not None
-            else index._contribs(ts)
-        )
-
     # pass 1 (job 1): exact partial scores over essential terms.
     # Selective queries (the only ones that reach here) have small
     # essential posting lists — when Σ df(essential) fits the driver
@@ -448,7 +274,7 @@ def search_pruned(
     # shuffle-free stage. Oversized essential lists keep the distributed
     # fold + TakeOrderedAndProject plan.
     if ess_df <= _PASS1_COLLECT_BUDGET:
-        rows = _pass1_contribs(essential).collect()
+        rows = index._contribs(essential, w).collect()
         docs, scores = _numpy_fold(rows, essential)
         order = np.lexsort((docs, -scores))
         docs, scores = docs[order], scores[order]
@@ -459,7 +285,7 @@ def search_pruned(
         if len(cand) > cap:  # cut too weak to beat the exact scan
             return _exact()
     else:
-        s1 = index._fold_scores(_pass1_contribs(essential), essential)
+        s1 = index._fold_scores(index._contribs(essential, w), essential)
         top1 = s1.orderBy(F.desc("score"), F.asc("doc_id")).limit(cap).collect()
         if len(top1) < k or rest_ub >= top1[k - 1]["score"]:
             # not enough matches to bound, or rest terms could beat θ
@@ -475,19 +301,7 @@ def search_pruned(
     # pass 2 (job 2): true scores over candidates only — block-skipping
     # decode over all query terms, ≤ cap × |terms| rows collected, numpy
     # fold in the exact path's float order → bitwise-identical scores
-    matched = index._matched(terms)
-    gen2 = (
-        _filtered_decode_w_gen(
-            meta, cand_ids, w, index._layered_idf_map(terms), index._tomb_spec
-        )
-        if w is not None
-        else _filtered_decode_gen(
-            meta, cand_ids, index._layered_idf_map(terms), index._tomb_spec
-        )
-    )
-    contribs = matched.mapInPandas(
-        gen2, "term string, doc_id long, contrib double"
-    )
+    contribs = index._contribs(terms, w, candidates=cand_ids)
     docs, scores = _numpy_fold(contribs.collect(), terms)
     sel = np.lexsort((docs, -scores))[:k]
     out = [
@@ -545,11 +359,7 @@ def search_batch_pruned(
         # pass 1 (shared job): raw contributions for the UNION of
         # essential terms; per-query numpy folds over its own slice
         ess_union = sorted({t for _q, _x, _t, _k, pl in pruned for t in pl["essential"]})
-        rows1 = (
-            index._contribs_weighted(ess_union, w)
-            if w is not None
-            else index._contribs(ess_union)
-        ).collect()
+        rows1 = index._contribs(ess_union, w).collect()
         by_term: dict[str, list] = {}
         for r in rows1:
             by_term.setdefault(r["term"], []).append(r)
@@ -576,22 +386,9 @@ def search_batch_pruned(
             # restricted to (its terms × its candidates)
             union_terms = sorted({t for _q, ts, _k, _c in stage2 for t in ts})
             union_cands = np.unique(np.concatenate([c for _q, _t, _k, c in stage2]))
-            gen2 = (
-                _filtered_decode_w_gen(
-                    index.meta, union_cands, w,
-                    index._layered_idf_map(union_terms), index._tomb_spec,
-                )
-                if w is not None
-                else _filtered_decode_gen(
-                    index.meta, union_cands,
-                    index._layered_idf_map(union_terms), index._tomb_spec,
-                )
-            )
-            rows2 = (
-                index._matched(union_terms)
-                .mapInPandas(gen2, "term string, doc_id long, contrib double")
-                .collect()
-            )
+            rows2 = index._contribs(
+                union_terms, w, candidates=union_cands
+            ).collect()
             by_term2: dict[str, list] = {}
             for r in rows2:
                 by_term2.setdefault(r["term"], []).append(r)

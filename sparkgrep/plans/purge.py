@@ -85,16 +85,11 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from sparkgrep.functions.varint import (
-    blocked_gap_decode,
-    delta_decode_segments,
-    varint_decode,
-)
+from sparkgrep.functions.postings import decode_row, row_ids
 from sparkgrep.operators.index_build import (
     PREFIX_MARKER,
     IndexMeta,
-    _encode_groups_frame,
-    _encode_groups_frame_mc,
+    group_encoder,
     load_meta,
     postings_schema,
 )
@@ -251,7 +246,6 @@ def _affected_files_gen(meta: IndexMeta, dead_bc):
     """Discovery kernel: decode each candidate row's doc_ids stream only
     and emit its source file when the posting list intersects the dead
     set."""
-    block = meta.block_size
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -260,8 +254,7 @@ def _affected_files_gen(meta: IndexMeta, dead_bc):
             for r in pdf.itertuples(index=False):
                 if r.src_file in files:
                     continue
-                ids = blocked_gap_decode(r.doc_ids, int(r.n), block)
-                if np.isin(ids, dead).any():
+                if np.isin(row_ids(r, meta), dead).any():
                     files.add(r.src_file)
             if files:
                 yield pd.DataFrame({"src_file": sorted(files)})
@@ -269,71 +262,37 @@ def _affected_files_gen(meta: IndexMeta, dead_bc):
     return gen
 
 
-def _reencode_sf(meta_l: IndexMeta, row: dict, ids, keep) -> dict:
-    """Re-encode one single-field postings row without the dead doc
-    slots, via the build's own group encoder (byte layout + block grid +
-    bounds convention identical to a build of the surviving postings
-    under the layer's stats). Stored df/cf pass through unchanged — the
-    tombstone's negated-df sidecar remains the global correction."""
-    tfs_all = varint_decode(row["tfs"]).astype(np.int64)
-    dls_all = varint_decode(row["dls"]).astype(np.int64)
-    frame = {
-        "term": row["term"],
-        "shard": row["shard"],
+def _reencode(meta_l: IndexMeta, r, keep: np.ndarray) -> dict:
+    """Re-encode one postings row without the dead doc slots: decode it,
+    rebuild the layout's SPIMI-shaped frame for the surviving docs — one
+    row per (doc, field) with tf > 0, doc-major, a ``col`` column on the
+    per-field layout — and run the build's own group encoder (byte
+    layout + block grid + bounds convention identical to a build of the
+    surviving postings under the layer's stats). Stored df/cf pass
+    through unchanged — the tombstone's negated-df sidecar remains the
+    global correction."""
+    d = decode_row(r, meta_l, fields=True, positions=meta_l.has_positions)
+    rows, cols = np.nonzero(d.tf * keep[:, None])
+    tfs = d.tf[rows, cols]
+    pdf = pd.DataFrame({
+        "term": r.term,
+        "shard": r.shard,
         "bucket": 0,  # rewritten by the caller (partition column)
-        "df": float(row["df"]),
-        "cf": float(row["cf"]),
-        "doc_id": ids[keep],
-        "tf": tfs_all[keep],
-        "dl": dls_all[keep],
-    }
-    pdf = pd.DataFrame(frame)
+        "df": float(r.df),
+        "cf": float(r.cf),
+        "doc_id": d.ids[rows],
+        **({"col": cols} if meta_l.per_field else {}),
+        "tf": tfs,
+        "dl": d.dls[rows],
+    })
     if meta_l.has_positions:
-        flat = delta_decode_segments(row["poss"], tfs_all)
-        segs = np.split(flat, np.cumsum(tfs_all)[:-1])
-        pdf["positions"] = [segs[j] for j in np.flatnonzero(keep)]
-    out = _encode_groups_frame(meta_l, pdf, [0], [len(pdf)])
-    return out.iloc[0].to_dict()
-
-
-def _reencode_mc(meta_l: IndexMeta, row: dict, ids, keep) -> dict:
-    """Multi-field sibling: rebuild the per-(doc, field) SPIMI shape for
-    the surviving docs and re-encode through the mc group encoder."""
-    nf = len(meta_l.fields)
-    dls_all = varint_decode(row["dls"]).astype(np.int64)
-    doc_a, col_a, tf_a, dl_a, pos_a = [], [], [], [], []
-    for c in range(nf):
-        tfc_all = varint_decode(row["tfs_cols"][c]).astype(np.int64)
-        if meta_l.has_positions:
-            flat = delta_decode_segments(row["poss_cols"][c], tfc_all)
-            segs = np.split(flat, np.cumsum(tfc_all)[:-1])
-        sel = np.flatnonzero((tfc_all > 0) & keep)
-        if not sel.size:
-            continue
-        doc_a.append(ids[sel])
-        col_a.append(np.full(sel.size, c, dtype=np.int64))
-        tf_a.append(tfc_all[sel])
-        dl_a.append(dls_all[sel])
-        if meta_l.has_positions:
-            pos_a.extend(segs[j] for j in sel)
-    docs = np.concatenate(doc_a)
-    cols = np.concatenate(col_a)
-    order = np.lexsort((cols, docs))
-    frame = {
-        "term": row["term"],
-        "shard": row["shard"],
-        "bucket": 0,
-        "df": float(row["df"]),
-        "cf": float(row["cf"]),
-        "doc_id": docs[order],
-        "col": cols[order],
-        "tf": np.concatenate(tf_a)[order],
-        "dl": np.concatenate(dl_a)[order],
-    }
-    pdf = pd.DataFrame(frame)
-    if meta_l.has_positions:
-        pdf["positions"] = [pos_a[j] for j in order]
-    out = _encode_groups_frame_mc(meta_l, pdf, [0], [len(pdf)])
+        # decoded instances run (field, row, pos); sorted by (row, field,
+        # pos) they line up with the frame's (doc, field) rows
+        inst = keep[d.row]
+        pos = d.pos[inst]
+        order = np.lexsort((pos, d.field[inst], d.row[inst]))
+        pdf["positions"] = np.split(pos[order], np.cumsum(tfs)[:-1])
+    out = group_encoder(meta_l)(meta_l, pdf, [0], [len(pdf)])
     return out.iloc[0].to_dict()
 
 
@@ -343,8 +302,6 @@ def _rewrite_gen(meta_l: IndexMeta, dead_bc, n_buckets: int, out_cols: list[str]
     dead are dropped; the rest are re-encoded sans the dead slots. The
     output carries the partition ``bucket`` recomputed from the term
     (the same driver/build hash)."""
-    mc = meta_l.per_field
-    block = meta_l.block_size
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from sparkgrep.functions.xxhash import term_bucket
@@ -353,17 +310,15 @@ def _rewrite_gen(meta_l: IndexMeta, dead_bc, n_buckets: int, out_cols: list[str]
         for pdf in batches:
             dead = dead_bc.value
             rows_out = []
-            for _, row in pdf.iterrows():
-                rd = row.to_dict()
-                ids = blocked_gap_decode(rd["doc_ids"], int(rd["n"]), block)
-                hit = np.isin(ids, dead)
+            for r in pdf.itertuples(index=False):
+                hit = np.isin(row_ids(r, meta_l), dead)
                 if hit.any():
                     keep = ~hit
                     if not keep.any():
                         continue  # every posting dead: row disappears
-                    rd = (_reencode_mc if mc else _reencode_sf)(
-                        meta_l, rd, ids, keep
-                    )
+                    rd = _reencode(meta_l, r, keep)
+                else:
+                    rd = r._asdict()
                 t = rd["term"]
                 b = bcache.get(t)
                 if b is None:

@@ -220,7 +220,9 @@ def test_residency_guard_falls_back_distributed(spark, index):
 
     full = LocalServer(index)
     capped = LocalServer(index, max_resident_df=3)  # every real term is hotter
-    for q in ["table scan", "hash join table window", "the"]:
+    queries = ["table scan", "hash join table window", "the"]
+    capped.warm(queries)  # warming honours the cap too
+    for q in queries:
         got = capped.search(q, k=10)
         want = full.search(q, k=10)
         assert got["doc_id"].tolist() == want["doc_id"].tolist(), q

@@ -211,7 +211,7 @@ def test_wfold_term_fast_path_bitwise(spark, mc_corpus, tmp_path_factory):
     idx = InvertedIndex(spark, out)
     srv = LocalServer(idx)
     terms = ["alpha", "beta", "code", "zeta"]
-    srv._fetch_tf(terms, per_field=True)
+    srv._fetch(terms)
     for t in terms:
         for cols, w in (
             ([0, 1], [1.0, 1.0]),
