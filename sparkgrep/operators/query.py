@@ -9,12 +9,27 @@ pass (`mapInPandas`) → deterministic ordered-fold aggregation per doc →
 distributed top-k. No join against a doc-length table: dl is stored in
 the posting payload, so a query touches ONLY its terms' shards.
 
-The query language (``search_expr``) has one evaluator for every index
-shape: each unit becomes a per-(doc, field) relation off ONE raw decode
-kernel (:func:`_decode_raw_gen`), colset-filtered and weight-folded to a
-per-doc tf (``InvertedIndex._unit_tf``), then ranked by one gated fold
-(``_rank_units``). A single-field or detail=none index is the one-field
-case of weight 1.0 (``InvertedIndex._expr_weights``).
+Two drivers answer ``search``, ``search_expr`` and ``search_batch``,
+bitwise-identically:
+
+- the **fetch driver**, when a query's postings fit
+  :data:`_COLLECT_BUDGET`: ONE bucket-pruned collect fetches the rows of
+  every term (plain terms, phrase slots, NEAR members and the terms
+  each ``stem*`` resolves to), they decode through
+  ``functions/postings.py:decode_row`` and the numpy evaluator
+  (``functions/evaluator.py`` — the one ``serve.LocalServer`` caches
+  for) ranks on the driver. Nothing is cached;
+- the **DataFrame evaluator** past the budget: bag-of-words runs the
+  decode-and-score kernel and the ordered fold above; in the query
+  language each unit becomes a per-(doc, field) relation off ONE raw
+  decode kernel (:func:`_decode_raw_gen`), colset-filtered and
+  weight-folded to a per-doc tf (``InvertedIndex._unit_tf``), then
+  ranked by one gated fold (``_rank_units``).
+
+A single-field or detail=none index is the one-field case of weight 1.0
+(``InvertedIndex._expr_weights``). Either driver hands back its ≤k rows
+as a local, Arrow-backed frame (:func:`_result_frame`): the caller's
+``collect()`` runs no Spark job.
 """
 
 from __future__ import annotations
@@ -26,17 +41,45 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sparkgrep.functions import evaluator as ev
 from sparkgrep.functions.querylang import (
     Conjunct,
     ParsedQuery,
     Unit,
     parse_query,
+    plain_terms,
     star_slots,
+    stem_terms,
 )
 from sparkgrep.functions.tokenizer import tokenize_py
 from sparkgrep.functions.postings import candidate_blocks, decode_row
 from sparkgrep.operators.index_build import IndexMeta, load_meta
 from sparkgrep.operators.score import idf as idf_fn
+
+# the fetch driver's collect budget (postings): a query whose terms and
+# stems hold at most this many postings in all is answered by ONE
+# bucket-pruned collect and the numpy evaluator on the driver; beyond
+# it the DataFrame evaluator runs on the executors. MaxScore's pass-1
+# collect (wand.py) shares it.
+_COLLECT_BUDGET = 1 << 18
+
+_RESULT = "rank int, doc_id long, score double"
+_BATCH_RESULT = "query_id string, rank int, doc_id long, score double"
+
+
+def _result_frame(spark: SparkSession, pdf: pd.DataFrame, schema: str = _RESULT) -> DataFrame:
+    """Driver-side result rows as a Spark frame whose ``collect()`` runs
+    no job: a typed pandas frame (columns in ``schema`` order) becomes
+    an Arrow-backed local relation, with Arrow on as
+    ``session.get_spark`` sets it. An empty pandas frame would take the
+    row path, which runs a job, so an empty result is one typed
+    placeholder row under ``limit(0)``."""
+    if len(pdf):
+        return spark.createDataFrame(pdf, schema)
+    one = ev.ranked(np.zeros(1, np.int64), np.zeros(1, np.float64))
+    if schema == _BATCH_RESULT:
+        one.insert(0, "query_id", [""])
+    return spark.createDataFrame(one, schema).limit(0)
 
 
 def _decode_score_gen(
@@ -725,6 +768,49 @@ class InvertedIndex:
             return self.postings.filter(pred)
         return self.postings.filter(F.col("bucket").isin(buckets) & pred)
 
+    # -- the fetch driver -------------------------------------------------------
+
+    def _fetch_postings(self, terms, stems: dict) -> dict:
+        """Decoded evaluator entries (``functions/evaluator.py``): term →
+        its postings, ``(stem, "*")`` → the stem's union, for ``terms``
+        and ``stems`` (stem → its :meth:`prefix_terms` resolution). ONE
+        bucket-pruned collect fetches every term and every resolved
+        stem's terms; a stem resolved to None pays its own
+        :meth:`_prefix_matched` collect."""
+        meta, tomb = self.meta, self._tomb_spec
+        cols = ev.postings_columns(meta, tomb)
+        want = set(terms).union(*(ts for ts in stems.values() if ts is not None))
+        parts = {}
+        if want:
+            rows = self._matched(sorted(want)).select(*cols).collect()
+            parts = ev.decode_rows(rows, meta, tomb)
+        stems = dict(stems)
+        for s, ts in stems.items():
+            if ts is None:
+                rows = self._prefix_matched(s).select(*cols).collect()
+                scan = ev.decode_rows(rows, meta, tomb)  # every term in it matches
+                parts.update(scan)
+                stems[s] = list(scan)
+        return ev.merge_entries(parts, terms, stems, meta)
+
+    def _fetch_driver(self, terms: list[str], stems=()) -> ev.Fetched | None:
+        """The fetch driver's entries for a query, or None when they may
+        not fit :data:`_COLLECT_BUDGET` — then the DataFrame evaluator
+        runs. Σ df of the terms and of every term the stems resolve to
+        (:meth:`prefix_terms`) is bounded job-free by ``n_docs`` per
+        term first and read from the memoized :meth:`term_ubs` only
+        when that bound is over the budget; a stem the dictionary
+        cannot resolve has no bound. Nothing is cached."""
+        resolved = {s: self.prefix_terms(s) for s in stems}
+        if any(ts is None for ts in resolved.values()):
+            return None
+        want = sorted(set(terms).union(*resolved.values()))
+        if len(want) * self.meta.n_docs > _COLLECT_BUDGET and (
+            sum(df for df, _ub in self.term_ubs(want).values()) > _COLLECT_BUDGET
+        ):
+            return None
+        return ev.Fetched(self.meta, self._fetch_postings(terms, resolved))
+
     def _contribs(
         self,
         terms: list[str],
@@ -800,12 +886,12 @@ class InvertedIndex:
         """Global per-term idf for LAYERED indexes (a posting row's
         stored df is layer-local there); None on a single-layer index,
         where the executor-side per-row df path is used unchanged."""
-        if not self.is_layered:
+        dfs = self._layered_dfs(terms)
+        if dfs is None:
             return None
-        ubs = self.term_ubs(terms)  # summed layer dfs, memoized
         return {
             t: float(idf_fn(self.meta.n_docs, df, self.meta.idf_variant))
-            for t, (df, _ub) in ubs.items()
+            for t, df in dfs.items()
         }
 
     @staticmethod
@@ -848,6 +934,14 @@ class InvertedIndex:
         strict=True raises on an empty/no-term query, matching FTS5's
         error on an empty MATCH (test_message_manager.py:599-610);
         default returns an empty relation.
+
+        Two drivers answer, bitwise-identically. When the query's
+        postings fit the collect budget (:meth:`_fetch_driver`), ONE
+        bucket-pruned collect fetches them and the numpy evaluator
+        (``functions/evaluator.py``) ranks on the driver; otherwise the
+        DataFrame evaluator runs on the executors. Either way the ≤k
+        result rows come back as a local frame whose ``collect()`` runs
+        no Spark job.
         """
         if mode == "expr":
             return self.search_expr(query_text, k, strict=strict, weights=weights)
@@ -859,7 +953,7 @@ class InvertedIndex:
         if not terms:
             if strict:
                 raise ValueError("empty query (FTS5 parity: empty MATCH is an error)")
-            return self.spark.createDataFrame([], "rank int, doc_id long, score double")
+            return _result_frame(self.spark, ev.empty_result())
         if mode == "and":
             pq = ParsedQuery((Conjunct(tuple(Unit((t,)) for t in terms)),))
             return self._search_parsed(pq, k, weights)
@@ -867,15 +961,29 @@ class InvertedIndex:
             raise ValueError(f"unknown mode {mode!r} (or|and|expr)")
         if weights is not None:
             # non-default weights need per-field tfs: run OR as its DNF
-            # (one disjunct per term — identical match-any semantics)
-            pq = ParsedQuery(tuple(Conjunct((Unit((t,)),)) for t in terms))
-            return self._search_parsed(pq, k, weights)
+            return self._search_parsed(_any_of(terms), k, weights)
+        src = self._fetch_driver(terms)
+        if src is not None:
+            return _result_frame(self.spark, ev._bow(src, terms, k, self._layered_dfs(terms)))
         scored = self._fold_scores(self._contribs(terms), terms)
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return top.withColumn("rank", F.row_number().over(w).cast("int")).select(
-            "rank", "doc_id", "score"
-        )
+        return self._top(scored, k)
+
+    def _layered_dfs(self, terms: list[str]) -> dict[str, int] | None:
+        """Global per-term dfs of a LAYERED index (summed layer
+        sidecars; a shard row's stored df is layer-local there), None on
+        a single-layer index, whose stored dfs are global."""
+        if not self.is_layered:
+            return None
+        return {t: df for t, (df, _ub) in self.term_ubs(terms).items()}
+
+    def _top(self, scored: DataFrame, k: int) -> DataFrame:
+        """The top ``k`` of a (doc_id, score) relation by score desc,
+        doc_id asc, collected and ranked on the driver."""
+        rows = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
+        return _result_frame(self.spark, ev.ranked(
+            np.array([r["doc_id"] for r in rows], np.int64),
+            np.array([r["score"] for r in rows], np.float64),
+        ))
 
     def search_expr(
         self, query_text: str, k: int = 10, strict: bool = False, weights=None
@@ -888,7 +996,12 @@ class InvertedIndex:
         restrict the match set). On a multi-field index the FTS5 column
         filters are live (``col:tok``, ``{c1 c2}:"a b"``, ``-col:x``,
         ``col:NEAR(...)``, ``col:(...)`` distribution) and ``weights``
-        supplies FTS5's per-column bm25() weights."""
+        supplies FTS5's per-column bm25() weights.
+
+        Drivers as in :meth:`search`: the fetch driver when the query's
+        terms, phrase slots, NEAR members and resolved ``stem*`` terms
+        fit the collect budget — one Spark job in all — else the
+        DataFrame evaluator."""
         if weights is None and self.meta.rank_weights:
             # FTS5 'rank' configuration option (set_rank): persisted
             # default weights; an explicit ``weights`` overrides (the
@@ -900,13 +1013,20 @@ class InvertedIndex:
         if not pq.disjuncts:
             if strict:
                 raise ValueError("empty query (FTS5 parity: empty MATCH is an error)")
-            return self.spark.createDataFrame([], "rank int, doc_id long, score double")
+            return _result_frame(self.spark, ev.empty_result())
         return self._search_parsed(pq, k, weights)
 
     def _search_parsed(
         self, pq: ParsedQuery, k: int, weights=None
     ) -> DataFrame:
         w, nf = self._expr_weights(pq, weights)
+        units = pq.units()
+        src = self._fetch_driver(
+            sorted({t for u in units for t in plain_terms(u)}),
+            sorted({s for u in units for s in stem_terms(u)}),
+        )
+        if src is not None:
+            return _result_frame(self.spark, ev._search_parsed(src, pq, units, k, w, nf))
         unit_tf, groups, near_uids = self._unit_tf(pq, w, nf)
         unit_tf = unit_tf.persist()
         try:
@@ -1239,9 +1359,7 @@ class InvertedIndex:
                 if nuid in dfs:
                     dfs[nuid] = dfs[u.uid]
         if not dfs:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
+            return _result_frame(self.spark, ev.empty_result())
         idf_rows = [
             (uid, float(idf_fn(meta.n_docs, dfs[uid], meta.idf_variant)))
             for uid in sorted(dfs)
@@ -1304,9 +1422,7 @@ class InvertedIndex:
 
         match = expr_cond(pq.disjuncts)
         if match is None:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
+            return _result_frame(self.spark, ev.empty_result())
         # FTS5 scoring gate (pinned against SQLite): a unit
         # contributes to a doc's score only when some disjunct
         # containing it as an INCLUDE matches the doc — a present
@@ -1339,29 +1455,28 @@ class InvertedIndex:
                 else F.lit(0.0)
             )
             expr = col if expr is None else expr + col
-        scored = g.filter(match).select("doc_id", expr.alias("score"))
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        ranked = top.withColumn("rank", F.row_number().over(w).cast("int")).select(
-            "rank", "doc_id", "score"
-        )
-        rows = ranked.collect()  # ≤ k rows: eager so the cache can drop
-        return self.spark.createDataFrame(
-            rows, "rank int, doc_id long, score double"
-        )
+        # ≤ k rows, collected eagerly so the cache can drop
+        return self._top(g.filter(match).select("doc_id", expr.alias("score")), k)
 
     def search_batch(
         self, queries: list[tuple[str, str, int]], pruned: bool = False
     ) -> DataFrame:
         """[(query_id, query_text, k)] → (query_id, rank, doc_id, score).
 
-        One postings scan serves all queries: decode each matched term
-        once, fan contributions out to the queries containing the term
-        via a broadcast join, then ONE fold keyed on (query_id, doc_id)
-        and one per-query rank window. Bitwise-identical to per-query
-        ``search``: the global sorted-term fold order restricted to a
-        query's terms is still that query's sorted order, and the
-        coalesced 0.0 for terms outside the query is an exact identity.
+        When the postings of every term of the batch fit the collect
+        budget, ONE fetch serves the whole batch and each query is the
+        evaluator's bag-of-words fold over its own terms (the weighted
+        fold of :meth:`search` under a rank configuration): each answer
+        is :meth:`search`'s by construction.
+
+        Otherwise one postings scan serves all queries: decode each
+        matched term once, fan contributions out to the queries
+        containing the term via a broadcast join, then ONE fold keyed on
+        (query_id, doc_id) and one per-query rank window.
+        Bitwise-identical to per-query ``search``: the global
+        sorted-term fold order restricted to a query's terms is still
+        that query's sorted order, and the coalesced 0.0 for terms
+        outside the query is an exact identity.
 
         ``pruned=True`` routes selective queries through the MaxScore
         planner (``wand.search_batch_pruned``): one shared pass-1 job +
@@ -1373,8 +1488,31 @@ class InvertedIndex:
             from sparkgrep.operators.wand import search_batch_pruned
 
             return search_batch_pruned(self, queries)
+        meta = self.meta
+        parsed = [
+            (qid, sorted(set(tokenize_py(text, meta.analyzer))), k)
+            for qid, text, k in queries
+        ]
+        all_terms = sorted({t for _q, terms, _k in parsed for t in terms})
+        src = self._fetch_driver(all_terms) if all_terms else None
+        if src is not None:
+            dfs = None if meta.rank_weights else self._layered_dfs(all_terms)
+            frames = []
+            for qid, terms, k in parsed:
+                if not terms:
+                    continue
+                if meta.rank_weights:
+                    pq = _any_of(terms)
+                    w, nf = self._expr_weights(pq, list(meta.rank_weights))
+                    res = ev._search_parsed(src, pq, pq.units(), k, w, nf)
+                else:
+                    res = ev._bow(src, terms, k, dfs)
+                res.insert(0, "query_id", qid)
+                frames.append(res)
+            out = pd.concat(frames, ignore_index=True) if frames else ev.empty_result()
+            return _result_frame(self.spark, out, _BATCH_RESULT)
         weighted_w: list[float] | None = None
-        if self.meta.rank_weights:
+        if meta.rank_weights:
             # persisted rank configuration (set_rank): the plain batched
             # fold scores the unweighted TOTAL streams, so the batch
             # decodes WEIGHTED contributions instead (one shared decode,
@@ -1388,8 +1526,8 @@ class InvertedIndex:
             # survives only for shapes whose weighted decode can't run
             # (no per-field tf streams) so the error surface matches
             # per-query search.
-            if self.meta.per_field:
-                weighted_w = self._weights_list(list(self.meta.rank_weights))
+            if meta.per_field:
+                weighted_w = self._weights_list(list(meta.rank_weights))
             else:
                 parts = []
                 for qid, text, k in queries:
@@ -1399,17 +1537,10 @@ class InvertedIndex:
                 for q in parts[1:]:
                     out = out.unionByName(q)
                 return out
-        qterm_rows = []
-        kmap = {}
-        for qid, text, k in queries:
-            kmap[qid] = k
-            for t in sorted(set(tokenize_py(text, self.meta.analyzer))):
-                qterm_rows.append((qid, t))
+        qterm_rows = [(qid, t) for qid, terms, _k in parsed for t in terms]
         if not qterm_rows:
-            return self.spark.createDataFrame(
-                [], "query_id string, rank int, doc_id long, score double"
-            )
-        all_terms = sorted({t for _, t in qterm_rows})
+            return _result_frame(self.spark, ev.empty_result(), _BATCH_RESULT)
+        kmap = {qid: k for qid, _terms, k in parsed}
         contribs = self._contribs(all_terms, weighted_w)
         qterms = self.spark.createDataFrame(qterm_rows, "query_id string, term string")
         fanned = contribs.join(F.broadcast(qterms), "term")
@@ -1418,12 +1549,18 @@ class InvertedIndex:
         ranked = scored.withColumn("rank", F.row_number().over(w).cast("int"))
         # per-query k cut via a tiny broadcast of (query_id, k)
         kdf = self.spark.createDataFrame(list(kmap.items()), "query_id string, k int")
-        out = (
+        rows = (
             ranked.join(F.broadcast(kdf), "query_id")
             .filter(F.col("rank") <= F.col("k"))
             .select("query_id", "rank", "doc_id", "score")
-        )
-        rows = out.collect()  # ≤ Σk rows — eager, nothing left cached
-        return self.spark.createDataFrame(
-            rows, "query_id string, rank int, doc_id long, score double"
-        )
+            .collect()
+        )  # ≤ Σk rows — eager, nothing left cached
+        out = pd.DataFrame(rows, columns=["query_id", "rank", "doc_id", "score"])
+        out = out.astype({"rank": "int32", "doc_id": "int64", "score": "float64"})
+        return _result_frame(self.spark, out, _BATCH_RESULT)
+
+
+def _any_of(terms: list[str]) -> ParsedQuery:
+    """Bag-of-words OR as a query-language DNF: one single-term
+    disjunct per term — identical match-any semantics."""
+    return ParsedQuery(tuple(Conjunct((Unit((t,)),)) for t in terms))

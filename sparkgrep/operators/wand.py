@@ -29,28 +29,26 @@ below θ) — pinned by tests/test_wand.py.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparkgrep.functions import evaluator as ev
+from sparkgrep.functions.evaluator import seq_fold
 from sparkgrep.functions.tokenizer import tokenize_py
-from sparkgrep.operators.query import InvertedIndex
+from sparkgrep.operators.query import (
+    _BATCH_RESULT,
+    _COLLECT_BUDGET,
+    InvertedIndex,
+    _result_frame,
+)
 from sparkgrep.operators.score import idf as idf_fn
-
-
-# pass-1 raw-contribution collect budget (rows): Σ df(essential) must fit
-# comfortably on the driver; beyond this the distributed fold plan runs
-_PASS1_COLLECT_BUDGET = 1 << 18
 
 
 def _numpy_fold(rows, terms_sorted: list[str]) -> tuple[np.ndarray, np.ndarray]:
     """Fold collected (term, doc_id, contrib) rows into per-doc scores in
     the SAME float-addition order as ``score.fold_contribs`` (sorted-term
-    left-associated sum): accumulate one term at a time into the score
-    vector, so each doc's adds happen sequentially in term order.
-
-    NOT ``np.add.reduceat``: reduceat (like np.sum) may sum PAIRWISE,
-    which diverges from the left-associated Spark fold by 1 ulp — enough
-    to break bitwise rank/score identity (observed on 3-term folds)."""
+    left-associated sum, :func:`evaluator.seq_fold`)."""
     if not rows:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     tix_of = {t: i for i, t in enumerate(terms_sorted)}
@@ -58,24 +56,6 @@ def _numpy_fold(rows, terms_sorted: list[str]) -> tuple[np.ndarray, np.ndarray]:
     tix = np.fromiter((tix_of[r["term"]] for r in rows), dtype=np.int32, count=len(rows))
     contribs = np.fromiter((r["contrib"] for r in rows), dtype=np.float64, count=len(rows))
     return seq_fold(ids, tix, contribs, len(terms_sorted))
-
-
-def seq_fold(
-    ids: np.ndarray, tix: np.ndarray, contribs: np.ndarray, n_terms: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """(doc_ids, scores) where score[d] = ((0.0 + c_t0) + c_t1) + ... in
-    term-index order — bitwise-equal to ``fold_contribs``'s
-    ``coalesce(_c0,0.0) + coalesce(_c1,0.0) + ...`` (x + 0.0 == x for
-    the finite positive contribs, and absent terms add nothing)."""
-    docs = np.unique(ids)
-    pos = np.searchsorted(docs, ids)
-    scores = np.zeros(len(docs), dtype=np.float64)
-    for t in range(n_terms):
-        m = tix == t
-        # one contrib per (term, doc): these element adds are each doc's
-        # next left-associated addition
-        scores[pos[m]] += contribs[m]
-    return docs, scores
 
 
 def _weighted_ubs(
@@ -245,9 +225,8 @@ def search_pruned(
     spark = index.spark
     meta = index.meta
     terms = sorted(set(tokenize_py(query_text, meta.analyzer)))
-    empty = spark.createDataFrame([], "rank int, doc_id long, score double")
     if not terms:
-        return empty
+        return _result_frame(spark, ev.empty_result())
     # driver-side viability planning (see plan_pruned): unsound idf /
     # layered index / hot-essential / margin-failing queries run exact —
     # the minimal top-UB essential prefix keeps hot terms (huge df, tiny
@@ -255,7 +234,8 @@ def search_pruned(
     plan = plan_pruned(index, terms, k, prefix_cap, prune_margin, weights=weights)
     if plan is None:
         if weights is None and not index.term_ubs(terms):
-            return empty  # no query term has postings
+            # no query term has postings
+            return _result_frame(spark, ev.empty_result())
         return index.search(query_text, k, weights=weights)
     essential, rest_ub, cap, ess_df = (
         plan["essential"], plan["rest_ub"], plan["cap"], plan["ess_df"]
@@ -273,7 +253,7 @@ def search_pruned(
     # LocalServer equivalence, pinned by tests) → pass 1 is ONE
     # shuffle-free stage. Oversized essential lists keep the distributed
     # fold + TakeOrderedAndProject plan.
-    if ess_df <= _PASS1_COLLECT_BUDGET:
+    if ess_df <= _COLLECT_BUDGET:
         rows = index._contribs(essential, w).collect()
         docs, scores = _numpy_fold(rows, essential)
         order = np.lexsort((docs, -scores))
@@ -304,10 +284,7 @@ def search_pruned(
     contribs = index._contribs(terms, w, candidates=cand_ids)
     docs, scores = _numpy_fold(contribs.collect(), terms)
     sel = np.lexsort((docs, -scores))[:k]
-    out = [
-        (int(i + 1), int(docs[s]), float(scores[s])) for i, s in enumerate(sel)
-    ]
-    return spark.createDataFrame(out, "rank int, doc_id long, score double")
+    return _result_frame(spark, ev.ranked(docs[sel], scores[sel]))
 
 
 def search_batch_pruned(
@@ -333,7 +310,7 @@ def search_batch_pruned(
     spark = index.spark
     analyzer = index.meta.analyzer
     parsed = []  # (qid, terms, k, plan|None)
-    budget = _PASS1_COLLECT_BUDGET
+    budget = _COLLECT_BUDGET
     for qid, text, k in queries:
         terms = sorted(set(tokenize_py(text, analyzer)))
         plan = plan_pruned(index, terms, k, prune_margin=prune_margin)
@@ -413,6 +390,6 @@ def search_batch_pruned(
             for r in index.search_batch(exact).collect()
         )
     out_rows.sort(key=lambda r: (r[0], r[1]))
-    return spark.createDataFrame(
-        out_rows, "query_id string, rank int, doc_id long, score double"
-    )
+    out = pd.DataFrame(out_rows, columns=["query_id", "rank", "doc_id", "score"])
+    out = out.astype({"rank": "int32", "doc_id": "int64", "score": "float64"})
+    return _result_frame(spark, out, _BATCH_RESULT)

@@ -192,13 +192,14 @@ def _dict_wfold(docs, dls, tf_mat, w, cols):
 
 
 def test_wfold_term_fast_path_bitwise(spark, mc_corpus, tmp_path_factory):
-    """The vectorized weighted fold (`serve._wfold`) must be bitwise
+    """The vectorized weighted fold (`evaluator._wfold`) must be bitwise
     identical to a per-doc dict fold — same doc order, same IEEE float64
     weighted tf bytes — for term and prefix units, including on a
     LAYERED index with tombstones (masking already applied at fetch),
     for full and restricted colsets and zero weights."""
     from sparkgrep.functions.querylang import Unit
-    from sparkgrep.operators.serve import LocalServer, _wfold
+    from sparkgrep.functions.evaluator import _unit_tf, _wfold
+    from sparkgrep.operators.serve import LocalServer
 
     out = str(tmp_path_factory.mktemp("mc_fast") / "idx")
     kw = dict(analyzer="fts5", idf_variant="fts5", n_buckets=8)
@@ -222,7 +223,7 @@ def test_wfold_term_fast_path_bitwise(spark, mc_corpus, tmp_path_factory):
         ):
             # term unit, then the prefix unit over the same stem's scan
             for unit in (Unit((t,)), Unit((t[:2],), prefix=True)):
-                rel = srv._unit_tf(unit)
+                rel = _unit_tf(srv, unit)
                 slow = _dict_wfold(*rel, w, cols)
                 fast = _wfold(*rel, w, cols)
                 assert (slow[0] == fast[0]).all(), (unit, cols, w)
