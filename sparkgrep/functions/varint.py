@@ -143,16 +143,14 @@ def blocked_gap_decode(buf: bytes, n: int, block: int) -> np.ndarray:
     return delta_decode_segments(buf, counts)
 
 
-def delta_encode_segments(values: np.ndarray, counts: np.ndarray) -> bytes:
-    """Encode concatenated per-segment increasing sequences (e.g. token
-    positions per doc, concatenated in doc order, segment lengths =
-    ``counts``): within each segment the first value is absolute and the
-    rest are deltas; segments are independent. Vectorized — no per-doc
-    loop."""
+def segment_deltas(values: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """The value stream :func:`delta_encode_segments` varint-encodes:
+    within each segment (lengths ``counts``) the first value is absolute
+    and the rest are deltas. Whole-frame encoders slice it per group."""
     v = np.asarray(values, dtype=np.int64)
     counts = np.asarray(counts, dtype=np.int64)
     if v.size == 0:
-        return b""
+        return v.astype(np.uint64)
     d = np.empty_like(v)
     d[0] = v[0]
     np.subtract(v[1:], v[:-1], out=d[1:])
@@ -162,7 +160,16 @@ def delta_encode_segments(values: np.ndarray, counts: np.ndarray) -> bytes:
     # collapse to the next non-empty head, past-the-end needs no reset
     starts = starts[starts < v.size]
     d[starts] = v[starts]            # reset: absolute at each segment head
-    return varint_encode(d.astype(np.uint64))
+    return d.astype(np.uint64)
+
+
+def delta_encode_segments(values: np.ndarray, counts: np.ndarray) -> bytes:
+    """Encode concatenated per-segment increasing sequences (e.g. token
+    positions per doc, concatenated in doc order, segment lengths =
+    ``counts``): within each segment the first value is absolute and the
+    rest are deltas; segments are independent. Vectorized — no per-doc
+    loop."""
+    return varint_encode(segment_deltas(values, counts))
 
 
 def delta_decode_segments(buf: bytes, counts: np.ndarray) -> np.ndarray:

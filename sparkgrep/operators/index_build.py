@@ -7,21 +7,30 @@ The engine instead treats the index as a *derived dataset* built by one
 Spark job (SURVEY S6/R2/R4):
 
 1. **SPIMI pass** (`mapInPandas`, narrow): tokenize each doc batch and
-   emit per-(doc, term) frequencies locally — tf is intra-document, so
-   no shuffle is needed to compute it. Doc length rides along.
-2. **Stats + df pass**: one `groupBy(term)` with map-side partial
-   aggregation (a count per term per task, so hot terms like
-   ``def``/``import`` cost one row per task, not one per posting).
-3. **Salted merge**: join tf↔df (AQE skew-join splits hot partitions),
-   then shard each term's postings by ``xxhash64(doc_id) % n_shards``
+   fold it to per-(doc[, field], term) frequencies locally with one
+   vectorized factorize + lexsort (:func:`_pair_fold`) — tf is
+   intra-document, so no shuffle is needed to compute it. Doc length
+   rides along on one sentinel row per doc; the doc_lens write counts
+   N and the token total as it goes (``DataFrame.observe``).
+2. **Stats + df pass**, only when a term CAN be hot (n_docs >
+   postings_per_shard — a df never exceeds n_docs): one
+   `groupBy(term)` with map-side partial aggregation (a count per term
+   per task, so hot terms like ``def``/``import`` cost one row per
+   task, not one per posting), filtered on the driver to the hot terms.
+3. **Salted merge**: broadcast the hot terms' df onto the runs, then
+   shard each hot term's postings by ``xxhash64(doc_id) % n_shards``
    where ``n_shards = ceil(df / postings_per_shard)``. This bounds every
    merge group — and every output row — to ~postings_per_shard entries,
    which is what actually survives 10^12 docs: a hot term's postings
-   can never concentrate on one task or one row.
-4. **Encode** (`applyInPandas` per (term, shard)): sort by doc_id,
-   gap+varint docIDs, varint tfs/dls (numpy kernels,
-   :mod:`sparkgrep.functions.varint`), and precompute per-block
-   (BLOCK_SIZE postings) BM25 upper bounds for block-max WAND.
+   can never concentrate on one task or one row. Cold terms land whole
+   in one group and count their own df/cf.
+4. **Encode** (streaming `mapInPandas` over the (term, shard)-
+   partitioned, doc-sorted exchange, many groups per Arrow batch):
+   gap+varint docIDs, varint tfs/dls (and per-field streams), and
+   per-block (BLOCK_SIZE postings) BM25 upper bounds for block-max
+   WAND — each one whole-frame numpy kernel call
+   (:func:`_encode_groups_frame`, :mod:`sparkgrep.functions.varint`)
+   sliced per group.
 
 Layout on disk::
 
@@ -41,17 +50,16 @@ import math
 import os
 import time
 from dataclasses import asdict, dataclass, replace
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sparkgrep import BM25_B, BM25_K1
 from sparkgrep.functions.tokenizer import (
     tokenize_flat,
-    tokenize_series,
     validate_analyzer,
     base_analyzer,
 )
@@ -60,6 +68,7 @@ from sparkgrep.functions.varint import (
     delta_decode_segments,
     delta_encode_segments,
     segment_byte_offsets,
+    segment_deltas,
     varint_byte_lengths,
     varint_decode,
     varint_encode,
@@ -389,6 +398,83 @@ def postings_schema(meta: "IndexMeta") -> str:
     return POSTINGS_OUT_SCHEMA_POS if meta.has_positions else POSTINGS_OUT_SCHEMA
 
 
+def _pair_fold(flat: np.ndarray, doc_idx: np.ndarray):
+    """Vectorized (doc, term)-pair counting, the fold every SPIMI pass
+    shares: factorize terms to int codes, STABLE lexsort by (doc, code)
+    — within a pair the original token order (= ascending positions) is
+    preserved — then boundary detection gives one slice per pair.
+
+    Returns ``(terms, doc index, pair starts, pair ends, order)``: pair
+    i holds the tokens ``order[starts[i]:ends[i]]``, so its tf is
+    ``ends[i] - starts[i]``."""
+    codes, uniq = pd.factorize(flat, sort=False)
+    order = np.lexsort((codes, doc_idx))
+    sc = codes[order]
+    sd = doc_idx[order]
+    change = np.flatnonzero((sc[1:] != sc[:-1]) | (sd[1:] != sd[:-1])) + 1
+    pstarts = np.concatenate(([0], change))
+    pends = np.concatenate((change, [len(order)]))
+    terms = np.asarray(uniq, dtype=object)[sc[pstarts]]
+    return terms, sd[pstarts], pstarts, pends, order
+
+
+def _doc_index(lens: np.ndarray) -> np.ndarray:
+    """Doc ordinal of every token of a flat token stream."""
+    return np.repeat(np.arange(len(lens), dtype=np.int64), lens)
+
+
+def _pair_positions(lens: np.ndarray, order, pstarts, pends) -> list:
+    """Per-pair 0-based token positions within each doc (field-relative
+    when ``lens`` are one field's lengths), reordered with the fold's
+    stable sort → ascending per pair."""
+    offs = np.repeat(np.cumsum(lens) - lens, lens)
+    pos = (np.arange(int(lens.sum()), dtype=np.int64) - offs).astype(np.int32)[order]
+    return [pos[a:b] for a, b in zip(pstarts, pends)]
+
+
+def _spimi_batch(
+    pdf: pd.DataFrame, analyzer: str, positions: bool, prefix: tuple
+) -> pd.DataFrame:
+    """One Arrow batch of :func:`spimi_term_freqs`: sentinel rows, then
+    the folded (doc, term) pairs, then any ``prefix=`` marker rows."""
+    # flat token stream + per-doc lengths: skips the per-doc list
+    # objects AND the re-flattening concat (each measured as
+    # expensive as tokenization itself on code batches)
+    flat, lens = tokenize_flat(
+        pdf["content"], analyzer, pdf["lang"] if "lang" in pdf else None
+    )
+    frames = []
+    sent = pd.DataFrame(
+        {
+            "term": np.full(len(pdf), "", dtype=object),
+            "doc_id": pdf["doc_id"].to_numpy(),
+            "tf": np.zeros(len(pdf), dtype=np.int32),
+            "dl": lens.astype("int32"),
+        }
+    )
+    if positions:
+        sent["positions"] = [[] for _ in range(len(pdf))]
+    frames.append(sent)
+    if int(lens.sum()):
+        terms, didx, pstarts, pends, order = _pair_fold(flat, _doc_index(lens))
+        run = pd.DataFrame(
+            {
+                "term": terms,
+                "doc_id": pdf["doc_id"].to_numpy()[didx],
+                "tf": (pends - pstarts).astype("int32"),
+                "dl": lens[didx].astype("int32"),
+            }
+        )
+        if positions:
+            run["positions"] = _pair_positions(lens, order, pstarts, pends)
+        frames.append(run)
+        if prefix:
+            extra = _derive_prefix_rows(run, prefix, positions, mc=False)
+            if extra is not None:
+                frames.append(extra)
+    return pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+
+
 def spimi_term_freqs(
     corpus: DataFrame,
     analyzer: str = "simple",
@@ -398,8 +484,9 @@ def spimi_term_freqs(
 ) -> DataFrame:
     """SPIMI local runs: (term, doc_id, tf, dl) with NO shuffle — term
     frequency is an intra-document statistic, computed per Arrow batch
-    with a pandas groupby (the in-memory 'single-pass in-memory
-    indexing' run; the global merge is the later groupBy).
+    with the vectorized pair fold (:func:`_pair_fold`; the in-memory
+    'single-pass in-memory indexing' run; the global merge is the later
+    exchange).
 
     EVERY doc emits one sentinel run row ``(term='', tf=0, dl)``: the
     merge derives the doc_lengths table by FILTERING these rows — a
@@ -416,71 +503,57 @@ def spimi_term_freqs(
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if pdf.empty:
-                continue
-            # flat token stream + per-doc lengths: skips the per-doc list
-            # objects AND the re-flattening concat (each measured as
-            # expensive as tokenization itself on code batches)
-            flat, lens = tokenize_flat(
-                pdf["content"], analyzer, pdf["lang"] if "lang" in pdf else None
-            )
-            frames = []
-            sent = pd.DataFrame(
-                {
-                    "term": np.full(len(pdf), "", dtype=object),
-                    "doc_id": pdf["doc_id"].to_numpy(),
-                    "tf": np.zeros(len(pdf), dtype=np.int32),
-                    "dl": lens.astype("int32"),
-                }
-            )
-            if positions:
-                sent["positions"] = [[] for _ in range(len(pdf))]
-            frames.append(sent)
-            total = int(lens.sum())
-            if total:
-                # vectorized (doc, term)-pair counting: factorize terms
-                # to int codes, STABLE lexsort by (doc, code) — within a
-                # pair the original token order (= ascending positions)
-                # is preserved — then boundary detection gives tf per
-                # pair. Replaces a pandas object-key groupby.
-                doc_idx = np.repeat(np.arange(len(pdf), dtype=np.int64), lens)
-                codes, uniq = pd.factorize(flat, sort=False)
-                order = np.lexsort((codes, doc_idx))
-                sc = codes[order]
-                sd = doc_idx[order]
-                change = (
-                    np.flatnonzero((sc[1:] != sc[:-1]) | (sd[1:] != sd[:-1])) + 1
-                )
-                pstarts = np.concatenate(([0], change))
-                pends = np.concatenate((change, [total]))
-                uniq_arr = np.asarray(uniq, dtype=object)
-                run = pd.DataFrame(
-                    {
-                        "term": uniq_arr[sc[pstarts]],
-                        "doc_id": pdf["doc_id"].to_numpy()[sd[pstarts]],
-                        "tf": (pends - pstarts).astype("int32"),
-                        "dl": lens[sd[pstarts]].astype("int32"),
-                    }
-                )
-                if positions:
-                    # 0-based token position within each doc, reordered
-                    # with the same stable sort → ascending per pair
-                    offs = np.repeat(np.cumsum(lens) - lens, lens)
-                    pos = (
-                        np.arange(total, dtype=np.int64) - offs
-                    ).astype(np.int32)[order]
-                    run["positions"] = [
-                        pos[a:b] for a, b in zip(pstarts, pends)
-                    ]
-                frames.append(run)
-                if prefix:
-                    extra = _derive_prefix_rows(run, prefix, positions, mc=False)
-                    if extra is not None:
-                        frames.append(extra)
-            yield pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+            if not pdf.empty:
+                yield _spimi_batch(pdf, analyzer, positions, prefix)
 
     schema = TERM_FREQ_POS_SCHEMA if positions else TERM_FREQ_SCHEMA
     return narrow.mapInPandas(gen, schema)
+
+
+def _spimi_batch_mc(
+    pdf: pd.DataFrame,
+    fields: list[str],
+    analyzer: str,
+    positions: bool,
+    collapse: bool,
+    prefix: tuple,
+) -> pd.DataFrame:
+    """One Arrow batch of :func:`spimi_term_freqs_mc`."""
+    langs = pdf["lang"] if "lang" in pdf else None
+    doc_ids = pdf["doc_id"].to_numpy()
+    toks = [tokenize_flat(pdf[f], analyzer, langs) for f in fields]
+    dls = np.sum([lens for _, lens in toks], axis=0).astype("int32")  # row totals
+    sent = {"term": np.full(len(pdf), "", dtype=object), "doc_id": doc_ids}
+    if not collapse:
+        sent["col"] = np.zeros(len(pdf), dtype=np.int32)
+    sent |= {"tf": np.zeros(len(pdf), dtype=np.int32), "dl": dls}
+    frames = [pd.DataFrame(sent)]
+    if positions:
+        frames[0]["positions"] = [[] for _ in range(len(pdf))]
+    streams = [(flat, lens, _doc_index(lens)) for flat, lens in toks]
+    if collapse:
+        # detail=none: a doc's tokens over all fields fold as ONE stream
+        streams = [tuple(np.concatenate(x) for x in zip(*streams))]
+    for ci, (flat, lens, didx_tok) in enumerate(streams):
+        if not len(flat):
+            continue
+        terms, didx, pstarts, pends, order = _pair_fold(flat, didx_tok)
+        run = {"term": terms, "doc_id": doc_ids[didx]}
+        if not collapse:
+            run["col"] = np.full(len(terms), ci, dtype=np.int32)
+        run |= {"tf": (pends - pstarts).astype("int32"), "dl": dls[didx]}
+        if positions:
+            run["positions"] = _pair_positions(lens, order, pstarts, pends)
+        frames.append(pd.DataFrame(run))
+    out = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+    if prefix:
+        # derive from the stored shape (per-field rows otherwise,
+        # per-doc totals when collapsed); sentinels (len-0 term) never
+        # match a length >= 1
+        extra = _derive_prefix_rows(out, prefix, positions, mc=not collapse)
+        if extra is not None:
+            out = pd.concat([out, extra], ignore_index=True)
+    return out
 
 
 def spimi_term_freqs_mc(
@@ -493,17 +566,18 @@ def spimi_term_freqs_mc(
     prefix: tuple = (),
 ) -> DataFrame:
     """Multi-field SPIMI runs: one (term, doc_id, col, tf, dl) row per
-    (doc, term, FIELD), still with no shuffle. ``dl`` is the doc's TOTAL
-    token count over all indexed fields (FTS5's bm25 document length —
-    the unweighted row total, pinned against SQLite); positions are
-    FIELD-RELATIVE (reset at each field start), so '^' anchors to a
-    field's first token and phrases/NEAR never span fields. One sentinel
-    row per doc (term='', col=0) carries dl for the doc_lengths filter,
-    exactly like the single-field pass.
+    (doc, term, FIELD), still with no shuffle — each field's tokens go
+    through the single-field pass's pair fold (:func:`_pair_fold`).
+    ``dl`` is the doc's TOTAL token count over all indexed fields (FTS5's
+    bm25 document length — the unweighted row total, pinned against
+    SQLite); positions are FIELD-RELATIVE (reset at each field start),
+    so '^' anchors to a field's first token and phrases/NEAR never span
+    fields. One sentinel row per doc (term='', col=0) carries dl for the
+    doc_lengths filter, exactly like the single-field pass.
 
-    ``collapse=True`` (the ``detail=none`` storage level) folds the
-    per-field rows to (term, doc_id, tf_total, dl) INSIDE the Arrow
-    batch — an intra-document statistic, so still zero shuffle — and
+    ``collapse=True`` (the ``detail=none`` storage level) folds every
+    field's tokens of a doc together INSIDE the Arrow batch — per-doc
+    totals, an intra-document statistic, so still zero shuffle — and
     returns the exact single-field SPIMI shape: every downstream stage
     (run-shuffle fold, merge, deltas, compaction) then runs the plain
     single-field machinery unchanged."""
@@ -520,80 +594,8 @@ def spimi_term_freqs_mc(
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if pdf.empty:
-                continue
-            langs = pdf["lang"] if "lang" in pdf else None
-            toks_f = [tokenize_series(pdf[f], analyzer, langs) for f in fields]
-            lens_f = [t.map(len).to_numpy() for t in toks_f]
-            dls = np.sum(lens_f, axis=0).astype("int32")  # row totals
-            frames = [
-                pd.DataFrame(
-                    {
-                        "term": np.full(len(pdf), "", dtype=object),
-                        "doc_id": pdf["doc_id"].to_numpy(),
-                        "col": np.zeros(len(pdf), dtype=np.int32),
-                        "tf": np.zeros(len(pdf), dtype=np.int32),
-                        "dl": dls,
-                    }
-                )
-            ]
-            if positions:
-                frames[0]["positions"] = [[] for _ in range(len(pdf))]
-            for ci, (toks, lens) in enumerate(zip(toks_f, lens_f)):
-                if not lens.sum():
-                    continue
-                exploded = pd.DataFrame(
-                    {
-                        "term": np.concatenate(
-                            [np.asarray(t, dtype=object) for t in toks]
-                        ),
-                        "doc_id": np.repeat(pdf["doc_id"].to_numpy(), lens),
-                        "dl": np.repeat(dls, lens),
-                    }
-                )
-                if positions:
-                    offs = np.repeat(np.cumsum(lens) - lens, lens)
-                    exploded["pos"] = (
-                        np.arange(int(lens.sum()), dtype=np.int64) - offs
-                    ).astype(np.int32)
-                aggs = {"tf": ("dl", "size"), "dl": ("dl", "first")}
-                if positions:
-                    aggs["positions"] = ("pos", list)
-                run = (
-                    exploded.groupby(["term", "doc_id"], sort=False)
-                    .agg(**aggs)
-                    .reset_index()
-                )
-                run["tf"] = run["tf"].astype("int32")
-                run["dl"] = run["dl"].astype("int32")
-                run.insert(2, "col", np.full(len(run), ci, dtype=np.int32))
-                keep = ["term", "doc_id", "col", "tf", "dl"] + (
-                    ["positions"] if positions else []
-                )
-                frames.append(run[keep])
-            out = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-            if collapse:
-                # fold (doc, term, FIELD) rows to per-doc totals; the
-                # sentinel rows (term='') are one-per-doc already and
-                # fold to themselves (sum of their zero tfs)
-                out = (
-                    out.groupby(["term", "doc_id"], sort=False)
-                    .agg(tf=("tf", "sum"), dl=("dl", "first"))
-                    .reset_index()
-                )
-                out["tf"] = out["tf"].astype("int32")
-                out["dl"] = out["dl"].astype("int32")
-            if prefix:
-                # derive AFTER the detail=none collapse so the marker
-                # rows take the stored shape (per-field rows otherwise,
-                # per-doc totals when collapsed); sentinels (len-0 term)
-                # never match a length >= 1
-                extra = _derive_prefix_rows(
-                    out, prefix, positions, mc=not collapse
-                )
-                if extra is not None:
-                    out = pd.concat([out, extra], ignore_index=True)
-            yield out
+            if not pdf.empty:
+                yield _spimi_batch_mc(pdf, fields, analyzer, positions, collapse, prefix)
 
     if collapse:
         return narrow.mapInPandas(gen, TERM_FREQ_SCHEMA)
@@ -647,21 +649,50 @@ def _group_byte_slices(
     return [bytes(mv[int(x):int(y)]) for x, y in zip(a, b)]
 
 
+class _Grid(NamedTuple):
+    """The whole-frame pieces of :func:`_encode_doc_groups` that the
+    per-field layout (:func:`_encode_groups_frame_mc`) extends."""
+
+    gidx: np.ndarray  # group of each row
+    bstart_rows: np.ndarray  # first row of each block
+    bg: np.ndarray  # group of each block
+    nb_per_g: np.ndarray  # blocks per group
+    idfs: np.ndarray  # idf per group
+    K: np.ndarray  # BM25 length normalisation per row
+
+
+def _concat_positions(poscol) -> np.ndarray:
+    return (
+        np.concatenate([np.asarray(p, dtype=np.int64) for p in poscol])
+        if len(poscol)
+        else np.empty(0, dtype=np.int64)
+    )
+
+
 def _encode_groups_frame(meta: IndexMeta, pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
     """Encode the groups delimited by (starts, ends) in a sorted frame
     into one columnar output frame. Input must be sorted by
-    (term, shard, doc_id).
+    (term, shard, doc_id); rows past ``ends[-1]`` (a group the caller
+    carries into its next batch) are ignored.
 
-    VECTORIZED ACROSS GROUPS: every stream (gap'd doc_ids, tfs, dls) is
-    varint-encoded in ONE whole-frame kernel call and sliced per group
-    by prefix byte offsets; block maxima come from one
+    VECTORIZED ACROSS GROUPS: every stream (gap'd doc_ids, tfs, dls,
+    positions) is varint-encoded in ONE whole-frame kernel call and
+    sliced per group by prefix byte offsets; block maxima come from one
     ``np.maximum.reduceat``. The per-group-loop kernel this replaces
     (:func:`_encode_groups_frame_ref`, kept as the test oracle) paid
     ~300 µs of small-numpy-call overhead PER GROUP — cost proportional
     to vocabulary size, which is exactly what explodes on a long-tail
     corpus at scale (measured: 73% of build CPU at a 240k-term
     vocabulary). Output is byte-for-byte identical
-    (tests/test_index.py::test_encode_kernel_matches_reference)."""
+    (tests/test_index.py::test_encode_kernel_matches_reference). The
+    per-field layout runs this same kernel over its per-doc rows
+    (:func:`_encode_groups_frame_mc`)."""
+    return pd.DataFrame(_encode_doc_groups(meta, pdf, starts, ends)[0])
+
+
+def _encode_doc_groups(meta: IndexMeta, pdf: pd.DataFrame, starts, ends) -> tuple[dict, _Grid]:
+    """:func:`_encode_groups_frame`'s kernel: the output columns, plus
+    the block grid, idfs and length norms it computed on the way."""
     from sparkgrep.operators.score import idf as idf_fn
 
     k1, b, avgdl, block = meta.k1, meta.b, meta.avgdl, meta.block_size
@@ -670,29 +701,20 @@ def _encode_groups_frame(meta: IndexMeta, pdf: pd.DataFrame, starts, ends) -> pd
     buckets = pdf["bucket"].to_numpy()
     dfs_in = pdf["df"].to_numpy(dtype=np.float64, na_value=np.nan)
     cfs_in = pdf["cf"].to_numpy(dtype=np.float64, na_value=np.nan)
-    ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-    tfs = pdf["tf"].to_numpy(dtype=np.int64)
-    dls = pdf["dl"].to_numpy(dtype=np.int64)
-    tf_norm = (tfs * (k1 + 1.0)) / (tfs + (k1 * ((1.0 - b) + ((b * dls) / avgdl))))
-
-    has_pos = "positions" in pdf.columns
-    poscol = pdf["positions"].to_numpy() if has_pos else None
 
     starts_a = np.asarray(starts, dtype=np.int64)
     ends_a = np.asarray(ends, dtype=np.int64)
     glen = ends_a - starts_a
     n = len(starts_a)
+    # the caller may carry the frame's final (possibly incomplete) group
+    # into the next batch — whole-frame kernels below must not see those
+    # tail rows
     total = int(ends_a[-1]) if n else 0
-    if total < len(pdf):
-        # the caller carried the frame's final (possibly incomplete)
-        # group into the next batch — whole-frame kernels below must not
-        # see those tail rows
-        ids = ids[:total]
-        tfs = tfs[:total]
-        dls = dls[:total]
-        tf_norm = tf_norm[:total]
-        if has_pos:
-            poscol = poscol[:total]
+    ids = pdf["doc_id"].to_numpy(dtype=np.int64)[:total]
+    tfs = pdf["tf"].to_numpy(dtype=np.int64)[:total]
+    dls = pdf["dl"].to_numpy(dtype=np.int64)[:total]
+    K = k1 * ((1.0 - b) + ((b * dls) / avgdl))
+    tf_norm = (tfs * (k1 + 1.0)) / (tfs + K)
     gidx = np.repeat(np.arange(n, dtype=np.int64), glen)
     pos_in_g = np.arange(total, dtype=np.int64) - starts_a[gidx]
 
@@ -759,33 +781,16 @@ def _encode_groups_frame(meta: IndexMeta, pdf: pd.DataFrame, starts, ends) -> pd
         "offs_tfs": _block_offset_lists(cum_tfs, starts_a, ends_a, bstart_rows, bg, nb_per_g),
         "offs_dls": _block_offset_lists(cum_dls, starts_a, ends_a, bstart_rows, bg, nb_per_g),
     }
-    if has_pos:
+    if "positions" in pdf.columns:
         # positions: per-doc (= per-row) delta streams are independent,
-        # so one whole-frame delta_encode_segments == the concatenation
-        # of per-group encodes; slice per group at value boundaries
-        flat = (
-            np.concatenate([np.asarray(p, dtype=np.int64) for p in poscol])
-            if total
-            else np.empty(0, dtype=np.int64)
-        )
-        if flat.size:
-            dpos = np.empty_like(flat)
-            dpos[0] = flat[0]
-            np.subtract(flat[1:], flat[:-1], out=dpos[1:])
-            seg_starts = np.cumsum(tfs)[:-1]
-            seg_starts = seg_starts[seg_starts < flat.size]
-            dpos[seg_starts] = flat[seg_starts]  # absolute at each row head
-        else:
-            dpos = flat
-        poss_stream = varint_encode(dpos.astype(np.uint64))
-        plen = varint_byte_lengths(dpos.astype(np.uint64)) if flat.size else np.empty(0, dtype=np.int64)
-        # byte offset of each ROW's position segment = cum bytes of all
-        # positions before it (row r holds tfs[r] position values)
-        cum_vals = np.concatenate(([0], ctf))  # value index per row start
-        cum_pbytes = np.concatenate(([0], np.cumsum(plen)))
-        row_byte = cum_pbytes[cum_vals]  # bytes before row r's segment
-        out["poss"] = _group_byte_slices(poss_stream, row_byte, starts_a, ends_a)
-    return pd.DataFrame(out)
+        # so one whole-frame encode == the concatenation of per-group
+        # encodes; slice per group at the byte offset of each row's
+        # segment (row r holds tfs[r] position values)
+        u_pos = segment_deltas(_concat_positions(pdf["positions"].to_numpy()[:total]), tfs)
+        cum_pbytes = np.concatenate(([0], np.cumsum(varint_byte_lengths(u_pos))))
+        row_byte = cum_pbytes[np.concatenate(([0], ctf))]
+        out["poss"] = _group_byte_slices(varint_encode(u_pos), row_byte, starts_a, ends_a)
+    return out, _Grid(gidx, bstart_rows, bg, nb_per_g, idfs, K)
 
 
 def _encode_groups_frame_ref(meta: IndexMeta, pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
@@ -884,15 +889,100 @@ def _encode_groups_frame_ref(meta: IndexMeta, pdf: pd.DataFrame, starts, ends) -
 def _encode_groups_frame_mc(
     meta: IndexMeta, pdf: pd.DataFrame, starts, ends
 ) -> pd.DataFrame:
-    """Multi-field sibling of :func:`_encode_groups_frame`: input rows
-    are per (doc, FIELD) — sorted by (term, shard, doc_id, col) — and
-    each output row collapses them to per-doc streams: the total-tf
-    stream (identical layout to a single-field index, so the default
-    full-colset scoring path is unchanged) plus one per-field tf stream
-    and, with positions, one field-relative position stream per field.
-    df counts UNIQUE docs (a doc's several field rows are one posting);
-    block_max bounds the total-tf (weight-1 full-colset) contribution —
-    weighted/filtered queries route to the exact path."""
+    """The per-field layout's extension of :func:`_encode_groups_frame`:
+    input rows are per (doc, FIELD) — sorted by (term, shard, doc_id,
+    col) — and each output row collapses them to per-doc streams: the
+    total-tf stream (identical layout to a single-field index, so the
+    default full-colset scoring path is unchanged) plus one per-field tf
+    stream and, with positions, one field-relative position stream per
+    field. df counts UNIQUE docs (a doc's several field rows are one
+    posting); block_max bounds the total-tf (weight-1 full-colset)
+    contribution.
+
+    WHOLE-FRAME, like its base: one boundary mask collapses the rows to
+    per-doc rows (a doc change and every group start are both
+    boundaries — one doc can end group g and start group g+1), the
+    single-field kernel encodes ids, total tf, dls, block_max, block_min
+    and the three offset lists, and each per-field stream, offset list
+    or fub/fmaxtf maximum is one more whole-frame varint encode or
+    ``np.maximum.reduceat``, sliced per group. Byte-for-byte equal to
+    the per-group loop it replaces (:func:`_encode_groups_frame_mc_ref`,
+    kept as the test oracle)."""
+    nf, k1 = len(meta.fields), meta.k1
+    starts_a = np.asarray(starts, dtype=np.int64)
+    ends_a = np.asarray(ends, dtype=np.int64)
+    total = int(ends_a[-1]) if len(ends_a) else 0
+    ids = pdf["doc_id"].to_numpy(dtype=np.int64)[:total]
+    fcols = pdf["col"].to_numpy(dtype=np.int64)[:total]
+    tfs = pdf["tf"].to_numpy(dtype=np.int64)[:total]
+    is_doc = np.ones(total, dtype=bool)
+    np.not_equal(ids[1:], ids[:-1], out=is_doc[1:])
+    is_doc[starts_a] = True
+    drow = np.flatnonzero(is_doc)  # first row of each (group, doc)
+    dix = np.cumsum(is_doc) - 1  # per-doc ordinal of each row
+    tfc = np.zeros((len(drow), nf), dtype=np.int64)
+    tfc[dix, fcols] = tfs
+    dstart = dix[starts_a]
+    dend = dix[ends_a - 1] + 1
+    docs = pd.DataFrame(
+        {
+            "term": pdf["term"].to_numpy()[drow],
+            "shard": pdf["shard"].to_numpy()[drow],
+            "bucket": pdf["bucket"].to_numpy()[drow],
+            "df": pdf["df"].to_numpy(dtype=np.float64, na_value=np.nan)[drow],
+            "cf": pdf["cf"].to_numpy(dtype=np.float64, na_value=np.nan)[drow],
+            "doc_id": ids[drow],
+            "tf": tfc.sum(axis=1),
+            "dl": pdf["dl"].to_numpy(dtype=np.int64)[drow],
+        }
+    )
+    out, g = _encode_doc_groups(meta, docs, dstart, dend)
+
+    def per_group(per_field: list[list]) -> list[list]:
+        return [list(x) for x in zip(*per_field)]
+
+    tfs_cols, offs_cols = [], []
+    for c in range(nf):
+        u = tfc[:, c].astype(np.uint64)
+        cum = np.concatenate(([0], np.cumsum(varint_byte_lengths(u))))
+        tfs_cols.append(_group_byte_slices(varint_encode(u), cum, dstart, dend))
+        offs_cols.append(
+            _block_offset_lists(cum, dstart, dend, g.bstart_rows, g.bg, g.nb_per_g)
+        )
+    out["tfs_cols"] = per_group(tfs_cols)
+    out["offs_tfs_cols"] = per_group(offs_cols)
+    # weighted-MaxScore metadata: per-field saturated max contribution
+    # (exact float64 — no rounding needed, it's row metadata) and max
+    # per-field tf; tfcomp saturation is monotone in tf, so zero-tf
+    # entries contribute 0 and never raise the max
+    fc = g.idfs[g.gidx][:, None] * (tfc * (k1 + 1.0)) / (tfc + g.K[:, None])
+    out["fub"] = list(np.maximum.reduceat(fc, dstart, axis=0))
+    out["fmaxtf"] = list(np.maximum.reduceat(tfc, dstart, axis=0))
+    if "positions" in pdf.columns:
+        # field-relative positions: each (doc, field) row's delta segment
+        # is independent, so field c's stream is the whole-frame deltas
+        # restricted to field-c rows, sliced per group at row byte offsets
+        u_pos = segment_deltas(_concat_positions(pdf["positions"].to_numpy()[:total]), tfs)
+        cum_v = np.concatenate(([0], np.cumsum(varint_byte_lengths(u_pos))))
+        row_bytes = np.diff(cum_v[np.concatenate(([0], np.cumsum(tfs)))])
+        val_col = np.repeat(fcols, tfs)
+        streams = []
+        for c in range(nf):
+            cum_r = np.concatenate(([0], np.cumsum(np.where(fcols == c, row_bytes, 0))))
+            streams.append(
+                _group_byte_slices(varint_encode(u_pos[val_col == c]), cum_r, starts_a, ends_a)
+            )
+        out["poss_cols"] = per_group(streams)
+    return pd.DataFrame(out)
+
+
+def _encode_groups_frame_mc_ref(
+    meta: IndexMeta, pdf: pd.DataFrame, starts, ends
+) -> pd.DataFrame:
+    """REFERENCE kernel for the per-field layout (per-group loop over
+    the same primitives). Kept as the test oracle for
+    :func:`_encode_groups_frame_mc` — byte-for-byte equality is asserted
+    on randomized frames; not used in the build path."""
     from sparkgrep.operators.score import idf as idf_fn
 
     n_fields = len(meta.fields)
@@ -1487,6 +1577,33 @@ def _assign_shards_gen(hot: dict, postings_per_shard: int):
     return gen
 
 
+def _write_doc_lens(doc_lens: DataFrame, out_dir: str, mode: str) -> tuple[int, int]:
+    """Write the doc_lengths table and return ``(n_docs, total_tokens)``.
+
+    The two counts ride the write as ``DataFrame.observe`` metrics: the
+    write is a result stage, so each partition's metrics are counted
+    once, and no read-back aggregate runs (2 jobs and a cold collect
+    fewer). Any mode but ``overwrite`` reads back instead: an append
+    must count what the directory already held, and ``ignore`` may skip
+    the write — and its metrics — altogether."""
+    path = f"{out_dir}/doc_lens"
+    if mode == "overwrite":
+        obs = Observation()
+        doc_lens.observe(
+            obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tot")
+        ).write.mode(mode).parquet(path)
+        row = obs.get
+    else:
+        doc_lens.write.mode(mode).parquet(path)
+        row = (
+            # explicit schema: an empty corpus writes a schema-less dir
+            doc_lens.sparkSession.read.schema("doc_id long, dl int").parquet(path)
+            .agg(F.count("*").alias("n"), F.sum("dl").alias("tot"))
+            .collect()[0]
+        )
+    return int(row["n"] or 0), int(row["tot"] or 0)
+
+
 def _build_index_fused(
     corpus: DataFrame,
     out_dir: str,
@@ -1524,23 +1641,18 @@ def _build_index_fused(
         .persist()
     )
     try:
-        runs0.filter(F.col("term") == "").mapInPandas(
-            _decode_doc_lens, "doc_id long, dl int"
-        ).write.mode(mode).parquet(f"{out_dir}/doc_lens")
-        row = (
-            spark.read.schema("doc_id long, dl int")
-            .parquet(f"{out_dir}/doc_lens")
-            .agg(
-                F.count("*").alias("n"),
-                F.avg("dl").alias("avgdl"),
-                F.sum("dl").alias("tot"),
-            )
-            .collect()[0]
+        n_docs, total_tokens = _write_doc_lens(
+            runs0.filter(F.col("term") == "").mapInPandas(
+                _decode_doc_lens, "doc_id long, dl int"
+            ),
+            out_dir,
+            mode,
         )
         meta = IndexMeta(
-            n_docs=int(row["n"]),
-            avgdl=float(row["avgdl"] or 0.0),
-            total_tokens=int(row["tot"] or 0),
+            n_docs=n_docs,
+            # exact integer quotient: bitwise what F.avg gives below 2^53
+            avgdl=total_tokens / n_docs if n_docs else 0.0,
+            total_tokens=total_tokens,
             analyzer=analyzer,
             n_buckets=n_buckets,
             postings_per_shard=postings_per_shard,
@@ -1552,13 +1664,15 @@ def _build_index_fused(
             prefix=tuple(prefix or ()),
         )
         real = runs0.filter(F.col("term") != "")
-        hot_rows = (
-            real.groupBy("term")
-            .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"))
-            .filter(F.col("df") > postings_per_shard)
-            .collect()
-        )
-        hot_map = {r["term"]: (int(r["df"]), int(r["cf"])) for r in hot_rows}
+        hot_map = {}
+        if n_docs > postings_per_shard:  # else no term can be hot (merge_and_write)
+            hot_map = {
+                r["term"]: (int(r["df"]), int(r["cf"]))
+                for r in real.groupBy("term")
+                .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"))
+                .filter(F.col("df") > postings_per_shard)
+                .collect()
+            }
         runs = real.mapInPandas(
             _assign_shards_gen(hot_map, postings_per_shard), RUNS_SCHEMA
         )
@@ -1596,6 +1710,15 @@ def merge_and_write(
     pass or from checkpointed segments): stats, df, sharded salted merge,
     varint encode, partitioned write. Three wide stages total.
 
+    INVARIANT every caller keeps: each doc of ``tf`` carries exactly one
+    sentinel row (term=''). The doc_lens write counts N from them, and
+    since no term's df can exceed N, the hot-term df aggregate runs only
+    when N > ``postings_per_shard``. Callers: :func:`build_index` and the
+    lineage builds (SPIMI runs: one sentinel per input row), the delta
+    append (one SPIMI segment), and the delta merge and compaction
+    (decoded postings plus one sentinel per doc_lens row of the same
+    layers, masked by the same tombstones).
+
     ``fields`` (multi-field runs from :func:`spimi_term_freqs_mc`): the
     tf relation then has one row per (doc, term, FIELD) and df counts
     DISTINCT docs; the encoder collapses field rows into per-doc streams
@@ -1611,21 +1734,16 @@ def merge_and_write(
     # SPIMI runs, so the doc-length table is a narrow FILTER — zero
     # shuffle — rather than a groupBy(doc_id) over the widest relation.
     # Written first (this is also the action that materializes a
-    # persisted tf); global stats then come from the written (tiny)
-    # parquet.
-    doc_lens = tf.filter(F.col("term") == "").select("doc_id", "dl")
-    doc_lens.write.mode(mode).parquet(f"{out_dir}/doc_lens")
-    spark = tf.sparkSession
-    row = (
-        # explicit schema: an empty corpus writes a schema-less dir
-        spark.read.schema("doc_id long, dl int").parquet(f"{out_dir}/doc_lens")
-        .agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl"), F.sum("dl").alias("tot"))
-        .collect()[0]
+    # persisted tf); N and the token total ride that write.
+    n_docs, total_tokens = _write_doc_lens(
+        tf.filter(F.col("term") == "").select("doc_id", "dl"), out_dir, mode
     )
+    spark = tf.sparkSession
     meta = IndexMeta(
-        n_docs=int(row["n"]),
-        avgdl=float(row["avgdl"] or 0.0),
-        total_tokens=int(row["tot"] or 0),
+        n_docs=n_docs,
+        # exact integer quotient: bitwise what F.avg gives below 2^53
+        avgdl=total_tokens / n_docs if n_docs else 0.0,
+        total_tokens=total_tokens,
         analyzer=analyzer,
         n_buckets=n_buckets,
         postings_per_shard=postings_per_shard,
@@ -1651,6 +1769,13 @@ def merge_and_write(
     # the few hot terms, and a BROADCAST left join — the big relation is
     # never shuffled for a join. Net: the build's only full-width
     # exchange is the merge repartition itself.
+    #
+    # A term's df is at most the relation's doc count, and n_docs counts
+    # at least that (one sentinel per doc): while n_docs <=
+    # postings_per_shard no term can be hot, so the aggregate, its
+    # broadcast join and the run path's collect are skipped and every
+    # group counts itself.
+    can_be_hot = n_docs > postings_per_shard
     dfs = real.groupBy("term").agg(
         # multi-field runs carry one row per (doc, term, FIELD): df is
         # DISTINCT docs there (two-phase partial distinct aggregation —
@@ -1678,7 +1803,8 @@ def merge_and_write(
     )
     if use_runs:
         hot_map = {
-            r["term"]: (int(r["df"]), int(r["cf"])) for r in hot.collect()
+            r["term"]: (int(r["df"]), int(r["cf"]))
+            for r in (hot.collect() if can_be_hot else [])
         }
         runs = real.mapInPandas(
             _spimi_run_encoder(hot_map, n_buckets, postings_per_shard),
@@ -1691,7 +1817,14 @@ def merge_and_write(
         )
     else:
         joined = (
-            real.join(F.broadcast(hot), "term", "left")
+            (
+                real.join(F.broadcast(hot), "term", "left")
+                if can_be_hot
+                # the join's output shape, with every df/cf null
+                else real.withColumns(
+                    {"df": F.lit(None).cast("long"), "cf": F.lit(None).cast("long")}
+                )
+            )
             .withColumn(
                 "n_shards",
                 F.greatest(

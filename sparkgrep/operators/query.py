@@ -943,8 +943,17 @@ class InvertedIndex:
         result rows come back as a local frame whose ``collect()`` runs
         no Spark job.
         """
+        return _result_frame(
+            self.spark, self._search_pdf(query_text, k, mode, strict, weights)
+        )
+
+    def _search_pdf(
+        self, query_text: str, k: int, mode: str = "or", strict: bool = False, weights=None
+    ) -> pd.DataFrame:
+        """:meth:`search`'s ranked rows as the driver-side pandas frame
+        (``LocalServer``'s residency-cap delegation takes them as is)."""
         if mode == "expr":
-            return self.search_expr(query_text, k, strict=strict, weights=weights)
+            return self._search_expr_pdf(query_text, k, strict, weights)
         if weights is None and self.meta.rank_weights:
             # FTS5 'rank' configuration: the persisted default rank
             # function applies whenever the query passes no weights
@@ -953,7 +962,7 @@ class InvertedIndex:
         if not terms:
             if strict:
                 raise ValueError("empty query (FTS5 parity: empty MATCH is an error)")
-            return _result_frame(self.spark, ev.empty_result())
+            return ev.empty_result()
         if mode == "and":
             pq = ParsedQuery((Conjunct(tuple(Unit((t,)) for t in terms)),))
             return self._search_parsed(pq, k, weights)
@@ -964,7 +973,7 @@ class InvertedIndex:
             return self._search_parsed(_any_of(terms), k, weights)
         src = self._fetch_driver(terms)
         if src is not None:
-            return _result_frame(self.spark, ev._bow(src, terms, k, self._layered_dfs(terms)))
+            return ev._bow(src, terms, k, self._layered_dfs(terms))
         scored = self._fold_scores(self._contribs(terms), terms)
         return self._top(scored, k)
 
@@ -976,14 +985,14 @@ class InvertedIndex:
             return None
         return {t: df for t, (df, _ub) in self.term_ubs(terms).items()}
 
-    def _top(self, scored: DataFrame, k: int) -> DataFrame:
+    def _top(self, scored: DataFrame, k: int) -> pd.DataFrame:
         """The top ``k`` of a (doc_id, score) relation by score desc,
         doc_id asc, collected and ranked on the driver."""
         rows = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-        return _result_frame(self.spark, ev.ranked(
+        return ev.ranked(
             np.array([r["doc_id"] for r in rows], np.int64),
             np.array([r["score"] for r in rows], np.float64),
-        ))
+        )
 
     def search_expr(
         self, query_text: str, k: int = 10, strict: bool = False, weights=None
@@ -1002,6 +1011,15 @@ class InvertedIndex:
         terms, phrase slots, NEAR members and resolved ``stem*`` terms
         fit the collect budget — one Spark job in all — else the
         DataFrame evaluator."""
+        return _result_frame(
+            self.spark, self._search_expr_pdf(query_text, k, strict, weights)
+        )
+
+    def _search_expr_pdf(
+        self, query_text: str, k: int, strict: bool = False, weights=None
+    ) -> pd.DataFrame:
+        """:meth:`search_expr`'s ranked rows as the driver-side pandas
+        frame."""
         if weights is None and self.meta.rank_weights:
             # FTS5 'rank' configuration option (set_rank): persisted
             # default weights; an explicit ``weights`` overrides (the
@@ -1013,12 +1031,12 @@ class InvertedIndex:
         if not pq.disjuncts:
             if strict:
                 raise ValueError("empty query (FTS5 parity: empty MATCH is an error)")
-            return _result_frame(self.spark, ev.empty_result())
+            return ev.empty_result()
         return self._search_parsed(pq, k, weights)
 
     def _search_parsed(
         self, pq: ParsedQuery, k: int, weights=None
-    ) -> DataFrame:
+    ) -> pd.DataFrame:
         w, nf = self._expr_weights(pq, weights)
         units = pq.units()
         src = self._fetch_driver(
@@ -1026,7 +1044,7 @@ class InvertedIndex:
             sorted({s for u in units for s in stem_terms(u)}),
         )
         if src is not None:
-            return _result_frame(self.spark, ev._search_parsed(src, pq, units, k, w, nf))
+            return ev._search_parsed(src, pq, units, k, w, nf)
         unit_tf, groups, near_uids = self._unit_tf(pq, w, nf)
         unit_tf = unit_tf.persist()
         try:
@@ -1339,7 +1357,7 @@ class InvertedIndex:
 
     def _rank_units(
         self, pq: ParsedQuery, unit_tf: DataFrame, groups, near_uids, k: int
-    ) -> DataFrame:
+    ) -> pd.DataFrame:
         """Shared scoring/ranking tail over the per-unit relation (same
         for single- and multi-field indexes): query-time unit dfs →
         driver idf → gated uid-ordered fold → match filter → top-k."""
@@ -1359,7 +1377,7 @@ class InvertedIndex:
                 if nuid in dfs:
                     dfs[nuid] = dfs[u.uid]
         if not dfs:
-            return _result_frame(self.spark, ev.empty_result())
+            return ev.empty_result()
         idf_rows = [
             (uid, float(idf_fn(meta.n_docs, dfs[uid], meta.idf_variant)))
             for uid in sorted(dfs)
@@ -1422,7 +1440,7 @@ class InvertedIndex:
 
         match = expr_cond(pq.disjuncts)
         if match is None:
-            return _result_frame(self.spark, ev.empty_result())
+            return ev.empty_result()
         # FTS5 scoring gate (pinned against SQLite): a unit
         # contributes to a doc's score only when some disjunct
         # containing it as an INCLUDE matches the doc — a present

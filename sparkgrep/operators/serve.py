@@ -148,7 +148,7 @@ class LocalServer:
             # residency cap still delegate inside it
             return self._search_parsed(_any_of(terms), k, list(meta.rank_weights))
         if self._over_residency_cap(terms):
-            return self.index.search(query_text, k).toPandas()
+            return self.index._search_pdf(query_text, k)
         self._fetch(terms)
         return ev._bow(self, terms, k, self.index._layered_dfs(terms))
 
@@ -182,7 +182,7 @@ class LocalServer:
         terms = sorted({t for u in units for t in plain_terms(u)})
         stems = sorted({s for u in units for s in stem_terms(u)})
         if self._over_residency_cap(terms, stems):
-            return self.index._search_parsed(pq, k, weights).toPandas()
+            return self.index._search_parsed(pq, k, weights)
         # one job for every missing term (NEAR members are units too)
         # and every missing stem
         self._fetch(terms, stems)

@@ -230,6 +230,38 @@ def test_residency_guard_falls_back_distributed(spark, index):
     assert not capped._cache  # nothing oversized went resident
 
 
+def test_residency_cap_delegation_runs_no_conversion_job(spark, index):
+    """A query over ``max_resident_df`` runs exactly the distributed
+    fetch's one job: the delegation takes the driver-side rows, with no
+    Spark job to convert a result frame back to pandas."""
+    from sparkgrep.operators.serve import LocalServer
+
+    capped = LocalServer(index, max_resident_df=0)
+    sc = spark.sparkContext
+    calls = {
+        "search": (
+            lambda: capped.search("hash join table", k=5),
+            lambda: index.search("hash join table", k=5),
+        ),
+        "expr": (
+            lambda: capped.search_expr("hash AND (join OR table) NOT window", k=5),
+            lambda: index.search_expr("hash AND (join OR table) NOT window", k=5),
+        ),
+    }
+    for name, (served, dist) in calls.items():
+        want = dist().toPandas()  # also loads the handle's term_ubs
+        sc.setJobGroup(name, name, interruptOnCancel=False)
+        try:
+            got = served()
+        finally:
+            sc.setJobGroup(None, None)
+        assert len(sc.statusTracker().getJobIdsForGroup(name)) == 1, name
+        assert len(got), name
+        assert got["doc_id"].tolist() == want["doc_id"].tolist(), name
+        assert got["score"].tolist() == want["score"].tolist(), name
+    assert not capped._cache
+
+
 def test_prefix_scan_prunes_buckets(index):
     """A prefix query must resolve through the term dictionary into the
     normal bucket-pruned + term-pushdown scan — NOT a full postings
@@ -504,3 +536,182 @@ def test_run_shuffle_build_identical(spark, tmp_path, monkeypatch):
                 assert bytes(x) == bytes(y), (col, i)
             else:
                 assert x == y, (col, i)
+
+
+def _assert_same_cell(a, b, where):
+    """Bitwise equality of one output cell: bytes, arrays (dtype and raw
+    bytes — floats compare by bit pattern), lists of those, scalars."""
+    if isinstance(b, (bytes, bytearray)):
+        assert bytes(a) == bytes(b), where
+    elif isinstance(b, np.ndarray):
+        a = np.asarray(a)
+        assert (a.dtype, a.shape) == (b.dtype, b.shape), where
+        assert a.tobytes() == b.tobytes(), where
+    elif isinstance(b, list):
+        assert isinstance(a, list) and len(a) == len(b), where
+        for x, y in zip(a, b):
+            _assert_same_cell(x, y, where)
+    else:
+        assert a == b, where
+
+
+def _assert_same_frames(got, want, where=()):
+    assert list(got.columns) == list(want.columns)
+    assert len(got) == len(want)
+    for col in got.columns:
+        assert got[col].dtype == want[col].dtype, (*where, col)
+        for gi in range(len(got)):
+            _assert_same_cell(got[col].iloc[gi], want[col].iloc[gi], (*where, col, gi))
+
+
+def _random_sorted_frame_mc(rng, n_groups: int, nf: int, positions: bool):
+    """A sorted (term, shard, doc_id, col) per-(doc, field) frame shaped
+    like the per-field merge encoder's input: hot groups (pre-joined
+    df/cf) and cold ones (NaN), docs absent from some fields (tf 0
+    there), group sizes crossing block boundaries, and consecutive
+    groups that share a doc id (one doc ends group g and starts g+1)."""
+    import pandas as pd
+
+    cols = {k: [] for k in ("term", "shard", "bucket", "df", "cf", "doc_id", "col", "tf", "dl")}
+    plists, starts, ends = [], [], []
+    last = 0
+    for g in range(n_groups):
+        nd = int(np.clip(rng.zipf(1.5), 1, 300))
+        first = last if g and rng.random() < 0.5 else last + int(rng.integers(1, 50))
+        ids = first + np.concatenate(([0], np.cumsum(rng.integers(1, 5_000, nd - 1))))
+        last = int(ids[-1])
+        hot = rng.random() < 0.3
+        df = float(rng.integers(1, 10**6)) if hot else np.nan
+        cf = float(rng.integers(1, 10**7)) if hot else np.nan
+        head = (f"t{g:05d}", int(rng.integers(0, 4)), int(rng.integers(0, 64)), df, cf)
+        starts.append(len(cols["doc_id"]))
+        for d in ids:
+            present = np.flatnonzero(rng.random(nf) < 0.6)
+            if not present.size:
+                present = np.array([rng.integers(0, nf)])
+            dl = int(rng.integers(1, 200))
+            for c in present:
+                tf = int(rng.integers(1, 6))
+                for k, v in zip(cols, (*head, int(d), int(c), tf, dl)):
+                    cols[k].append(v)
+                if positions:
+                    plists.append(np.sort(rng.choice(1_000, tf, replace=False)).tolist())
+        ends.append(len(cols["doc_id"]))
+    pdf = pd.DataFrame(cols).astype(
+        {"shard": np.int32, "bucket": np.int32, "doc_id": np.int64, "col": np.int32,
+         "tf": np.int32, "dl": np.int32}
+    )
+    if positions:
+        pdf["positions"] = plists
+    return pdf, starts, ends
+
+
+def _mc_meta(nf, positions, block_size, n_docs=500_000):
+    from sparkgrep.operators.index_build import IndexMeta
+
+    return IndexMeta(
+        n_docs=n_docs, avgdl=37.5, total_tokens=10**7, analyzer="code",
+        n_buckets=64, postings_per_shard=1 << 16, block_size=block_size,
+        k1=1.2, b=0.75, idf_variant="lucene", has_positions=positions,
+        fields=tuple(f"f{c}" for c in range(nf)),
+        detail="full" if positions else "column",
+    )
+
+
+@pytest.mark.parametrize("nf", [2, 3])
+@pytest.mark.parametrize("positions", [False, True])
+@pytest.mark.parametrize("block_size", [4, 128])
+def test_encode_kernel_mc_matches_reference(nf, positions, block_size):
+    """The per-field whole-frame kernel is byte-for-byte the per-group
+    reference loop on every column — per-doc streams, per-field tf and
+    position streams, offsets, block_max, fub (bit patterns), fmaxtf —
+    with the final group carried (its rows stay in the frame)."""
+    from sparkgrep.operators.index_build import (
+        _encode_groups_frame_mc,
+        _encode_groups_frame_mc_ref,
+    )
+
+    rng = np.random.default_rng(7 * nf + block_size + positions)
+    meta = _mc_meta(nf, positions, block_size)
+    for trial in range(3):
+        pdf, starts, ends = _random_sorted_frame_mc(rng, 201, nf, positions)
+        starts, ends = starts[:-1], ends[:-1]
+        got = _encode_groups_frame_mc(meta, pdf, starts, ends)
+        want = _encode_groups_frame_mc_ref(meta, pdf, starts, ends)
+        assert len(got) == 200
+        _assert_same_frames(got, want, (trial,))
+
+
+@pytest.mark.parametrize("positions", [False, True])
+def test_encode_kernel_mc_single_group_flush(positions):
+    """The carry flush encodes ONE group spanning the whole frame."""
+    from sparkgrep.operators.index_build import (
+        _encode_groups_frame_mc,
+        _encode_groups_frame_mc_ref,
+    )
+
+    rng = np.random.default_rng(5)
+    meta = _mc_meta(2, positions, 128, n_docs=1000)
+    pdf, _, _ = _random_sorted_frame_mc(rng, 1, 2, positions)
+    got = _encode_groups_frame_mc(meta, pdf, [0], [len(pdf)])
+    want = _encode_groups_frame_mc_ref(meta, pdf, [0], [len(pdf)])
+    _assert_same_frames(got, want)
+
+
+def _counter_spimi_rows(pdf, fields, collapse, prefix, positions):
+    """Scalar oracle of the per-field SPIMI fold: per doc, one
+    collections.Counter per field (or one over all fields when
+    collapsed), plus the prefix-marker entries — as sorted tuples."""
+    from collections import Counter
+
+    from sparkgrep.functions.tokenizer import tokenize_py
+    from sparkgrep.operators.index_build import PREFIX_MARKER
+
+    rows = []
+    for r in pdf.itertuples(index=False):
+        toks = [tokenize_py(getattr(r, f), "simple") for f in fields]
+        dl = sum(map(len, toks))
+        streams = [sum(toks, [])] if collapse else toks
+        key = (lambda c: ()) if collapse else (lambda c: (c,))
+        pos_of = (lambda ps: (tuple(ps),)) if positions else (lambda ps: ())
+        rows.append(("", r.doc_id, *key(0), 0, dl, *pos_of([])))
+        for c, ts in enumerate(streams):
+            entries = {t: [i for i, x in enumerate(ts) if x == t] for t in Counter(ts)}
+            for n in prefix:
+                for t in {t[:n] for t in ts if len(t) >= n}:
+                    entries[PREFIX_MARKER + t] = [
+                        i for i, x in enumerate(ts) if len(x) >= n and x[:n] == t
+                    ]
+            for t, pos in entries.items():
+                rows.append((t, r.doc_id, *key(c), len(pos), dl, *pos_of(pos)))
+    return sorted(rows)
+
+
+@pytest.mark.smoke
+@pytest.mark.parametrize(
+    "collapse, positions, prefix",
+    [(False, True, ()), (False, False, (2,)), (False, True, (1, 3)), (True, False, (2,))],
+)
+def test_spimi_batch_mc_matches_counter(collapse, positions, prefix):
+    """One Arrow batch of the per-field SPIMI pass equals a Counter per
+    (doc, field): sentinels, tf, row-total dl, field-relative positions,
+    null and empty fields, the detail=none collapse and prefix rows."""
+    import pandas as pd
+
+    from sparkgrep.operators.index_build import _spimi_batch_mc
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": np.array([7, 3, 11, 5, 9, 2], dtype=np.int64),
+            "title": ["Alpha beta alpha", None, "", "beta gamma", "!!", "al al al"],
+            "body": ["beta beta delta alpha al", "alpha", None, "", "gamma alphabet", None],
+        }
+    )
+    fields = ["title", "body"]
+    out = _spimi_batch_mc(pdf, fields, "simple", positions, collapse, prefix)
+    keys = ["term", "doc_id"] + ([] if collapse else ["col"]) + ["tf", "dl"]
+    got = sorted(
+        tuple(r[:len(keys)]) + ((tuple(int(p) for p in r[-1]),) if positions else ())
+        for r in out[keys + (["positions"] if positions else [])].itertuples(index=False)
+    )
+    assert got == _counter_spimi_rows(pdf, fields, collapse, prefix, positions)

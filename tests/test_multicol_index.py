@@ -253,3 +253,47 @@ def test_mc_stored_df_counts_distinct_docs(spark, mc_corpus, tmp_path):
     )
     for term, df in want_df.items():
         assert stored[term] == df, term
+
+
+def _decoded_postings(idx) -> dict:
+    """term → sorted (doc_id, per-field tf, per-field positions) over
+    all of the term's shard rows."""
+    from sparkgrep.functions.postings import decode_row
+
+    out: dict = {}
+    for r in idx.postings.collect():
+        d = decode_row(r, idx.meta, fields=True, positions=True)
+        for i, doc in enumerate(d.ids):
+            pos = tuple(
+                tuple(int(p) for p in d.pos[(d.row == i) & (d.field == c)])
+                for c in range(d.tf.shape[1])
+            )
+            out.setdefault(r.term, []).append((int(doc), tuple(map(int, d.tf[i])), pos))
+    return {t: sorted(v) for t, v in out.items()}
+
+
+def test_mc_hot_term_sharding_matches_unsharded(spark, mc_corpus, tmp_path):
+    """Both sides of the build's hot-term choice on the per-field path:
+    a small ``postings_per_shard`` runs the df aggregate and shards the
+    hot terms; the default one (n_docs below it) skips the aggregate.
+    Decoded postings, term_ubs maxima and query answers agree."""
+    kw = dict(analyzer="fts5", idf_variant="fts5", n_buckets=4, fields=FIELDS, detail="full")
+    build_index(mc_corpus, str(tmp_path / "sharded"), postings_per_shard=16, **kw)
+    build_index(mc_corpus, str(tmp_path / "whole"), **kw)
+    sharded = InvertedIndex(spark, str(tmp_path / "sharded"))
+    whole = InvertedIndex(spark, str(tmp_path / "whole"))
+    assert sharded.postings.filter(F.col("shard") > 0).count() > 0  # hot terms sharded
+    assert whole.postings.filter(F.col("shard") > 0).count() == 0
+    assert _decoded_postings(sharded) == _decoded_postings(whole)
+
+    def ubs(idx):
+        return sorted(
+            (r.term, r.df, r.ub, tuple(r.ub_cols), tuple(r.maxtf_cols))
+            for r in spark.read.parquet(f"{idx.index_dir}/term_ubs").collect()
+        )
+
+    assert ubs(sharded) == ubs(whole)
+    for q, w in MC_QS:
+        a = sharded.search_expr(q, k=50, weights=w).toPandas()
+        b = whole.search_expr(q, k=50, weights=w).toPandas()
+        assert len(b) and _same(a, b), q
