@@ -94,11 +94,10 @@ def build_ann_index(
     exploded = bucketed.select(
         "vec_id", "embedding", F.posexplode("bks").alias("tbl", "bucket")
     )
-    (
-        exploded.repartition("tbl", "bucket")
-        .write.partitionBy("tbl", "bucket")
-        .mode("overwrite")
-        .parquet(f"{out_dir}/vectors")
+    fsio.write_parquet(
+        exploded.repartition("tbl", "bucket"),
+        f"{out_dir}/vectors",
+        partition_by=("tbl", "bucket"),
     )
     fsio.write_text(f"{out_dir}/meta.json", json.dumps(asdict(meta), indent=2))
     return meta

@@ -36,7 +36,17 @@ Layout on disk::
 
     <out>/postings/bucket=<b>/*.parquet   # bucket = xxhash64(term) % n_buckets
     <out>/doc_lens/*.parquet
+    <out>/term_ubs/*.parquet              # per-term df + BM25 bound, range-sorted
     <out>/stats.json                      # N, avgdl, analyzer, codec params
+
+Every table is written by the one writer, ``fsio.write_parquet``: zstd
+pages at parquet-mr's default level, whatever codec the session sets.
+Each postings file holds its rows in ``(term, shard)`` order
+(:func:`write_postings`), so its row groups cover ascending,
+non-overlapping term ranges and a ``term IN (...)`` lookup can skip
+row groups on their ``term`` min/max statistics. Indexes written
+earlier with snappy pages still read: a codec is per file, and no
+reader depends on the row order.
 
 Everything is deterministic under any parallelism: shard assignment is
 a pure hash, postings are sorted by doc_id before encoding, and doc_ids
@@ -74,6 +84,7 @@ from sparkgrep.functions.varint import (
     varint_encode,
 )
 from sparkgrep.schema import TERM_FREQ_POS_SCHEMA, TERM_FREQ_SCHEMA
+from sparkgrep.sources import fsio
 
 BLOCK_SIZE = 128
 XXHASH_SEED = 42  # F.xxhash64's fixed seed
@@ -1589,12 +1600,16 @@ def _write_doc_lens(doc_lens: DataFrame, out_dir: str, mode: str) -> tuple[int, 
     path = f"{out_dir}/doc_lens"
     if mode == "overwrite":
         obs = Observation()
-        doc_lens.observe(
-            obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tot")
-        ).write.mode(mode).parquet(path)
+        fsio.write_parquet(
+            doc_lens.observe(
+                obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tot")
+            ),
+            path,
+            mode,
+        )
         row = obs.get
     else:
-        doc_lens.write.mode(mode).parquet(path)
+        fsio.write_parquet(doc_lens, path, mode)
         row = (
             # explicit schema: an empty corpus writes a schema-less dir
             doc_lens.sparkSession.read.schema("doc_id long, dl int").parquet(path)
@@ -1852,6 +1867,24 @@ def merge_and_write(
     return _finalize_index_write(spark, postings, meta, out_dir, mode, t0, n_buckets)
 
 
+def write_postings(postings: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Write a postings table: one ``bucket=<b>`` directory per bucket,
+    each task's rows in ``(term, shard)`` order, so every file holds
+    ascending, non-overlapping term ranges per row group — tight
+    ``term`` min/max statistics that a ``term IN (...)`` lookup can
+    prune on. Readers never depend on this order (a term's shard rows
+    merge order-free). The dynamic-partition write sorts each task by
+    ``bucket`` anyway; ``(bucket, term, shard)`` satisfies that
+    ordering, so the finer sort replaces it: no second sort, no
+    exchange."""
+    fsio.write_parquet(
+        postings.sortWithinPartitions("bucket", "term", "shard"),
+        path,
+        mode,
+        partition_by=("bucket",),
+    )
+
+
 def _finalize_index_write(
     spark: SparkSession,
     postings: DataFrame,
@@ -1861,15 +1894,17 @@ def _finalize_index_write(
     t0: float,
     n_buckets: int,
 ) -> IndexMeta:
-    """Shared tail of every build: bucket-partitioned postings write,
-    term_ubs sidecar (always a full overwrite snapshot), stats.json."""
+    """Shared tail of every build: bucket-partitioned postings write
+    (:func:`write_postings`: one file per bucket, rows in (term, shard)
+    order), term_ubs sidecar (always a full overwrite snapshot, its row
+    count taken as ``meta.n_terms`` while it is written), stats.json."""
     out_schema = postings_schema(meta)
     # encoded postings are ~2 bytes/posting — a cheap extra shuffle keyed
     # on bucket turns tasks×buckets tiny files into one file per bucket
     # (faster writes now, fewer files to list/scan at query time)
-    postings.repartition(n_buckets, "bucket").write.partitionBy("bucket").mode(
-        mode
-    ).parquet(f"{out_dir}/postings")
+    write_postings(
+        postings.repartition(n_buckets, "bucket"), f"{out_dir}/postings", mode
+    )
 
     # term_ubs sidecar: one (df, BM25 upper bound) row per term, read
     # back from the written postings with column pruning (term/df/
@@ -1926,19 +1961,20 @@ def _finalize_index_write(
     # could then understate the MaxScore bound → unsound pruning).
     # Range-partitioned + sorted by term so a prefix StartsWith pushdown
     # prunes to the matching files/row-groups (term-dictionary role).
-    ubs.repartitionByRange(8, "term").sortWithinPartitions("term").write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/term_ubs")
-    n_terms = (
-        spark.read.schema(TERM_UBS_SCHEMA).parquet(f"{out_dir}/term_ubs").count()
+    # n_terms rides the write: observed AFTER the range exchange, so the
+    # exchange's sampling job never evaluates (or double-counts) it.
+    obs = Observation()
+    fsio.write_parquet(
+        ubs.repartitionByRange(8, "term")
+        .sortWithinPartitions("term")
+        .observe(obs, F.count(F.lit(1)).alias("n")),
+        f"{out_dir}/term_ubs",
     )
-    meta = replace(meta, n_terms=int(n_terms))
+    meta = replace(meta, n_terms=int(obs.get["n"] or 0))
 
     # metadata through the Hadoop FS API (sources/fsio.py) — same
     # filesystem resolution as the parquet writers above, so hdfs://- or
     # s3a://-style out_dirs work end to end
-    from sparkgrep.sources import fsio
-
     payload = asdict(meta) | {"build_wall_sec": round(time.time() - t0, 3)}
     fsio.write_text(f"{out_dir}/stats.json", json.dumps(payload, indent=2))
     return meta
@@ -2065,8 +2101,6 @@ def spimi_schema_for(meta: IndexMeta):
 
 
 def load_meta(index_dir: str) -> IndexMeta:
-    from sparkgrep.sources import fsio
-
     d = json.loads(fsio.read_text(f"{index_dir}/stats.json"))
     d.pop("build_wall_sec", None)
     # v1 postings (no block-reset gaps / offsets) would decode silently

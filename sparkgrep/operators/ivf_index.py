@@ -152,17 +152,14 @@ def build_ivf_index(
         id_col=id_col,
     )
     assigned = named.withColumn("list", _assign_udf(centroids)(F.col("embedding")))
-    (
-        assigned.repartition("list")
-        .write.partitionBy("list")
-        .mode("overwrite")
-        .parquet(f"{out_dir}/vectors")
+    fsio.write_parquet(
+        assigned.repartition("list"), f"{out_dir}/vectors", partition_by=("list",)
     )
     cent_df = spark.createDataFrame(
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
         "list int, centroid array<double>",
     )
-    cent_df.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/centroids")
+    fsio.write_parquet(cent_df.coalesce(1), f"{out_dir}/centroids")
     fsio.write_text(f"{out_dir}/meta.json", json.dumps(asdict(meta), indent=2))
     return meta
 
@@ -315,11 +312,8 @@ def build_ivf2_index(
         id_col=id_col,
     )
     assigned = named.withColumn("list", _assign_udf(centroids)(F.col("embedding")))
-    (
-        assigned.repartition("list")
-        .write.partitionBy("list")
-        .mode("overwrite")
-        .parquet(f"{out_dir}/vectors")
+    fsio.write_parquet(
+        assigned.repartition("list"), f"{out_dir}/vectors", partition_by=("list",)
     )
     cent_df = spark.createDataFrame(
         [
@@ -328,17 +322,14 @@ def build_ivf2_index(
         ],
         "group int, list int, centroid array<double>",
     )
-    (
-        cent_df.repartition("group")
-        .write.partitionBy("group")
-        .mode("overwrite")
-        .parquet(f"{out_dir}/centroids")
+    fsio.write_parquet(
+        cent_df.repartition("group"), f"{out_dir}/centroids", partition_by=("group",)
     )
     gc_df = spark.createDataFrame(
         [(int(i), [float(x) for x in c]) for i, c in enumerate(group_cents)],
         "group int, centroid array<double>",
     )
-    gc_df.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/group_centroids")
+    fsio.write_parquet(gc_df.coalesce(1), f"{out_dir}/group_centroids")
     fsio.write_text(f"{out_dir}/meta.json", json.dumps(asdict(meta), indent=2))
     return meta
 

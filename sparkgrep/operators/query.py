@@ -40,6 +40,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from sparkgrep.functions import evaluator as ev
 from sparkgrep.functions.querylang import (
@@ -63,11 +71,21 @@ from sparkgrep.operators.score import idf as idf_fn
 # collect (wand.py) shares it.
 _COLLECT_BUDGET = 1 << 18
 
-_RESULT = "rank int, doc_id long, score double"
-_BATCH_RESULT = "query_id string, rank int, doc_id long, score double"
+# parsed once here, not per query: a DDL string costs a JVM parse on
+# every createDataFrame
+_RESULT = StructType(
+    [
+        StructField("rank", IntegerType()),
+        StructField("doc_id", LongType()),
+        StructField("score", DoubleType()),
+    ]
+)
+_BATCH_RESULT = StructType([StructField("query_id", StringType()), *_RESULT.fields])
 
 
-def _result_frame(spark: SparkSession, pdf: pd.DataFrame, schema: str = _RESULT) -> DataFrame:
+def _result_frame(
+    spark: SparkSession, pdf: pd.DataFrame, schema: StructType = _RESULT
+) -> DataFrame:
     """Driver-side result rows as a Spark frame whose ``collect()`` runs
     no job: a typed pandas frame (columns in ``schema`` order) becomes
     an Arrow-backed local relation, with Arrow on as

@@ -307,7 +307,7 @@ def _commit_segment(
     include the caller's tokenize phase. Returns the segment directory."""
     t_seg = t_start if t_start is not None else time.time()
     seg_dir = f"{out_dir}/segments/seg={seg_id}"
-    tf.write.mode("overwrite").parquet(seg_dir)
+    fsio.write_parquet(tf, seg_dir)
     m = _segment_counts(spark.read.parquet(seg_dir))
     if "content_sha256" in sl.columns:
         h_col = F.sha2(F.col("content_sha256"), 256)
@@ -713,12 +713,12 @@ def delete_batch_delta(
     nd, ntok = int(agg["nd"] or 0), int(agg["ntok"] or 0)
 
     tomb_dir = f"{out_dir}/{rel}"
-    tf_disk.filter(F.col("term") == "").select("doc_id").write.mode(
-        "overwrite"
-    ).parquet(f"{tomb_dir}/doc_ids")
+    fsio.write_parquet(
+        tf_disk.filter(F.col("term") == "").select("doc_id"), f"{tomb_dir}/doc_ids"
+    )
     # negated-df sidecar in the standard TERM_UBS layout (term, df, ub,
     # bucket) so every sidecar consumer sums it unchanged
-    (
+    fsio.write_parquet(
         tf_disk.filter(F.col("term") != "")
         .groupBy("term")
         # multi-field runs have one row per (doc, term, FIELD): df is
@@ -738,9 +738,8 @@ def delete_batch_delta(
             "bucket",
             F.pmod(F.xxhash64("term"), F.lit(root.n_buckets)).cast("int"),
         )
-        .select("term", "df", "ub", "bucket")
-        .write.mode("overwrite")
-        .parquet(f"{tomb_dir}/term_ubs")
+        .select("term", "df", "ub", "bucket"),
+        f"{tomb_dir}/term_ubs",
     )
 
     n_docs = root.n_docs - nd

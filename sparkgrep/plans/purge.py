@@ -32,6 +32,12 @@ What is rewritten, and what deliberately is NOT:
 - rows whose posting lists contain no dead id pass through untouched;
   files containing no affected row are never read for rewrite and stay
   byte-identical (hardlink swap).
+- a rewritten file goes through the build's own writers
+  (:func:`~sparkgrep.operators.index_build.write_postings`,
+  :func:`~sparkgrep.sources.fsio.write_parquet`): zstd pages and, for
+  postings, rows in (term, shard) order — the format a fresh build
+  writes, even when the file it replaces is an older snappy one (a
+  codec is per file, so the two read side by side).
 - per-layer ``doc_lens`` files containing dead ids are rewritten the
   same way (a later compaction derives sentinel rows from them — stale
   entries would resurrect deleted docs in the rebuilt stats).
@@ -92,6 +98,7 @@ from sparkgrep.operators.index_build import (
     group_encoder,
     load_meta,
     postings_schema,
+    write_postings,
 )
 from sparkgrep.plans.manifest import (
     _load_meta_healed,
@@ -369,16 +376,16 @@ def _purge_layer_postings(
     out_cols = ["bucket"] + [c.split(" ")[0] for c in fschema.split(", ")]
     stage = f"{ldir}/.purge_stage_postings"
     fsio.delete(stage)
-    (
+    # the build's postings writer: each rewritten file keeps the
+    # (term, shard) row order of the files it replaces
+    write_postings(
         spark.read.schema(fschema)
         .parquet(*files)
         .mapInPandas(
             _rewrite_gen(meta_l, dead_bc, meta.n_buckets, out_cols),
             "bucket int, " + fschema,
-        )
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(stage)
+        ),
+        stage,
     )
     by_bucket: dict[int, list[str]] = {}
     for f in files:
@@ -426,12 +433,11 @@ def _purge_layer_doc_lens(
         return
     stage = f"{ldir}/.purge_stage_doc_lens"
     fsio.delete(stage)
-    (
+    fsio.write_parquet(
         spark.read.schema("doc_id long, dl int")
         .parquet(*files)
-        .join(F.broadcast(ids_df), "doc_id", "left_anti")
-        .write.mode("overwrite")
-        .parquet(stage)
+        .join(F.broadcast(ids_df), "doc_id", "left_anti"),
+        stage,
     )
     dead_names = {f.rpartition("/")[2] for f in files}
     staged = [f"{stage}/{nm}" for nm in fsio.list_dir(stage, ".parquet")]

@@ -1,7 +1,8 @@
-"""Cluster-portable small-file I/O for index metadata.
+"""Cluster-portable I/O for an index directory.
 
-Postings and doc_lens go through Spark writers, which already speak any
-Hadoop filesystem (file://, hdfs://, s3a://, ...). Metadata sidecars
+Every parquet table of an index goes through :func:`write_parquet`, the
+one place its page codec is decided. Spark's writers already speak
+any Hadoop filesystem (file://, hdfs://, s3a://, ...). Metadata sidecars
 (stats.json, the segment-lineage manifest) must match — driver-local
 ``open()`` would break the moment an index directory lives on HDFS/S3,
 which is exactly where a spark-submit build puts it.
@@ -17,7 +18,36 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# parquet-mr's default zstd level, pinned in the write options so that
+# neither the session's codec nor its Hadoop conf decides an index's format
+_ZSTD_LEVEL = "3"
+
+
+def write_parquet(
+    df: DataFrame,
+    path: str,
+    mode: str = "overwrite",
+    partition_by: tuple = (),
+) -> None:
+    """Write ``df`` as an index table: the ONE parquet writer of the
+    engine, so every table (postings, doc_lens, term_ubs, segments,
+    tombstones, vector indexes) has one format.
+
+    Pages are zstd at parquet-mr's default level, whatever codec the
+    caller's session sets (a codec is per file, so tables written
+    earlier with another codec still read beside these). Row order is
+    the caller's: postings arrive sorted by ``(bucket, term, shard)``
+    (``index_build.write_postings``)."""
+    w = (
+        df.write.mode(mode)
+        .option("compression", "zstd")
+        .option("parquet.compression.codec.zstd.level", _ZSTD_LEVEL)
+    )
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(path)
 
 
 def _hadoop(path: str):
